@@ -179,16 +179,9 @@ object Bench {
         }.getOrElse(t)
       else t)
     }
-    // c09's bench lineage is only unpersisted on the NEXT c09 call —
-    // free the final run's cache blocks now that all timing is done.
-    try graft.queries.ClimateQueries.releaseBenchLineage()
-    catch { case _: Throwable => () }
-    // likewise the shared dedup prefix tables (t40/t23/t28's memo slots)
-    try graft.queries.TextQueries.releaseSharedDedup()
-    catch { case _: Throwable => () }
-    // and the shared co-purchase edge table (r16, SharedGraph memo)
-    try graft.queries.SharedGraph.release()
-    catch { case _: Throwable => () }
+    // free every session memo (c09's last bench lineage, the shared
+    // dedup and co-purchase tables) now that all timing is done
+    graft.core.SessionMemo.release()
     def fmt(v: Double): String = if (v < 0) "-1" else f"$v%.3f"
     // Contention guard (r4's driver numbers were ~1.8× the uncontended truth
     // because another build was running): record host CPU count, the

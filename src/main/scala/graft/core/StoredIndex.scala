@@ -1,0 +1,133 @@
+package graft.core
+
+import java.nio.channels.FileChannel
+import java.nio.charset.StandardCharsets.UTF_8
+import java.nio.file.{Files, NoSuchFileException, Path, Paths, StandardCopyOption, StandardOpenOption}
+import java.util.concurrent.ConcurrentHashMap
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions._
+
+/** Build-if-absent stored indexes: tables derived from a corpus, persisted
+  * once and reused across sessions and JVMs while the corpus content is
+  * unchanged (a real deployment writes them next to the corpus and keys
+  * them by the table format's snapshot id).
+  *
+  *  - Location: `java.io.tmpdir/graft_<family>_<pathKey(dir)>[suffix]/<table>`,
+  *    always a LOCAL path, so java.nio (not Hadoop FS) is sound here.
+  *  - Stamp: the build params plus an order-independent content hash of
+  *    the source, `count` and the exact `sum(xxhash64(key, payload))`
+  *    from ONE aggregate (a single corpus scan). A regenerated corpus at
+  *    the same path and cardinality invalidates the index.
+  *  - Marker: `_GRAFT_INDEX`, the stamp line followed by optional
+  *    `name=Long` metadata lines. An index is current iff the first line
+  *    of its marker is the stamp.
+  *  - Publish: a build writes into a hidden staging sibling (its name does
+  *    not start with `graft_`), writes the marker there last, and renames
+  *    the directory into place. Builds of one index are serialized by a
+  *    JVM monitor plus a file lock, so two JVMs sharing a tmpdir (Verify
+  *    and Bench) never swap an index out from under each other. A failed
+  *    or killed build never exposes a half-written index and leaves any
+  *    previously published one untouched.
+  */
+object StoredIndex {
+
+  val Marker = "_GRAFT_INDEX"
+
+  /** Collision-resistant path key for per-corpus index locations: SHA-256
+    * of the corpus dir, truncated to 16 hex chars (64 bits — collisions
+    * astronomically unlikely, and a collision is caught by the content
+    * stamp at the cost of a rebuild, never a wrong answer).
+    */
+  def pathKey(dir: String): String =
+    java.security.MessageDigest.getInstance("SHA-256")
+      .digest(dir.getBytes(UTF_8))
+      .take(8).map(b => f"$b%02x").mkString
+
+  /** The published location of `family`'s index over the corpus at `dir`. */
+  def location(family: String, dir: String, suffix: String = ""): Path =
+    Paths.get(System.getProperty("java.io.tmpdir"),
+      s"graft_${family}_${pathKey(dir)}$suffix")
+
+  /** A published index: its parquet tables and the metadata its build
+    * recorded. */
+  final class Index private[StoredIndex] (s: SparkSession, root: Path,
+                                          val meta: Map[String, Long]) {
+    def apply(table: String): DataFrame = s.read.parquet(root.resolve(table).toString)
+  }
+
+  /** A build in progress: where to write each table, the source row count
+    * the stamp measured, and metadata to record in the marker. */
+  final class Build private[StoredIndex] (root: Path, val rows: Long) {
+    private[StoredIndex] val meta = scala.collection.mutable.LinkedHashMap.empty[String, Long]
+    def path(table: String): String = root.resolve(table).toString
+    def record(name: String, value: Long): Unit = meta(name) = value
+  }
+
+  /** The index `family` over `source` (the corpus at `dir`), built by
+    * `build` unless a current one is already published. `params` names
+    * every build knob that is not derived from the source content. */
+  def apply(family: String, params: String, dir: String, source: DataFrame,
+            key: String, payload: String, suffix: String = "")
+           (build: Build => Unit): Index = {
+    val live = location(family, dir, suffix)
+    // the hash sum is exact (decimal), so no session's overflow mode matters
+    val row = source.agg(count(lit(1)),
+      sum(xxhash64(col(key), col(payload)).cast("decimal(38,0)"))).first()
+    val stamp = s"$params rows=${row.getLong(0)} fp=${row.get(1)} src=$dir"
+    val s = source.sparkSession
+    current(s, live, stamp).getOrElse(exclusive(live) {
+      current(s, live, stamp).getOrElse(publish(s, live, stamp, row.getLong(0), build))
+    })
+  }
+
+  private def current(s: SparkSession, live: Path, stamp: String): Option[Index] = {
+    val lines =
+      try new String(Files.readAllBytes(live.resolve(Marker)), UTF_8).split("\n").toSeq
+      catch { case _: NoSuchFileException => Nil }
+    if (!lines.headOption.contains(stamp)) None
+    else Some(new Index(s, live, lines.tail.map { l =>
+      val Array(k, v) = l.split("=", 2)
+      k -> v.toLong
+    }.toMap))
+  }
+
+  private def publish(s: SparkSession, live: Path, stamp: String, rows: Long,
+                      build: Build => Unit): Index = {
+    val staging = sibling(live, "staging")
+    val b = new Build(staging, rows)
+    try {
+      build(b)
+      Files.createDirectories(staging)
+      Files.write(staging.resolve(Marker),
+        (stamp +: b.meta.map { case (k, v) => s"$k=$v" }.toSeq).mkString("\n").getBytes(UTF_8))
+      val old = sibling(live, "old")
+      if (Files.exists(live)) Files.move(live, old, StandardCopyOption.ATOMIC_MOVE)
+      Files.move(staging, live, StandardCopyOption.ATOMIC_MOVE)
+      delete(old)
+    } catch { case e: Throwable => delete(staging); throw e }
+    new Index(s, live, b.meta.toMap)
+  }
+
+  private def sibling(live: Path, what: String): Path =
+    live.resolveSibling(s".${live.getFileName}.${java.util.UUID.randomUUID}.$what")
+
+  private def delete(p: Path): Unit =
+    if (Files.exists(p)) {
+      val paths = Files.walk(p)
+      try paths.sorted(java.util.Comparator.reverseOrder()).forEach(q => Files.delete(q))
+      finally paths.close()
+    }
+
+  private val monitors = new ConcurrentHashMap[Path, AnyRef]()
+
+  /** Run `body` holding the build lock of the index at `live`: the JVM
+    * monitor orders this JVM's threads (a FileChannel lock is held per
+    * process), the file lock orders JVMs. */
+  private def exclusive[T](live: Path)(body: => T): T =
+    monitors.computeIfAbsent(live, _ => new Object).synchronized {
+      val ch = FileChannel.open(live.resolveSibling(s".${live.getFileName}.lock"),
+        StandardOpenOption.CREATE, StandardOpenOption.WRITE)
+      try { ch.lock(); body }
+      finally ch.close()
+    }
+}

@@ -3,6 +3,7 @@ package graft.ext
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.ArrayType
 
 /** Similarity search over embedding columns (ArrayType(Float)) — the
   * north-star ANN surface: brute-force cosine top-k as the exact baseline,
@@ -476,10 +477,11 @@ object Similarity {
     * cells = max(8, n / 250) holds EXPECTED CELL OCCUPANCY constant as
     * the corpus grows, which keeps the within-cell pair volume
     * Σ_cell C(n_c, 2) ≈ n·250/2 — LINEAR in n. A fixed cell count makes
-    * that volume Θ(n²/cells): the r12 DecadeProbe measured 2.6 G pairs
-    * at sf10 under cells=8 (guard-skipped) vs a near-linear runtime with
-    * this scaling on the same data. One cheap count() pass buys the
-    * knob; the k-means assignment cost itself is linear either way.
+    * that volume Θ(n²/cells): SCALE.md's round-12 ×100-decade table
+    * records 2.6 G pairs at sf10 under cells=8 (guard-skipped) vs a
+    * near-linear runtime with this scaling on the same data. One cheap
+    * count() pass buys the knob; the k-means assignment cost itself is
+    * linear either way.
     */
   def autoCells(n: Long, targetCellRows: Long = 250L): Int =
     math.max(8L, n / targetCellRows).min(Int.MaxValue).toInt
@@ -1066,14 +1068,18 @@ object Similarity {
         (lbl, byDim.map(_._3))
       }
       .sortBy(_._1.toString)
-    val labels = rows.map(_._1.asInstanceOf[Int])
+    // labels keep the label column's own type (Int, Long, String, ...)
+    val labelType = emb.select(label).schema.head.dataType
+    val labels = array(rows.map(r => lit(r._1)): _*).cast(ArrayType(labelType))
     val matrix = rows.map(_._2.toSeq).toSeq
-    emb.filter(vec.isNotNull)
+    // an empty vector has no dims, so (like the exploded form) it has no
+    // distance to any centroid — the kernel would return L nulls instead
+    emb.filter(vec.isNotNull && size(vec) > 0)
       .select(id.as("rid"), label.as("slabel"),
         posexplode(call_function("graft_sqdist_dec",
           vec.cast("array<double>"), typedLit(matrix))))
       .select(col("rid"), col("slabel"),
-        element_at(typedLit(labels), col("pos") + 1).as("clabel"),
+        element_at(labels, col("pos") + 1).as("clabel"),
         col("col").as("d2"))
   }
 

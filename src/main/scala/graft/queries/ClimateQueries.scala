@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import graft.core.SessionMemo
 import graft.pipeline.{Climate, ClimateFixture}
 
 /** The flagship climate pipeline surfaced as named queries over the
@@ -80,10 +81,9 @@ object ClimateQueries {
 
   // One pipeline build per session: the climate queries share a cached
   // fact lineage instead of re-running bronze→gold each (the reference's
-  // recompute waste, SURVEY.md §4, fixed engine-side). Only the LATEST
-  // session is held — unbounded session-keyed memoization would pin every
-  // stopped session's cache blocks for the JVM lifetime.
-  @volatile private var memo: Option[(SparkSession, Climate.Gold)] = None
+  // recompute waste, SURVEY.md §4, fixed engine-side). Replacing the
+  // memo's entry unpersists the previous session's lineage.
+  private val goldMemo = SessionMemo[Climate.Gold](_.lineage.unpersist())
 
   // Bench-only composed-pipeline run (c09): the reference's actual shape
   // is three chained spark-submits producing FOUR gold tables off one
@@ -93,17 +93,16 @@ object ClimateQueries {
   // call builds a FRESH Gold (never the session memo — that would time a
   // no-op) and returns a union of the four tables' one-row counts, so
   // one count() action evaluates every gold leg. The previous bench
-  // lineage is unpersisted before each build to keep repeat runs flat.
-  @volatile private var benchLineage: Option[org.apache.spark.sql.DataFrame] = None
+  // lineage is unpersisted before each build to keep repeat runs flat,
+  // and SessionMemo.release() frees the last one after the board.
+  private val benchLineage = SessionMemo[org.apache.spark.sql.DataFrame](_.unpersist())
 
   def fullPipelineFresh(s: SparkSession): org.apache.spark.sql.DataFrame =
     synchronized {
-      benchLineage.foreach { l =>
-        try l.unpersist() catch { case _: Throwable => () }
-      }
+      benchLineage.clear()
       val (b, st) = fixture()
       val g = Climate.run(s, b, st)
-      benchLineage = Some(g.lineage)
+      benchLineage.put(s, b, g.lineage)
       Seq("climate_kpis" -> g.kpis, "stations_dim" -> g.stationsDim,
         "climate_fact" -> g.fact, "climate_extremes" -> g.extremes)
         .map { case (n, df) =>
@@ -112,31 +111,9 @@ object ClimateQueries {
         .reduce(_ unionByName _)
     }
 
-  /** Free the LAST c09 bench lineage once its timings are done —
-    * [[fullPipelineFresh]] only unpersists the previous lineage on the
-    * NEXT call, so without this hook the final run's cache blocks stay
-    * resident for the remainder of the board sweep (memory pressure on
-    * whatever queries follow c09). Bench calls this after the measure +
-    * outlier-rerun phases. */
-  def releaseBenchLineage(): Unit = synchronized {
-    benchLineage.foreach { l =>
-      try l.unpersist() catch { case _: Throwable => () }
-    }
-    benchLineage = None
-  }
-
-  private def gold(s: SparkSession): Climate.Gold = synchronized {
-    memo match {
-      case Some((sess, g)) if sess eq s => g
-      case prev =>
-        prev.foreach { case (_, g) =>
-          try g.lineage.unpersist() catch { case _: Throwable => () }
-        }
-        val (b, st) = fixture()
-        val g = Climate.run(s, b, st)
-        memo = Some((s, g))
-        g
-    }
+  private def gold(s: SparkSession): Climate.Gold = {
+    val (b, st) = fixture()
+    goldMemo(s, b)(Climate.run(s, b, st))
   }
 
   /** DuckDB-side re-implementation of the Berkeley text → silver parse. */

@@ -24,21 +24,4 @@ object QueryDef {
   /** A query with no SQL-expressible oracle (driver records rows-only). */
   def noOracle(name: String)(fn: (SparkSession, String) => DataFrame): QueryDef =
     QueryDef(name, fn, None)
-
-  /** Collision-resistant path key for per-corpus stored-index locations
-    * (tmpdir/graft_<family>_<pathKey(dir)>): SHA-256 of the corpus dir,
-    * truncated to 16 hex chars (64 bits — collisions astronomically
-    * unlikely, and a collision is caught by the content stamp at the
-    * cost of a rebuild, never a wrong answer). Replaces the r13-era
-    * `Integer.toHexString(dir.hashCode)` (32-bit — two corpora colliding
-    * would ping-pong rebuilds through the content stamp every call).
-    * Migration note: the key-format change stranded any
-    * graft_*_<oldhex> directories built before r14 under
-    * java.io.tmpdir; they are ordinary tmpdir litter (the OS or a
-    * tmpwatch reclaims them) and no code reads the old locations.
-    */
-  def pathKey(dir: String): String =
-    java.security.MessageDigest.getInstance("SHA-256")
-      .digest(dir.getBytes("UTF-8"))
-      .take(8).map(b => f"$b%02x").mkString
 }

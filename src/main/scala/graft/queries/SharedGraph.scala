@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.core.Tables
+import graft.core.{SessionMemo, Tables}
 import graft.ops.Graph
 
 /** The part co-purchase edge table six graph queries build IDENTICALLY
@@ -13,20 +13,17 @@ import graft.ops.Graph
   * shuffled and the dominant task CPU of each query — six times per
   * board.
   *
-  * Single-slot session+dir-keyed memo, exactly the
-  * TextQueries.sharedShingles / ClimateQueries gold-lineage discipline:
-  * replacing an entry drops the old reference (ContextCleaner reclaims
-  * its checkpoint blocks) and Bench frees the slot at sweep end via
-  * [[release]]. Results are IDENTICAL (the build is deterministic), so
-  * Verify grading is untouched; the per-query bench mins become "given
-  * the shared edge table" — the semantic the climate and text-dedup
-  * families already have — and the fresh end-to-end build cost stays
-  * visible as the benchOnly `g01_co_edges_fresh` entry (the c09/t53
-  * pattern).
+  * One [[graft.core.SessionMemo]] slot, like TextQueries.sharedShingles
+  * and the ClimateQueries gold lineage. Results are IDENTICAL (the build
+  * is deterministic), so Verify grading is untouched; the per-query bench
+  * mins become "given the shared edge table" — the semantic the climate
+  * and text-dedup families already have — and the fresh end-to-end build
+  * cost stays visible as the benchOnly `g01_co_edges_fresh` entry (the
+  * c09/t53 pattern).
   */
 object SharedGraph {
 
-  @volatile private var memo: Option[(SparkSession, String, DataFrame)] = None
+  private val memo = SessionMemo[DataFrame]()
 
   /** Fresh (un-memoized) build — the benchOnly fresh entry and the memo
     * both go through here, so the two can never drift. */
@@ -39,16 +36,6 @@ object SharedGraph {
   /** The memoized, eagerly-materialized edge table for (session, dir) —
     * checkpointed once so every consumer (and each query's min-of-two
     * bench runs) scans cached blocks instead of re-running the build. */
-  def coEdges(s: SparkSession, dir: String): DataFrame = synchronized {
-    memo match {
-      case Some((sess, d, df)) if (sess eq s) && d == dir => df
-      case _ =>
-        val df = coEdgesFresh(s, dir).localCheckpoint(true)
-        memo = Some((s, dir, df))
-        df
-    }
-  }
-
-  /** Drop the memo slot (called by Bench after the board sweep). */
-  def release(): Unit = synchronized { memo = None }
+  def coEdges(s: SparkSession, dir: String): DataFrame =
+    memo(s, dir)(coEdgesFresh(s, dir).localCheckpoint(true))
 }

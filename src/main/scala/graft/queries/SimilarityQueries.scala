@@ -1,7 +1,8 @@
 package graft.queries
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.core.Tables
+import graft.core.{StoredIndex, Tables}
 import graft.ext.Similarity
 
 /** Similarity-search surface over `embeddings`. The exact queries are
@@ -37,26 +38,12 @@ object SimilarityQueries {
     * `_staged_ivf_centroids` and the s09 oracle family's derivations
     * apply to it unchanged.
     */
-  private[queries] def storedIvfCentroids(s: org.apache.spark.sql.SparkSession,
-                                          dir: String): org.apache.spark.sql.DataFrame = {
+  private[queries] def storedIvfCentroids(s: SparkSession, dir: String): DataFrame = {
     val emb = Tables.embeddings(s, dir)
-    val idxDir = s"${System.getProperty("java.io.tmpdir")}/graft_ivf_centroids_" +
-      QueryDef.pathKey(dir)
-    val marker = java.nio.file.Paths.get(idxDir, "_GRAFT_INDEX")
-    val stampRow = emb.agg(count(lit(1)),
-      sum(xxhash64(col("vec_id"), col("embedding").cast("string")))).first()
-    val stamp = s"k=8 iters=3 vecs=${stampRow.getLong(0)} " +
-      s"fp=${stampRow.getLong(1)} src=$dir"
-    val existing =
-      if (java.nio.file.Files.exists(marker))
-        new String(java.nio.file.Files.readAllBytes(marker), "UTF-8")
-      else ""
-    if (existing != stamp) {
+    StoredIndex("ivf_centroids", "k=8 iters=3", dir, emb, "vec_id", "embedding") { b =>
       graft.ext.IVF.kmeansCentroids(emb, "vec_id", "embedding", k = 8, iters = 3)
-        .write.mode("overwrite").parquet(s"$idxDir/cents")
-      java.nio.file.Files.write(marker, stamp.getBytes("UTF-8"))
-    }
-    s.read.parquet(s"$idxDir/cents")
+        .write.parquet(b.path("cents"))
+    }("cents")
   }
 
   /** Build-if-absent STORED coarse ASSIGNMENT over the pre-existing
@@ -68,27 +55,14 @@ object SimilarityQueries {
     * invariant s37 grades (the oracle re-derives the FULL corpus
     * assignment from the staged centroids, s09's derivation).
     */
-  private def storedIvfAssign(s: org.apache.spark.sql.SparkSession,
-                              dir: String): org.apache.spark.sql.DataFrame = {
+  private def storedIvfAssign(s: SparkSession, dir: String): DataFrame = {
     val corpus = Tables.embeddings(s, dir).filter(col("vec_id") % 10 =!= 7)
-    val idxDir = s"${System.getProperty("java.io.tmpdir")}/graft_ivf_assign_" +
-      QueryDef.pathKey(dir)
-    val marker = java.nio.file.Paths.get(idxDir, "_GRAFT_INDEX")
-    val stampRow = corpus.agg(count(lit(1)),
-      sum(xxhash64(col("vec_id"), col("embedding").cast("string")))).first()
-    val stamp = s"k=8 iters=3 side=mod10ne7 vecs=${stampRow.getLong(0)} " +
-      s"fp=${stampRow.getLong(1)} src=$dir"
-    val existing =
-      if (java.nio.file.Files.exists(marker))
-        new String(java.nio.file.Files.readAllBytes(marker), "UTF-8")
-      else ""
-    if (existing != stamp) {
+    StoredIndex("ivf_assign", "k=8 iters=3 side=mod10ne7",
+        dir, corpus, "vec_id", "embedding") { b =>
       graft.ext.IVF.assignWithCentroids(corpus, "vec_id", "embedding",
           storedIvfCentroids(s, dir))
-        .write.mode("overwrite").parquet(s"$idxDir/assign")
-      java.nio.file.Files.write(marker, stamp.getBytes("UTF-8"))
-    }
-    s.read.parquet(s"$idxDir/assign")
+        .write.parquet(b.path("assign"))
+    }("assign")
   }
 
   /** Build-if-absent STORED refined quantizer — s42's retrain ACTION
@@ -100,60 +74,29 @@ object SimilarityQueries {
     * to `_staged_ivf_centroids_refined` and s43's oracle re-derives the
     * refreshed assignment from the staged values exactly.
     */
-  private def storedRefinedCentroids(s: org.apache.spark.sql.SparkSession,
-                                     dir: String): org.apache.spark.sql.DataFrame = {
+  private def storedRefinedCentroids(s: SparkSession, dir: String): DataFrame = {
     val emb = Tables.embeddings(s, dir)
-    val idxDir = s"${System.getProperty("java.io.tmpdir")}/graft_ivf_refined_" +
-      QueryDef.pathKey(dir)
-    val marker = java.nio.file.Paths.get(idxDir, "_GRAFT_INDEX")
-    val stampRow = emb.agg(count(lit(1)),
-      sum(xxhash64(col("vec_id"), col("embedding").cast("string")))).first()
-    val stamp = s"k=8 iters=3+1warm vecs=${stampRow.getLong(0)} " +
-      s"fp=${stampRow.getLong(1)} src=$dir"
-    val existing =
-      if (java.nio.file.Files.exists(marker))
-        new String(java.nio.file.Files.readAllBytes(marker), "UTF-8")
-      else ""
-    if (existing != stamp) {
+    StoredIndex("ivf_refined", "k=8 iters=3+1warm", dir, emb, "vec_id", "embedding") { b =>
       graft.ext.IVF.kmeansRefine(emb, "vec_id", "embedding",
           storedIvfCentroids(s, dir), iters = 1)
-        .write.mode("overwrite").parquet(s"$idxDir/cents")
-      java.nio.file.Files.write(marker, stamp.getBytes("UTF-8"))
-    }
-    s.read.parquet(s"$idxDir/cents")
+        .write.parquet(b.path("cents"))
+    }("cents")
   }
 
   /** Build-if-absent STORED PQ index (codebooks + packed codes) — the
     * s15 build factored out so the IVF-PQ stored twin (s36) reuses the
-    * same trained artifacts instead of training a second time. The
-    * stamp carries an order-independent CONTENT hash (summed xxhash64
-    * over id+vector), not just the row count — a regenerated corpus at
-    * the same path and cardinality must invalidate the index. Count and
-    * fingerprint come from ONE agg (a single corpus scan); a real
-    * deployment swaps this for the table format's snapshot id. Returns
-    * (codebooks, codes) as parquet-backed DataFrames.
+    * same trained artifacts instead of training a second time. Returns
+    * (codebooks, codes).
     */
-  private def storedPqIndex(s: org.apache.spark.sql.SparkSession,
-                            dir: String): (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) = {
+  private def storedPqIndex(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
     val emb = Tables.embeddings(s, dir)
-    // deterministic per-sf location; idxDir lives under java.io.tmpdir →
-    // always a LOCAL path, so java.nio (not Hadoop FS) is sound here
-    val idxDir = s"${System.getProperty("java.io.tmpdir")}/graft_pq_index_" +
-      QueryDef.pathKey(dir)
-    val marker = java.nio.file.Paths.get(idxDir, "_GRAFT_INDEX")
-    val stampRow = emb.agg(count(lit(1)),
-      sum(xxhash64(col("vec_id"), col("embedding")))).first()
-    val stamp = s"m=8 k=16 n=${stampRow.getLong(0)} fp=${stampRow.getLong(1)} src=$dir"
-    val built = java.nio.file.Files.exists(marker) &&
-      new String(java.nio.file.Files.readAllBytes(marker), "UTF-8") == stamp
-    if (!built) {
+    val idx = StoredIndex("pq_index", "m=8 k=16", dir, emb, "vec_id", "embedding") { b =>
       val cb = graft.ext.PQ.codebooks(emb, "vec_id", "embedding", m = 8, k = 16)
-      cb.write.mode("overwrite").parquet(s"$idxDir/codebooks")
+      cb.write.parquet(b.path("codebooks"))
       graft.ext.PQ.encode(emb, "vec_id", "embedding", cb, m = 8)
-        .write.mode("overwrite").parquet(s"$idxDir/codes")
-      java.nio.file.Files.write(marker, stamp.getBytes("UTF-8"))
+        .write.parquet(b.path("codes"))
     }
-    (s.read.parquet(s"$idxDir/codebooks"), s.read.parquet(s"$idxDir/codes"))
+    (idx("codebooks"), idx("codes"))
   }
 
   /** Build-if-absent STORED PQ codes over the pre-existing corpus side
@@ -164,27 +107,15 @@ object SimilarityQueries {
     * a full from-codebooks oracle rebuild. Returns (codebooks, stored
     * A-side codes).
     */
-  private def storedPqCodesA(s: org.apache.spark.sql.SparkSession,
-                             dir: String): (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) = {
+  private def storedPqCodesA(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
     val (cb, _) = storedPqIndex(s, dir)
     val corpus = Tables.embeddings(s, dir).filter(col("vec_id") % 10 =!= 7)
-    val idxDir = s"${System.getProperty("java.io.tmpdir")}/graft_pq_codes_a_" +
-      QueryDef.pathKey(dir)
-    val marker = java.nio.file.Paths.get(idxDir, "_GRAFT_INDEX")
-    val stampRow = corpus.agg(count(lit(1)),
-      sum(xxhash64(col("vec_id"), col("embedding").cast("string")))).first()
-    val stamp = s"m=8 k=16 side=mod10ne7 vecs=${stampRow.getLong(0)} " +
-      s"fp=${stampRow.getLong(1)} src=$dir"
-    val existing =
-      if (java.nio.file.Files.exists(marker))
-        new String(java.nio.file.Files.readAllBytes(marker), "UTF-8")
-      else ""
-    if (existing != stamp) {
+    val idx = StoredIndex("pq_codes_a", "m=8 k=16 side=mod10ne7",
+        dir, corpus, "vec_id", "embedding") { b =>
       graft.ext.PQ.encode(corpus, "vec_id", "embedding", cb, m = 8)
-        .write.mode("overwrite").parquet(s"$idxDir/codes")
-      java.nio.file.Files.write(marker, stamp.getBytes("UTF-8"))
+        .write.parquet(b.path("codes"))
     }
-    (cb, s.read.parquet(s"$idxDir/codes"))
+    (cb, idx("codes"))
   }
 
   /** Build-if-absent CELL-PARTITIONED codes table for the stored IVF-PQ
@@ -196,31 +127,18 @@ object SimilarityQueries {
     * s15 queries exists here only because both deployment shapes are
     * graded).
     */
-  private def storedIvfPqIndex(s: org.apache.spark.sql.SparkSession,
-                               dir: String): (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) = {
+  private def storedIvfPqIndex(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
     val (cb, codes) = storedPqIndex(s, dir)
     val emb = Tables.embeddings(s, dir)
-    val idxDir = s"${System.getProperty("java.io.tmpdir")}/graft_ivfpq_index_" +
-      QueryDef.pathKey(dir)
-    val marker = java.nio.file.Paths.get(idxDir, "_GRAFT_INDEX")
-    val stampRow = emb.agg(count(lit(1)),
-      sum(xxhash64(col("vec_id"), col("embedding").cast("string")))).first()
-    val stamp = s"m=8 kc=16 cells=8 iters=3 vecs=${stampRow.getLong(0)} " +
-      s"fp=${stampRow.getLong(1)} src=$dir"
-    val existing =
-      if (java.nio.file.Files.exists(marker))
-        new String(java.nio.file.Files.readAllBytes(marker), "UTF-8")
-      else ""
-    if (existing != stamp) {
+    val idx = StoredIndex("ivfpq_index", "m=8 kc=16 cells=8 iters=3",
+        dir, emb, "vec_id", "embedding") { b =>
       graft.ext.IVF.assignWithCentroids(emb, "vec_id", "embedding",
           storedIvfCentroids(s, dir))
         .withColumnRenamed("cell", "ccell")
         .join(codes, "vid")
-        .write.partitionBy("ccell").mode("overwrite")
-        .parquet(s"$idxDir/codes_by_cell")
-      java.nio.file.Files.write(marker, stamp.getBytes("UTF-8"))
+        .write.partitionBy("ccell").parquet(b.path("codes_by_cell"))
     }
-    (cb, s.read.parquet(s"$idxDir/codes_by_cell"))
+    (cb, idx("codes_by_cell"))
   }
 
   /** Build-if-absent STORED residual IVF-PQ index (s45) — the s36 move
@@ -236,43 +154,27 @@ object SimilarityQueries {
     *    the nprobe cells' directories of BOTH tables.
     * Returns (codebooks, resCodesByCell, ctermByCell).
     */
-  private def storedResIvfPqIndex(s: org.apache.spark.sql.SparkSession,
-                                  dir: String): (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) = {
+  private def storedResIvfPqIndex(s: SparkSession, dir: String): (DataFrame, DataFrame, DataFrame) = {
     val emb = Tables.embeddings(s, dir)
-    val idxDir = s"${System.getProperty("java.io.tmpdir")}/graft_respq_index_" +
-      QueryDef.pathKey(dir)
-    val marker = java.nio.file.Paths.get(idxDir, "_GRAFT_INDEX")
-    val stampRow = emb.agg(count(lit(1)),
-      sum(xxhash64(col("vec_id"), col("embedding").cast("string")))).first()
-    val stamp = s"m=8 kc=16 cells=8 iters=3 residual vecs=${stampRow.getLong(0)} " +
-      s"fp=${stampRow.getLong(1)} src=$dir"
-    val existing =
-      if (java.nio.file.Files.exists(marker))
-        new String(java.nio.file.Files.readAllBytes(marker), "UTF-8")
-      else ""
-    if (existing != stamp) {
+    val idx = StoredIndex("respq_index", "m=8 kc=16 cells=8 iters=3 residual",
+        dir, emb, "vec_id", "embedding") { b =>
       val cents = storedIvfCentroids(s, dir)
       graft.ext.PQ.residualCodebooks(emb, "vec_id", "embedding", cents,
           m = 8, k = 16, iters = 2)
-        .write.mode("overwrite").parquet(s"$idxDir/codebooks")
-      val cb = s.read.parquet(s"$idxDir/codebooks")
+        .write.parquet(b.path("codebooks"))
+      val cb = s.read.parquet(b.path("codebooks"))
       // residual lineage feeds the encode AND the ccell re-join — one
       // materialization (multi-consumer scan rule); v projected away
       val res = graft.ext.PQ.residualTable(emb, "vec_id", "embedding", cents)
         .select(col("vid"), col("ccell"), col("r")).localCheckpoint()
       graft.ext.PQ.encode(res, "vid", "r", cb, m = 8)
         .join(res.select(col("vid"), col("ccell")), "vid")
-        .write.partitionBy("ccell").mode("overwrite")
-        .parquet(s"$idxDir/codes_by_cell")
+        .write.partitionBy("ccell").parquet(b.path("codes_by_cell"))
       graft.ext.PQ.residualCrossTerms(cents, cb, m = 8)
-        .write.partitionBy("ccell").mode("overwrite")
-        .parquet(s"$idxDir/cterm_by_cell")
+        .write.partitionBy("ccell").parquet(b.path("cterm_by_cell"))
       res.unpersist()
-      java.nio.file.Files.write(marker, stamp.getBytes("UTF-8"))
     }
-    (s.read.parquet(s"$idxDir/codebooks"),
-      s.read.parquet(s"$idxDir/codes_by_cell"),
-      s.read.parquet(s"$idxDir/cterm_by_cell"))
+    (idx("codebooks"), idx("codes_by_cell"), idx("cterm_by_cell"))
   }
 
   /** Build-if-absent STORED two-level (residual) quantizer model — the
@@ -285,34 +187,19 @@ object SimilarityQueries {
     * `_staged_ivf2_l1/l2` staging already relies on), so the stored
     * tables are bit-identical to in-query training and every s31/s32/s33
     * oracle grade is unchanged. Level sizes derive from the corpus count
-    * (autoK1K2 — the s12 derived-knob discipline) and ride in the stamp.
+    * (autoK1K2 — the s12 derived-knob discipline), which the stamp holds.
     */
-  private def storedIvf2Model(s: org.apache.spark.sql.SparkSession,
-                              dir: String): (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) = {
+  private def storedIvf2Model(s: SparkSession, dir: String): (DataFrame, DataFrame, DataFrame) = {
     val emb = Tables.embeddings(s, dir)
-    val idxDir = s"${System.getProperty("java.io.tmpdir")}/graft_ivf2_model_" +
-      QueryDef.pathKey(dir)
-    val marker = java.nio.file.Paths.get(idxDir, "_GRAFT_INDEX")
-    val stampRow = emb.agg(count(lit(1)),
-      sum(xxhash64(col("vec_id"), col("embedding").cast("string")))).first()
-    val (k1, k2) = graft.ext.IVF.autoK1K2(stampRow.getLong(0))
-    val stamp = s"k1=$k1 k2=$k2 iters=3 vecs=${stampRow.getLong(0)} " +
-      s"fp=${stampRow.getLong(1)} src=$dir"
-    val existing =
-      if (java.nio.file.Files.exists(marker))
-        new String(java.nio.file.Files.readAllBytes(marker), "UTF-8")
-      else ""
-    if (existing != stamp) {
+    val idx = StoredIndex("ivf2_model", "k1k2=auto iters=3", dir, emb, "vec_id", "embedding") { b =>
+      val (k1, k2) = graft.ext.IVF.autoK1K2(b.rows)
       val (l1, l2, assigned) = graft.ext.IVF.twoLevelModel(
         emb, "vec_id", "embedding", k1, k2, iters = 3)
-      l1.write.mode("overwrite").parquet(s"$idxDir/l1")
-      l2.write.mode("overwrite").parquet(s"$idxDir/l2")
-      assigned.write.partitionBy("cell1").mode("overwrite")
-        .parquet(s"$idxDir/assign_by_cell1")
-      java.nio.file.Files.write(marker, stamp.getBytes("UTF-8"))
+      l1.write.parquet(b.path("l1"))
+      l2.write.parquet(b.path("l2"))
+      assigned.write.partitionBy("cell1").parquet(b.path("assign_by_cell1"))
     }
-    (s.read.parquet(s"$idxDir/l1"), s.read.parquet(s"$idxDir/l2"),
-      s.read.parquet(s"$idxDir/assign_by_cell1"))
+    (idx("l1"), idx("l2"), idx("assign_by_cell1"))
   }
 
   /** Force-build every content-stamped stored index this registry owns —
@@ -322,8 +209,7 @@ object SimilarityQueries {
     * conflation, adjudicated in prose two rounds running). Each builder
     * is a cheap stamp check when already built.
     */
-  def prewarmStoredIndexes(s: org.apache.spark.sql.SparkSession,
-                           dir: String): Unit = {
+  def prewarmStoredIndexes(s: SparkSession, dir: String): Unit = {
     storedIvfCentroids(s, dir)
     storedRefinedCentroids(s, dir)
     storedIvfAssign(s, dir)
@@ -1517,7 +1403,8 @@ object SimilarityQueries {
     //      pairs, same as the ANN family. The cell COUNT derives from a
     //      cheap corpus count (Similarity.autoCells: constant expected
     //      occupancy → linear within-cell pair volume) — the r13 fix for
-    //      the fixed-knob form DecadeProbe measured quadratic at sf10.
+    //      the fixed-knob form measured quadratic at sf10 (SCALE.md,
+    //      round-12 ×100-decade table).
     //      The staged-rerank oracle re-derives cosine+rank from the
     //      emitted pairs, so grading is knob-independent. ----
     //      r15: the blocking FAMILY also derives from the corpus count —

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.core.Tables
+import graft.core.{SessionMemo, StoredIndex, Tables}
 import graft.ext.{Dedup, TextOps}
 
 /** Text-analysis + dedup surface over the `documents` table. The
@@ -27,62 +27,37 @@ object TextQueries {
   // ---- shared prefix-filter tables (VERDICT r11 task #3) -------------
   // t40 (τ=2/5), t23 and t28 (both τ=1/2) all tokenize the same corpus:
   // before r12 each board paid the shingle+hash materialization three
-  // times and the FULL τ=1/2 candidate+verify twice (t23+t28). The memos
-  // below are single-slot and session+dir-keyed, exactly the
-  // ClimateQueries gold-lineage discipline: replacing an entry drops the
-  // old reference (ContextCleaner reclaims its checkpoint blocks), and
-  // Bench frees the slot at sweep end via releaseSharedDedup(). Results
-  // are IDENTICAL (same deterministic tables), so Verify grading is
-  // untouched; the bench board's per-query mins become "given the shared
-  // corpus tables" — the same semantic the climate family already has —
-  // and the fresh end-to-end cost stays visible as the benchOnly
+  // times and the FULL τ=1/2 candidate+verify twice (t23+t28). The
+  // session memos below compute each table once per (session, dir).
+  // Results are IDENTICAL (same deterministic tables), so Verify grading
+  // is untouched; the bench board's per-query mins become "given the
+  // shared corpus tables" — the same semantic the climate family already
+  // has — and the fresh end-to-end cost stays visible as the benchOnly
   // t53_dedup_chain_fresh entry (the c09 pattern).
-  @volatile private var shMemo: Option[(SparkSession, String, DataFrame)] = None
-  @volatile private var halfPairMemo: Option[(SparkSession, String, DataFrame)] = None
+  private val shMemo = SessionMemo[DataFrame]()
+  private val halfPairMemo = SessionMemo[DataFrame]()
 
   /** The (doc, s, h) shingle-hash table for `documents` at `dir`,
     * materialized once per (session, dir). */
   private[graft] def sharedShingles(s: SparkSession, dir: String): DataFrame =
-    synchronized {
-      shMemo match {
-        case Some((sess, d, df)) if (sess eq s) && d == dir => df
-        case _ =>
-          val df = Dedup.shingleHashTable(
-            Tables.documents(s, dir), col("doc_id"), col("text"), n = 3)
-          shMemo = Some((s, dir, df))
-          df
-      }
+    shMemo(s, dir) {
+      Dedup.shingleHashTable(Tables.documents(s, dir), col("doc_id"), col("text"), n = 3)
     }
 
   /** The exact J ≥ 1/2 pair set (t23/t28's edge engine), computed once
     * per (session, dir) from [[sharedShingles]] and materialized — the
     * two consumers differ only downstream of the edges. */
   private[graft] def sharedHalfPairs(s: SparkSession, dir: String): DataFrame =
-    synchronized {
-      halfPairMemo match {
-        case Some((sess, d, df)) if (sess eq s) && d == dir => df
-        case _ =>
-          val df = Dedup.prefixFilterPairsFrom(sharedShingles(s, dir),
-              tauNum = 1, tauDen = 2)
-            .select(col("id_a"), col("id_b"))
-            .localCheckpoint()
-          halfPairMemo = Some((s, dir, df))
-          df
-      }
+    halfPairMemo(s, dir) {
+      Dedup.prefixFilterPairsFrom(sharedShingles(s, dir), tauNum = 1, tauDen = 2)
+        .select(col("id_a"), col("id_b"))
+        .localCheckpoint()
     }
-
-  /** Drop both memo slots (called by Bench after the board: the blocks
-    * would otherwise stay resident for the session's remainder). */
-  def releaseSharedDedup(): Unit = synchronized {
-    shMemo = None
-    halfPairMemo = None
-  }
 
   /** Build-if-absent STORED τ=2/5 prefix index for the corpus at `dir`
     * (the s15 stored-index discipline): prefix + signature tables persist
-    * once under a content-stamped location in java.io.tmpdir (a real
-    * deployment writes next to the corpus), and consumers pay two parquet
-    * scans. Shared by t55 (stored self-join dedup) and t58 (incremental
+    * once under a content-stamped location ([[graft.core.StoredIndex]]),
+    * and consumers pay two parquet scans. Shared by t55 (stored self-join dedup) and t58 (incremental
     * batch probe). Returns (prefix, sigs, shingle row count — the
     * broadcast size gate's input).
     */
@@ -107,50 +82,25 @@ object TextQueries {
   private def storedPrefixIndexImpl(s: SparkSession, dir: String,
                                     maxDf: Option[Long]): (DataFrame, DataFrame, Option[DataFrame], Long) = {
     val docs = Tables.documents(s, dir)
-    val suffix = maxDf.map(c => s"_cap$c").getOrElse("")
-    val idxDir = s"${System.getProperty("java.io.tmpdir")}/graft_prefix_index_" +
-      QueryDef.pathKey(dir) + suffix
-    val marker = java.nio.file.Paths.get(idxDir, "_GRAFT_INDEX")
-    // order-independent content stamp: a regenerated corpus at the same
-    // path must invalidate the index; ONE agg so the staleness probe
-    // costs a single narrow corpus scan
-    val stampRow = docs.agg(count(lit(1)),
-      sum(xxhash64(col("doc_id"), col("text")))).first()
-    val nShRowsKey = "sh_rows="
     // "cap=N keep=s": the keep set is keyed by the shingle STRING since
     // r14 (df capped per string, ADVICE r13) — the schema token
     // invalidates indexes persisted with the older hash-keyed keep set
-    val stampHead = s"tau=2/5 n=3${maxDf.map(c => s" cap=$c keep=s").getOrElse("")} " +
-      s"docs=${stampRow.getLong(0)} fp=${stampRow.getLong(1)} src=$dir"
-    val existing =
-      if (java.nio.file.Files.exists(marker))
-        new String(java.nio.file.Files.readAllBytes(marker), "UTF-8")
-      else ""
-    val built = existing.startsWith(stampHead + "\n")
-    val shRows: Long =
-      if (built)
-        existing.linesIterator.find(_.startsWith(nShRowsKey))
-          .map(_.stripPrefix(nShRowsKey).toLong).getOrElse(0L)
-      else {
-        val sh0 = Dedup.shingleHashTable(docs, col("doc_id"), col("text"))
-        val sh = maxDf match {
-          case Some(c) =>
-            val (capped, keep) = Dedup.cappedShingles(sh0, c)
-            keep.write.mode("overwrite").parquet(s"$idxDir/keep")
-            capped.localCheckpoint()
-          case None => sh0
-        }
-        Dedup.prefixIndexTable(sh, tauNum = 2, tauDen = 5)
-          .write.mode("overwrite").parquet(s"$idxDir/prefix")
-        Dedup.signatureTable(sh)
-          .write.mode("overwrite").parquet(s"$idxDir/sigs")
-        val n = sh.count()
-        java.nio.file.Files.write(marker,
-          (stampHead + "\n" + nShRowsKey + n).getBytes("UTF-8"))
-        n
+    val idx = StoredIndex("prefix_index",
+        s"tau=2/5 n=3${maxDf.map(c => s" cap=$c keep=s").getOrElse("")}",
+        dir, docs, "doc_id", "text", suffix = maxDf.map(c => s"_cap$c").getOrElse("")) { b =>
+      val sh0 = Dedup.shingleHashTable(docs, col("doc_id"), col("text"))
+      val sh = maxDf match {
+        case Some(c) =>
+          val (capped, keep) = Dedup.cappedShingles(sh0, c)
+          keep.write.parquet(b.path("keep"))
+          capped.localCheckpoint()
+        case None => sh0
       }
-    (s.read.parquet(s"$idxDir/prefix"), s.read.parquet(s"$idxDir/sigs"),
-      maxDf.map(_ => s.read.parquet(s"$idxDir/keep")), shRows)
+      Dedup.prefixIndexTable(sh, tauNum = 2, tauDen = 5).write.parquet(b.path("prefix"))
+      Dedup.signatureTable(sh).write.parquet(b.path("sigs"))
+      b.record("sh_rows", sh.count())
+    }
+    (idx("prefix"), idx("sigs"), maxDf.map(_ => idx("keep")), idx.meta("sh_rows"))
   }
 
   /** Build-if-absent STORED order-STABLE τ=2/5 prefix index over the
@@ -167,35 +117,14 @@ object TextQueries {
     */
   private[queries] def storedStableIndex(s: SparkSession, dir: String): (DataFrame, DataFrame, Long) = {
     val corpus = Tables.documents(s, dir).filter(col("doc_id") % 10 =!= 7)
-    val idxDir = s"${System.getProperty("java.io.tmpdir")}/graft_stable_prefix_index_" +
-      QueryDef.pathKey(dir)
-    val marker = java.nio.file.Paths.get(idxDir, "_GRAFT_INDEX")
-    val stampRow = corpus.agg(count(lit(1)),
-      sum(xxhash64(col("doc_id"), col("text")))).first()
-    val nShRowsKey = "sh_rows="
-    val stampHead = s"tau=2/5 n=3 order=s side=mod10ne7 " +
-      s"docs=${stampRow.getLong(0)} fp=${stampRow.getLong(1)} src=$dir"
-    val existing =
-      if (java.nio.file.Files.exists(marker))
-        new String(java.nio.file.Files.readAllBytes(marker), "UTF-8")
-      else ""
-    val built = existing.startsWith(stampHead + "\n")
-    val shRows: Long =
-      if (built)
-        existing.linesIterator.find(_.startsWith(nShRowsKey))
-          .map(_.stripPrefix(nShRowsKey).toLong).getOrElse(0L)
-      else {
-        val sh = Dedup.shingleHashTable(corpus, col("doc_id"), col("text"))
-        Dedup.stablePrefixIndexTable(sh, tauNum = 2, tauDen = 5)
-          .write.mode("overwrite").parquet(s"$idxDir/prefix")
-        Dedup.signatureTable(sh)
-          .write.mode("overwrite").parquet(s"$idxDir/sigs")
-        val n = sh.count()
-        java.nio.file.Files.write(marker,
-          (stampHead + "\n" + nShRowsKey + n).getBytes("UTF-8"))
-        n
-      }
-    (s.read.parquet(s"$idxDir/prefix"), s.read.parquet(s"$idxDir/sigs"), shRows)
+    val idx = StoredIndex("stable_prefix_index", "tau=2/5 n=3 order=s side=mod10ne7",
+        dir, corpus, "doc_id", "text") { b =>
+      val sh = Dedup.shingleHashTable(corpus, col("doc_id"), col("text"))
+      Dedup.stablePrefixIndexTable(sh, tauNum = 2, tauDen = 5).write.parquet(b.path("prefix"))
+      Dedup.signatureTable(sh).write.parquet(b.path("sigs"))
+      b.record("sh_rows", sh.count())
+    }
+    (idx("prefix"), idx("sigs"), idx.meta("sh_rows"))
   }
 
   /** Force-build every content-stamped stored index this registry owns —
@@ -2366,8 +2295,7 @@ object TextQueries {
   // sampled trainer — and deposits the merge rows; t47 consumes the
   // deposit when (session, dir) match, else trains once itself (train is
   // deterministic, so either path yields identical rows).
-  @volatile private var bpeMemo:
-    Option[(SparkSession, String, Seq[(Int, String, Long)])] = None
+  private val bpeMemo = SessionMemo[Seq[(Int, String, Long)]]()
 
   private def bpeTrainFresh(s: SparkSession, dir: String): Seq[(Int, String, Long)] = {
     val rows = TextOps.bpeTrainRounds(Tables.documents(s, dir),
@@ -2376,7 +2304,7 @@ object TextQueries {
       .orderBy("round")
       .collect()
       .map(r => (r.getInt(0), r.getString(1), r.getLong(2))).toSeq
-    synchronized { bpeMemo = Some((s, dir, rows)) }
+    bpeMemo.put(s, dir, rows)
     rows
   }
 
@@ -2389,8 +2317,5 @@ object TextQueries {
   /** The ordered merge strings t47 applies — memoized train if this
     * (session, dir) already trained, else one fresh train. */
   private def bpeMergeSeq(s: SparkSession, dir: String): Seq[String] =
-    (synchronized { bpeMemo } match {
-      case Some((sess, d, rows)) if (sess eq s) && d == dir => rows
-      case _ => bpeTrainFresh(s, dir)
-    }).map(_._2)
+    bpeMemo.get(s, dir).getOrElse(bpeTrainFresh(s, dir)).map(_._2)
 }

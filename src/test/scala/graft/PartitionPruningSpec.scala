@@ -63,7 +63,7 @@ class PartitionPruningSpec extends SparkSpec {
     // passing on machines where a stale r13-era index dir survived in
     // tmpdir, and would 404 on a fresh box
     val idxDir = s"${System.getProperty("java.io.tmpdir")}/graft_ivfpq_index_" +
-      graft.queries.QueryDef.pathKey(sf) + "/codes_by_cell"
+      graft.core.StoredIndex.pathKey(sf) + "/codes_by_cell"
     val idx = spark.read.parquet(idxDir)
     val cells = idx.select("ccell").distinct().collect().map(_.getInt(0)).sorted
     assert(cells.length > 2, s"need >2 occupied cells to observe pruning, got ${cells.length}")
@@ -82,7 +82,7 @@ class PartitionPruningSpec extends SparkSpec {
     // index behind its content stamp)
     SparkEntry.queries("s45_ann_respq_stored")(spark, sf)
     val base = s"${System.getProperty("java.io.tmpdir")}/graft_respq_index_" +
-      graft.queries.QueryDef.pathKey(sf)
+      graft.core.StoredIndex.pathKey(sf)
     for (side <- Seq("codes_by_cell", "cterm_by_cell")) {
       val idx = spark.read.parquet(s"$base/$side")
       val cells = idx.select("ccell").distinct().collect().map(_.getInt(0)).sorted

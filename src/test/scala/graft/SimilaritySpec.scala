@@ -628,11 +628,10 @@ class SimilaritySpec extends SparkSpec {
     assert(got == want)
   }
 
-  test("SqDistDecimal kernel path == exploded decimal-join chain (s21/s24 distances)") {
-    // r16: labelDistRows replaced the n*d*L exploded join + decimal-sum
-    // shuffle; pin both consumers' outputs bitwise against the verbatim
-    // pre-r16 formulations on the real corpus
-    val emb = graft.core.Tables.embeddings(spark, sf)
+  /** labelDistRows replaced the n*d*L exploded join + decimal-sum
+    * shuffle; pin both consumers' outputs bitwise against the verbatim
+    * pre-r16 formulations on `emb`. */
+  private def assertLabelDistParity(emb: org.apache.spark.sql.DataFrame): Unit = {
     def oldDist(): org.apache.spark.sql.DataFrame = {
       val x = emb.select(col("vec_id").as("rid"), col("label").as("slabel"),
           posexplode(transform(col("embedding"), v => v.cast("double"))))
@@ -685,5 +684,39 @@ class SimilaritySpec extends SparkSpec {
     assert(cm.orderBy("label", "pred").collect().map(_.toString).toSeq ==
       oldCm.orderBy("label", "pred").collect().map(_.toString).toSeq)
     assert(want.nonEmpty)
+  }
+
+  test("SqDistDecimal kernel path == exploded decimal-join chain (s21/s24 distances)") {
+    assertLabelDistParity(graft.core.Tables.embeddings(spark, sf))
+  }
+
+  test("labelDistRows parity holds with empty (non-null) vectors in the corpus") {
+    // the exploded form gives an empty vector no distance rows at all
+    val emb = graft.core.Tables.embeddings(spark, sf)
+    val empties = emb.filter(col("vec_id") % 7 === 0)
+      .withColumn("vec_id", col("vec_id") + 1000000000L)
+      .withColumn("embedding", filter(col("embedding"), _ => lit(false)))
+    assert(empties.count() > 0)
+    assertLabelDistParity(emb.unionByName(empties))
+  }
+
+  test("silhouetteByLabel and nearestCentroidEval accept Long and String labels") {
+    // the same corpus with its labels re-typed order-preservingly: every
+    // result row matches the Int-labeled run with its labels mapped
+    val emb = graft.core.Tables.embeddings(spark, sf)
+    def run(e: org.apache.spark.sql.DataFrame): (Seq[Seq[Any]], Seq[Seq[Any]]) =
+      (Similarity.silhouetteByLabel(e, col("vec_id"), col("label"), col("embedding"))
+        .orderBy("label").collect().map(_.toSeq).toSeq,
+        Similarity.nearestCentroidEval(e, col("vec_id"), col("label"), col("embedding"))
+          .orderBy("label", "pred").collect().map(_.toSeq).toSeq)
+    val (sil, cm) = run(emb)
+    assert(sil.nonEmpty && cm.nonEmpty)
+    def mapped(rows: Seq[Seq[Any]], nLabels: Int, f: Int => Any): Seq[Seq[Any]] =
+      rows.map(r => r.take(nLabels).map(l => f(l.asInstanceOf[Int])) ++ r.drop(nLabels))
+    val retyped = Seq[(org.apache.spark.sql.Column, Int => Any)](
+      (col("label").cast("long") + 5000000000L, _ + 5000000000L),
+      (format_string("L%04d", col("label")), l => f"L$l%04d"))
+    for ((lbl, f) <- retyped)
+      assert(run(emb.withColumn("label", lbl)) == ((mapped(sil, 1, f), mapped(cm, 2, f))))
   }
 }
