@@ -1,16 +1,12 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
-  def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+  def main(args: Array[String]): Unit =
     // SPARK_GRAFT_BENCH_OUT separates board OWNERSHIP (the LEAKCHECK_builder
     // pattern): the driver's default invocation owns bench_full.json; the
     // builder's quiesced snapshots go to bench_builder.json, which the
     // driver never overwrites. Provenance is stamped into the JSON.
-    run(sfDir, cpus,
+    run(Harness.sfDir, Harness.cpus,
       sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_full.json"))
-  }
 
   /** The full board sweep, parameterized so [[Sf1Sweep]] can aim it at an
     * inflated dir with its own canonical file (bench_sf1.json) without
@@ -24,24 +20,14 @@ object Bench {
     def inScope(name: String): Boolean = only.forall(_.contains(name))
     // Canonical per-query reference from the COMMITTED outPath snapshot,
     // read before this run overwrites it: feeds the outlier re-run gate
-    // at sweep end. Crude regex parse — keys are [A-Za-z0-9_] and values
-    // plain numbers by construction (this file writes them).
-    val canonical: Map[String, Double] = try {
-      val s = java.nio.file.Files.readString(java.nio.file.Paths.get(outPath))
-      // only comparable when the snapshot was measured at THIS scale
-      // factor (a dev run at another sf must not trigger re-runs) AND
-      // with the same forcing action — the r13 count()→noop re-baseline
-      // raised most per-query times (the pruned work is now measured),
-      // so a count-era snapshot would flag half the board as outliers
-      if (!s.contains("\"sf\":\"" + sfDir + "\"") ||
-        !s.contains("\"action\":\"noop\"")) Map.empty
-      else {
-        val qStart = s.indexOf("\"queries\":{")
-        val body = s.substring(qStart + 11, s.indexOf("}", qStart))
-        """"([A-Za-z0-9_]+)":(-?[0-9.]+)""".r.findAllMatchIn(body)
-          .map(m => m.group(1) -> m.group(2).toDouble).toMap
-      }
-    } catch { case _: Throwable => Map.empty }
+    // at sweep end. Only comparable when the snapshot was measured at THIS
+    // scale factor (a dev run at another sf must not trigger re-runs) AND
+    // with the same forcing action — the r13 count()→noop re-baseline
+    // raised most per-query times (the pruned work is now measured), so a
+    // count-era snapshot would flag half the board as outliers.
+    val canonical: Map[String, Double] = Harness.Board.read(outPath)
+      .filter(b => b.sf == sfDir && b.action == Harness.Board.Action)
+      .fold(Map.empty[String, Double])(_.queries.toMap)
     // Pre-flight contention gate: the min-of-two + loadavg-recording
     // guards DOCUMENT contention but the headline number still whipsaws
     // when another build shares the machine (r6: 101 s contended vs 78-86 s
@@ -62,23 +48,8 @@ object Bench {
       (System.nanoTime() - gateT0) < 300L * 1000000000L)
       Thread.sleep(5000)
     val preflightWait = (System.nanoTime() - gateT0) / 1e9
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // Warm-up: JVM/codegen/parquet-footer costs land here, not on whichever
-    // query happens to run first (measured ~6 s of pure first-query noise).
-    // Per-table try: one missing/odd table must not abort the rest of the
-    // warm-up (r4 shipped exactly that bug — the raw `events` load threw on
-    // TIMESTAMP(NANOS) and silently skipped the remaining tables + q01).
-    graft.core.Tables.names.foreach { t =>
-      try graft.core.Tables.loadNormalized(spark, sfDir, t).limit(1).count()
-      catch { case e: Throwable => System.err.println(s"[bench] warm-up $t failed: ${e.getMessage}") }
-    }
-    try SparkEntry.queries.get("q01_pricing_summary").foreach(_(spark, sfDir).count())
-    catch { case e: Throwable => System.err.println(s"[bench] warm-up query failed: ${e.getMessage}") }
+    val spark = Harness.session(cpus)
+    Harness.warmUp(spark, sfDir)
     // Stored-index PRE-PASS (r14 verdict #3): materialize every
     // content-stamped index BEFORE any timed entry, so the stored-index
     // families (t55/t58/t59/t60/t61/st12, s15/s35-s39/s42-s45) time the
@@ -93,26 +64,12 @@ object Bench {
       System.err.println(s"[bench] index pre-pass failed: ${e.getMessage}")
     }
     val prebuildSec = (System.nanoTime() - prebuildT0) / 1e9
-    // Force FULL materialization through the noop sink, not count():
-    // count() lets the optimizer prune every column nobody aggregates —
-    // a plan census (r13) found 66 of 275 queries losing work under
-    // count(), from terminal window columns (q04's z-score: the whole
-    // point of the query, timed at 0!) up to entire join+window subtrees
-    // (t56's unique-key LEFT-join elimination). The noop write consumes
-    // every output column and keeps the final sort, i.e. it times the
-    // DECLARED result — the same work Verify's parquet dump pays, minus
-    // encoding. Board totals re-baselined at the switch (SCALE.md).
-    def timeOnce(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
-      val t0 = System.nanoTime()
-      try {
-        fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-        (System.nanoTime() - t0) / 1e9
-      }
+    def timeOnce(name: String, fn: Harness.QueryFn): Double =
+      try Harness.timeForced(spark, sfDir, fn)
       catch { case e: Throwable =>
         System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
         Double.NaN
       }
-    }
     // Mid-sweep contention gate: the r10 board needed 12 outlier re-runs
     // (vs 1 in r9) because load arrived DURING the sweep, after the
     // preflight gate passed. Before each query, if the 1-minute loadavg
@@ -148,7 +105,7 @@ object Bench {
     // min of two runs per query: damps shared-machine load spikes without
     // hiding real cost (both runs rebuild the full plan; only JVM/codegen
     // warmth carries over, which the warm-up pass already granted).
-    val measured = (SparkEntry.queries ++ SparkEntry.benchOnly)
+    val measured = Harness.registry
       .filter { case (name, _) => inScope(name) }
       .map { case (name, fn) =>
       gateIfLoud()
@@ -171,7 +128,7 @@ object Bench {
     val results = measured.map { case (name, t) =>
       val ref = canonical.getOrElse(name, -1.0)
       name -> (if (t > 0 && ref > 0 && t > 2.5 * ref)
-        (SparkEntry.queries ++ SparkEntry.benchOnly).get(name).map { fn =>
+        Harness.registry.get(name).map { fn =>
           rerunNames += name
           gateIfLoud()
           val reruns = (1 to 2).map(_ => timeOnce(name, fn)).filterNot(_.isNaN)
@@ -182,19 +139,24 @@ object Bench {
     // free every session memo (c09's last bench lineage, the shared
     // dedup and co-purchase tables) now that all timing is done
     graft.core.SessionMemo.release()
-    def fmt(v: Double): String = if (v < 0) "-1" else f"$v%.3f"
     // Contention guard (r4's driver numbers were ~1.8× the uncontended truth
     // because another build was running): record host CPU count, the
     // 1-minute loadavg at gate entry and sweep end, the pre-flight wait,
     // and the outlier re-run count — a contended snapshot is
     // self-documenting instead of reading as a code regression.
-    val loadAvg = osBean.getSystemLoadAverage
-    def jsonLine(rs: Iterable[(String, Double)]): String = {
-      val qs = rs.map { case (k, v) => "\"" + k + "\":" + fmt(v) }
-        .mkString("{", ",", "}")
-      val total = results.values.filter(_ >= 0).sum
-      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":$qs,"sf":"$sfDir","action":"noop","host_cpus":$hostCpus,"loadavg_1m":${fmt(loadAvg)},"loadavg_preflight":${fmt(loadAtStart)},"preflight_wait_sec":${fmt(preflightWait)},"rerun_outliers":${rerunNames.size},"rerun_names":${rerunNames.map("\"" + _ + "\"").mkString("[", ",", "]")},"prebuild_sec":${fmt(prebuildSec)},"provenance":"${sys.env.getOrElse("SPARK_GRAFT_PROVENANCE", "driver")}","out":"$outPath"}"""
-    }
+    val board = Harness.Board(
+      total = results.values.filter(_ >= 0).sum,
+      queries = results.toSeq.sortBy(_._1),
+      sf = sfDir,
+      action = Harness.Board.Action,
+      hostCpus = hostCpus,
+      loadavg1m = osBean.getSystemLoadAverage,
+      loadavgPreflight = loadAtStart,
+      preflightWaitSec = preflightWait,
+      rerunNames = rerunNames.toSeq,
+      prebuildSec = prebuildSec,
+      provenance = Harness.Board.provenance,
+      out = outPath)
     // The driver keeps only a ~2k-char tail of stdout; the full 80-query
     // map doesn't fit, so stdout carries the headline subset (cost drivers
     // + one per operator family) and the complete per-query map goes to a
@@ -220,11 +182,10 @@ object Bench {
       "q132_label_prop", "t43_sorted_neighborhood", "t45_bpe_train",
       "s26_ann_binary", "s27_ivf_recall", "c09_full_pipeline",
       "t53_dedup_chain_fresh")
-    try java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(outPath),
-      jsonLine(results.toSeq.sortBy(_._1)))
+    try Harness.Board.write(outPath, board)
     catch { case e: Throwable => System.err.println(s"[bench] full dump failed: $e") }
-    val line = jsonLine(headline.flatMap(h => results.get(h).map(h -> _)))
+    val line = board.copy(
+      queries = headline.flatMap(h => results.get(h).map(h -> _))).render
     println(line)
     spark.stop()
     line

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import graft.pipeline.{Climate, ClimateFixture}
 import graft.sources.Sinks
 
@@ -26,11 +25,7 @@ object ClimateThroughput {
     if (!java.nio.file.Files.exists(st))
       java.nio.file.Files.writeString(st, ClimateFixture.stationsTextFor(200))
 
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session("32")
     val out = dir + "/gold_scala"
     val t0 = System.nanoTime()
     val g = Climate.run(spark, b.toString, st.toString)

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** sf-inflation tool: writes an sf≥1-equivalent copy of a testdata dir by
@@ -32,13 +32,7 @@ object Inflate {
     val src  = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
     val out  = if (args.length > 1) args(1) else "target/sf1"
     val mult = if (args.length > 2) args(2).toInt else 10
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session(Harness.cpus)
 
     // Key strides: far above any sf0.1 key, divisible by the small
     // moduli queries use for sampling (% 50, % 10), so per-copy query

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import scala.collection.mutable
 
@@ -50,21 +50,16 @@ object ScaleCheck {
   }
 
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt
+    val sfDir = Harness.sfDir
+    val cpus = Harness.cpus.toInt
     val mult = sys.env.getOrElse("SPARK_GRAFT_SCALE_MULT", "10").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // the check asserts the CONSTRUCTED layout (no operator funnels big
-      // record counts through one task). AQE's byte-based coalescing would
-      // legitimately fold this fixture's ~1-2 MB shuffles to 1 partition —
-      // an optimization that never engages at real volumes — and mask
-      // exactly the class of bug the record-count assertions exist to catch
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // the check asserts the CONSTRUCTED layout (no operator funnels big
+    // record counts through one task). AQE's byte-based coalescing would
+    // legitimately fold this fixture's ~1-2 MB shuffles to 1 partition —
+    // an optimization that never engages at real volumes — and mask
+    // exactly the class of bug the record-count assertions exist to catch
+    val spark = Harness.session(Harness.cpus,
+      "spark.sql.adaptive.coalescePartitions.enabled" -> "false")
     val listener = new StageStats
     spark.sparkContext.addSparkListener(listener)
 

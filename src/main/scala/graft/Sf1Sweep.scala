@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** One-command repeatable sf1 sweep: Inflate (×10 over sf0.1, if the
   * inflated dir is missing) → full-board Bench against it → the
   * sf1/sf0.1 nonlinearity report (tools/sf1_ratio.py). Writes the
@@ -36,22 +34,19 @@ object Sf1Sweep {
       s"sf1 sweep needs a 64 g driver heap (have ${maxHeapGb} g): the " +
         "dedup family's candidate state OOMs the default 8 g single-JVM " +
         "heap at sf1. Re-run with SPARK_DRIVER_MEM=64g.")
-    val srcDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val srcDir = Harness.sfDir
     val sf1Dir = "target/sf1"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
 
     if (!java.nio.file.Files.exists(java.nio.file.Paths.get(sf1Dir, "lineitem.parquet"))) {
       println(s"[sf1] inflating $srcDir -> $sf1Dir x10")
       Inflate.main(Array(srcDir, sf1Dir, "10"))
       // Inflate leaves a session behind; Bench.run builds its own
-      SparkSession.getActiveSession.foreach(_.stop())
-      SparkSession.clearActiveSession()
-      SparkSession.clearDefaultSession()
+      Harness.stopSession()
     } else println(s"[sf1] reusing existing $sf1Dir")
 
     val segDir = java.nio.file.Paths.get("target", "sf1_segments")
     java.nio.file.Files.createDirectories(segDir)
-    val allNames = (SparkEntry.queries ++ SparkEntry.benchOnly).keySet
+    val allNames = Harness.registry.keySet
     def family(n: String): String = if (n.startsWith("st")) "st" else n.take(1)
     val families = Seq("q", "c", "t", "s", "st", "m")
     val unknown = allNames.filterNot(n => families.contains(family(n)))
@@ -68,59 +63,37 @@ object Sf1Sweep {
       // re-sweep path when a completed board carried contention (each
       // segment's prior values gate the fresh ones at 2.5×)
       val force = sys.env.get("SPARK_GRAFT_SF1_FORCE").contains("1")
-      val done = !force && (try {
-        val txt = java.nio.file.Files.readString(java.nio.file.Paths.get(segPath))
-        txt.contains("\"sf\":\"" + sf1Dir + "\"") &&
-          txt.contains("\"action\":\"noop\"") &&
-          names.forall(n => txt.contains("\"" + n + "\":"))
-      } catch { case _: Throwable => false })
+      val done = !force && Harness.Board.read(segPath).exists(b =>
+        b.sf == sf1Dir && b.action == Harness.Board.Action &&
+          names.subsetOf(b.queries.map(_._1).toSet))
       if (done) println(s"[sf1] segment $f: checkpoint covers ${names.size} queries, skipping")
       else {
         println(s"[sf1] segment $f: running ${names.size} queries")
-        Bench.run(sf1Dir, cpus, segPath, Some(names))
-        SparkSession.getActiveSession.foreach(_.stop())
-        SparkSession.clearActiveSession()
-        SparkSession.clearDefaultSession()
+        Bench.run(sf1Dir, Harness.cpus, segPath, Some(names))
+        Harness.stopSession()
       }
     }
 
     // ---- merge segments into the canonical snapshot ----
-    val qRe = """"([A-Za-z0-9_]+)":(-?[0-9.]+)""".r
-    def field(txt: String, key: String): Double =
-      ("\"" + key + "\":(-?[0-9.]+)").r.findFirstMatchIn(txt)
-        .map(_.group(1).toDouble).getOrElse(-1.0)
-    val segs = families.map { f =>
-      java.nio.file.Files.readString(
-        segDir.resolve(s"bench_sf1_$f.json"))
-    }
-    val queries = segs.flatMap { txt =>
-      val qStart = txt.indexOf("\"queries\":{")
-      val body = txt.substring(qStart + 11, txt.indexOf("}", qStart))
-      qRe.findAllMatchIn(body).map(m => m.group(1) -> m.group(2).toDouble)
-    }.sortBy(_._1)
-    val rerunNames = segs.flatMap { txt =>
-      val rStart = txt.indexOf("\"rerun_names\":[")
-      val body = txt.substring(rStart + 15, txt.indexOf("]", rStart))
-      """"([A-Za-z0-9_]+)"""".r.findAllMatchIn(body).map(_.group(1))
-    }
-    def fmt(v: Double): String = f"$v%.3f"
-    val total = queries.collect { case (_, v) if v >= 0 => v }.sum
-    val merged =
-      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":${
-        queries.map { case (k, v) => "\"" + k + "\":" + (if (v < 0) "-1" else fmt(v)) }
-          .mkString("{", ",", "}")
-      },"sf":"$sf1Dir","action":"noop","host_cpus":${
-        Runtime.getRuntime.availableProcessors()
-      },"loadavg_1m":${fmt(segs.map(field(_, "loadavg_1m")).max)},"loadavg_preflight":${
-        fmt(segs.map(field(_, "loadavg_preflight")).max)
-      },"preflight_wait_sec":${fmt(segs.map(field(_, "preflight_wait_sec")).sum)},"rerun_outliers":${
-        rerunNames.size
-      },"rerun_names":${rerunNames.map("\"" + _ + "\"").mkString("[", ",", "]")},"prebuild_sec":${
-        fmt(segs.map(field(_, "prebuild_sec")).filter(_ >= 0).sum)
-      },"provenance":"${sys.env.getOrElse("SPARK_GRAFT_PROVENANCE", "driver")}","out":"bench_sf1.json","segments":${families.size}}"""
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get("bench_sf1.json"), merged)
-    println(s"[sf1] merged ${queries.size} queries, total ${fmt(total)} s -> bench_sf1.json")
+    val segs = families.map(f =>
+      Harness.Board.parse(java.nio.file.Files.readString(segDir.resolve(s"bench_sf1_$f.json"))))
+    val queries = segs.flatMap(_.queries).sortBy(_._1)
+    val merged = Harness.Board(
+      total = queries.collect { case (_, v) if v >= 0 => v }.sum,
+      queries = queries,
+      sf = sf1Dir,
+      action = Harness.Board.Action,
+      hostCpus = Runtime.getRuntime.availableProcessors(),
+      loadavg1m = segs.map(_.loadavg1m).max,
+      loadavgPreflight = segs.map(_.loadavgPreflight).max,
+      preflightWaitSec = segs.map(_.preflightWaitSec).sum,
+      rerunNames = segs.flatMap(_.rerunNames),
+      prebuildSec = segs.map(_.prebuildSec).filter(_ >= 0).sum,
+      provenance = Harness.Board.provenance,
+      out = "bench_sf1.json",
+      segments = Some(families.size))
+    Harness.Board.write("bench_sf1.json", merged)
+    println(s"[sf1] merged ${queries.size} queries, total ${Harness.Board.fmt(merged.total)} s -> bench_sf1.json")
 
     // nonlinearity report vs the committed sf0.1 canonical — best-effort
     // (the analyzer is dev-side python; absence shouldn't fail the sweep)

@@ -51,6 +51,16 @@ object SparkEntry {
     // SharedGraph scaladoc — the same pattern)
     "g01_co_edges_fresh" -> ((s, dir) => graft.queries.SharedGraph.coEdgesFresh(s, dir)))
 
+  /** The `(keys…, pos, value)` rows of a model table's array column `c`,
+    * ordered by keys then pos — the flattened shape a staged table takes.
+    */
+  private def flattened(model: DataFrame, keys: String*): DataFrame = {
+    val ks = keys.map(functions.col)
+    model.select(ks :+ functions.posexplode(functions.col("c")): _*)
+      .select(ks :+ functions.col("pos") :+ functions.col("col").as("value"): _*)
+      .orderBy(keys.head, keys.tail :+ "pos": _*)
+  }
+
   /** Auxiliary engine artifacts Verify stages alongside the query dumps —
     * NOT graded queries, just inputs an oracle needs to re-derive an
     * otherwise engine-trusted step (referenced via the OutToken path).
@@ -67,13 +77,9 @@ object SparkEntry {
     */
   def staged: Map[String, (SparkSession, String) => DataFrame] = Map(
     "_staged_ivf_centroids" -> ((s, dir) =>
-      graft.ext.IVF.kmeansCentroids(
+      flattened(graft.ext.IVF.kmeansCentroids(
         graft.core.Tables.embeddings(s, dir), "vec_id", "embedding",
-        k = 8, iters = 3)
-        .select(functions.col("cell"), functions.posexplode(functions.col("c")))
-        .select(functions.col("cell"), functions.col("pos"),
-          functions.col("col").as("value"))
-        .orderBy("cell", "pos")),
+        k = 8, iters = 3), "cell")),
     // The (doc, band, bucket) MinHash band-hash rows behind t30: given
     // these, the capped bucket self-join AND the exact-Jaccard verify are
     // pure relational algebra DuckDB re-derives from scratch — only the
@@ -88,13 +94,9 @@ object SparkEntry {
     // oracles re-derive everything FROM the centroids, and s30 now
     // grades how the centroids themselves are produced.
     "_staged_ivf_centroids_prev" -> ((s, dir) =>
-      graft.ext.IVF.kmeansCentroids(
+      flattened(graft.ext.IVF.kmeansCentroids(
         graft.core.Tables.embeddings(s, dir), "vec_id", "embedding",
-        k = 8, iters = 2)
-        .select(functions.col("cell"), functions.posexplode(functions.col("c")))
-        .select(functions.col("cell"), functions.col("pos"),
-          functions.col("col").as("value"))
-        .orderBy("cell", "pos")),
+        k = 8, iters = 2), "cell")),
     // The REFINED centroids behind s43's refresh grading: one warm Lloyd
     // round (IVF.kmeansRefine) from the k=8/iters=3 stored quantizer —
     // the exact table storedRefinedCentroids persists (bit-identical by
@@ -103,14 +105,10 @@ object SparkEntry {
     // pure arithmetic DuckDB re-derives from raw embeddings.
     "_staged_ivf_centroids_refined" -> ((s, dir) => {
       val emb = graft.core.Tables.embeddings(s, dir)
-      graft.ext.IVF.kmeansRefine(emb, "vec_id", "embedding",
+      flattened(graft.ext.IVF.kmeansRefine(emb, "vec_id", "embedding",
           graft.ext.IVF.kmeansCentroids(emb, "vec_id", "embedding",
             k = 8, iters = 3),
-          iters = 1)
-        .select(functions.col("cell"), functions.posexplode(functions.col("c")))
-        .select(functions.col("cell"), functions.col("pos"),
-          functions.col("col").as("value"))
-        .orderBy("cell", "pos")
+          iters = 1), "cell")
     }),
     // The two-level quantizer's model tables behind s31/s32 (same
     // flattened (cell, pos, value) shape): L1 is a plain k1-cell
@@ -124,22 +122,14 @@ object SparkEntry {
     "_staged_ivf2_l1" -> ((s, dir) => {
       val emb = graft.core.Tables.embeddings(s, dir)
       val (k1, _) = graft.ext.IVF.autoK1K2(emb.count())
-      graft.ext.IVF.kmeansCentroids(emb, "vec_id", "embedding",
-          k = k1, iters = 3)
-        .select(functions.col("cell"), functions.posexplode(functions.col("c")))
-        .select(functions.col("cell"), functions.col("pos"),
-          functions.col("col").as("value"))
-        .orderBy("cell", "pos")
+      flattened(graft.ext.IVF.kmeansCentroids(emb, "vec_id", "embedding",
+          k = k1, iters = 3), "cell")
     }),
     "_staged_ivf2_l2" -> ((s, dir) => {
       val emb = graft.core.Tables.embeddings(s, dir)
       val (k1, k2) = graft.ext.IVF.autoK1K2(emb.count())
-      graft.ext.IVF.twoLevelModel(emb, "vec_id", "embedding",
-          k1 = k1, k2 = k2, iters = 3)._2
-        .select(functions.col("cell"), functions.posexplode(functions.col("c")))
-        .select(functions.col("cell"), functions.col("pos"),
-          functions.col("col").as("value"))
-        .orderBy("cell", "pos")
+      flattened(graft.ext.IVF.twoLevelModel(emb, "vec_id", "embedding",
+          k1 = k1, k2 = k2, iters = 3)._2, "cell")
     }),
     // The m=8 per-subspace PQ codebooks behind s34 (flattened (sub, cell,
     // pos, value)): the same deterministic training s07 runs (hash-spread
@@ -147,14 +137,9 @@ object SparkEntry {
     // given these, the sub-slices, argmin code assignment and
     // decimal-summed distortion are pure arithmetic DuckDB re-derives.
     "_staged_pq_codebooks" -> ((s, dir) =>
-      graft.ext.PQ.codebooks(
+      flattened(graft.ext.PQ.codebooks(
         graft.core.Tables.embeddings(s, dir), "vec_id", "embedding",
-        m = 8, k = 16, iters = 2)
-        .select(functions.col("sub"), functions.col("cell"),
-          functions.posexplode(functions.col("c")))
-        .select(functions.col("sub"), functions.col("cell"),
-          functions.col("pos"), functions.col("col").as("value"))
-        .orderBy("sub", "cell", "pos")),
+        m = 8, k = 16, iters = 2), "sub", "cell")),
     // The m=8 RESIDUAL-PQ codebooks behind s41 (trained on v − c₁ against
     // the k=8/iters=3 coarse quantizer — the IVFADC convention): same
     // flattened (sub, cell, pos, value) shape and the same bit-for-bit
@@ -165,13 +150,8 @@ object SparkEntry {
       val emb = graft.core.Tables.embeddings(s, dir)
       val cents = graft.ext.IVF.kmeansCentroids(emb, "vec_id", "embedding",
         k = 8, iters = 3)
-      graft.ext.PQ.residualCodebooks(emb, "vec_id", "embedding", cents,
-          m = 8, k = 16, iters = 2)
-        .select(functions.col("sub"), functions.col("cell"),
-          functions.posexplode(functions.col("c")))
-        .select(functions.col("sub"), functions.col("cell"),
-          functions.col("pos"), functions.col("col").as("value"))
-        .orderBy("sub", "cell", "pos")
+      flattened(graft.ext.PQ.residualCodebooks(emb, "vec_id", "embedding", cents,
+          m = 8, k = 16, iters = 2), "sub", "cell")
     }),
     "_staged_lsh_bands" -> ((s, dir) =>
       graft.ext.Dedup.lshBandTable(

@@ -58,7 +58,7 @@ object Tables {
 
   /** Name-dispatching loader that applies per-table normalization —
     * currently just `events`' TIMESTAMP(NANOS) handling. This is the loader
-    * harnesses (Bench/TimeQuery warm-up, registerAll) must use when walking
+    * harnesses (Harness.warmUp, registerAll) must use when walking
     * [[names]] generically: a raw `load` of `events` throws
     * PARQUET_TYPE_ILLEGAL before the nanos conf is set.
     */

@@ -80,14 +80,12 @@ object Dedup {
     //     .otherwise(array())
     // (DedupSpec pins parity incl. nulls/short docs) but one pass with no
     // per-gram lambda dispatch: the interpreted HOF evaluation was the
-    // dominant task CPU of the text-dedup family (guide §4). df-level
-    // operators register GraftFunctions on their own session; the
-    // active-session fallback covers bare-Column callers (tests, probes).
-    {
-      org.apache.spark.sql.SparkSession.getActiveSession
-        .foreach(graft.functions.GraftFunctions.register)
-      call_function("graft_word_grams", w, lit(n))
-    }
+    // dominant task CPU of the text-dedup family (guide §4). Built as the
+    // expression itself, not a registered-function call, so it resolves on
+    // the session of whatever DataFrame uses it.
+    org.apache.spark.sql.graft.NativeColumn(w)(args =>
+      graft.functions.WordGrams(args.head,
+        org.apache.spark.sql.catalyst.expressions.Literal(n)))
 
   /** Convenience single-column form — fine for small/test data; the
     * df-level operators below always pre-split (see shinglesOfWords).

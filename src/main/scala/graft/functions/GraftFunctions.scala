@@ -101,11 +101,11 @@ object GraftFunctions {
     }))
 
   // one registration per session (r16): register() is called from every
-  // df-level operator AND from gramsOfWords' active-session fallback, so
-  // it must be a cheap no-op after the first call — the udaf() line in
-  // particular re-derived the Aggregator encoders via reflection on every
-  // invocation (measured as a per-query-build cost once WordGrams made
-  // the calls frequent). Weak keys: a stopped session's entry is GC'd.
+  // df-level operator, so it must be a cheap no-op after the first call —
+  // the udaf() line in particular re-derived the Aggregator encoders via
+  // reflection on every invocation (measured as a per-query-build cost
+  // once WordGrams made the calls frequent). Weak keys: a stopped
+  // session's entry is GC'd.
   private val registered = java.util.Collections.newSetFromMap(
     new java.util.WeakHashMap[SparkSession, java.lang.Boolean]())
 

@@ -34,20 +34,21 @@ class DedupSpec extends SparkSpec {
     assert(sh.toSeq == Seq(0))
   }
 
-  test("WordGrams kernel == interpreted HOF chain, incl. nulls/short/empty docs") {
-    // the r16 native kernel replaced exactly this spelling inside
-    // Dedup.gramsOfWords — pin bit parity on every edge the chain has:
-    // duplicates preserved, positional order, <n words → empty array,
-    // NULL words array → empty array, NULL element skipped by concat_ws
-    def hofGrams(w: org.apache.spark.sql.Column, n: Int) = {
-      val cnt = size(w) - (n - 1)
-      when(cnt >= 1,
-        transform(sequence(lit(1), cnt),
-          i => concat_ws(" ", (0 until n).map(k => element_at(w, i + k)): _*)))
-        .otherwise(array().cast("array<string>"))
-    }
-    graft.functions.GraftFunctions.register(spark)
-    val rows = Seq(
+  // the r16 native kernel replaced exactly this spelling inside
+  // Dedup.gramsOfWords — pin bit parity on every edge the chain has:
+  // duplicates preserved, positional order, <n words → empty array,
+  // NULL words array → empty array, NULL element skipped by concat_ws
+  private def hofGrams(w: org.apache.spark.sql.Column, n: Int) = {
+    val cnt = size(w) - (n - 1)
+    when(cnt >= 1,
+      transform(sequence(lit(1), cnt),
+        i => concat_ws(" ", (0 until n).map(k => element_at(w, i + k)): _*)))
+      .otherwise(array().cast("array<string>"))
+  }
+
+  private def wordRows(session: org.apache.spark.sql.SparkSession) = {
+    import session.implicits._
+    Seq(
       (1L, Seq("a", "b", "c", "d", "a", "b", "c")),     // dup grams
       (2L, Seq("x", "y")),                                 // shorter than n=3
       (3L, Seq.empty[String]),
@@ -55,13 +56,33 @@ class DedupSpec extends SparkSpec {
       (5L, null.asInstanceOf[Seq[String]]),                // null array
       (6L, Seq("p", null, "q", "r"))                       // null element
     ).toDF("id", "w")
-    for (n <- Seq(1, 2, 3, 8)) {
-      val got = rows.select(col("id"), Dedup.gramsOfWords(col("w"), n).as("g"))
+  }
+
+  private val gramSizes = Seq(1, 2, 3, 8)
+
+  private def assertGramParity(rows: org.apache.spark.sql.DataFrame,
+                               grams: Int => org.apache.spark.sql.Column): Unit =
+    for (n <- gramSizes) {
+      val got = rows.select(col("id"), grams(n).as("g"))
         .orderBy("id").collect().map(_.getSeq[String](1).toList).toList
       val want = rows.select(col("id"), hofGrams(col("w"), n).as("g"))
         .orderBy("id").collect().map(_.getSeq[String](1).toList).toList
       assert(got == want, s"n=$n: $got != $want")
     }
+
+  test("WordGrams kernel == interpreted HOF chain, incl. nulls/short/empty docs") {
+    assertGramParity(wordRows(spark), n => Dedup.gramsOfWords(col("w"), n))
+  }
+
+  test("gramsOfWords resolves on the DataFrame's session, not the active one") {
+    // rows of a session that never registered GraftFunctions; the gram
+    // Columns are built while no session is active
+    val rows = wordRows(spark.newSession())
+    try {
+      org.apache.spark.sql.SparkSession.clearActiveSession()
+      val grams = gramSizes.map(n => n -> Dedup.gramsOfWords(col("w"), n)).toMap
+      assertGramParity(rows, grams)
+    } finally org.apache.spark.sql.SparkSession.setActiveSession(spark)
   }
 
   test("jaccardPairs: near-dups score high, unrelated score low or absent") {
