@@ -80,12 +80,8 @@ object Dedup {
     //     .otherwise(array())
     // (DedupSpec pins parity incl. nulls/short docs) but one pass with no
     // per-gram lambda dispatch: the interpreted HOF evaluation was the
-    // dominant task CPU of the text-dedup family (guide §4). Built as the
-    // expression itself, not a registered-function call, so it resolves on
-    // the session of whatever DataFrame uses it.
-    org.apache.spark.sql.graft.NativeColumn(w)(args =>
-      graft.functions.WordGrams(args.head,
-        org.apache.spark.sql.catalyst.expressions.Literal(n)))
+    // dominant task CPU of the text-dedup family (guide §4).
+    graft.functions.GraftFunctions.wordGrams(w, n)
 
   /** Convenience single-column form — fine for small/test data; the
     * df-level operators below always pre-split (see shinglesOfWords).
@@ -101,7 +97,6 @@ object Dedup {
     */
   private[graft] def shingleRows(df: DataFrame, id: Column, text: Column,
                           n: Int): DataFrame = {
-    graft.functions.GraftFunctions.register(df.sparkSession)
     df.select(id.as("doc"), TextOps.words(text).as("w"))
       .select(col("doc"), explode(shinglesOfWords(col("w"), n)).as("s"))
   }
@@ -316,7 +311,6 @@ object Dedup {
   def pairsFromPrefixIndex(pref: DataFrame, sigs: DataFrame,
                            tauNum: Int, tauDen: Int,
                            broadcastSigs: Boolean): DataFrame = {
-    graft.functions.GraftFunctions.register(pref.sparkSession)
     // NO pair-level distinct before the verify (r14, VERDICT r13 #2): a
     // candidate pair repeats once per SHARED PREFIX token, and prefixes
     // hold each doc's rarest tokens, so the duplication factor is small
@@ -365,7 +359,7 @@ object Dedup {
       // intersection per pair: measured ~35 s of the 63 s sf1 query path
       // across 44 M candidates; the native kernel removes it.
       .select(col("id_a"), col("id_b"),
-        call_function("graft_sorted_intersect_count",
+        graft.functions.GraftFunctions.sortedIntersectCount(
           col("ha"), col("hb")).as("n_inter"),
         size(col("ha")).cast("long").as("n_a"),
         size(col("hb")).cast("long").as("n_b"))
@@ -404,7 +398,6 @@ object Dedup {
   def crossPrefixProbe(batchSh: DataFrame, corpusPref: DataFrame,
                        corpusSigs: DataFrame, tauNum: Int, tauDen: Int,
                        broadcastSigs: Boolean): DataFrame = {
-    graft.functions.GraftFunctions.register(batchSh.sparkSession)
     val bSizes = batchSh.groupBy(col("doc")).agg(count(lit(1)).as("n_sh"))
     // candidate dedup deferred to AFTER the τ filter, exactly as in
     // [[pairsFromPrefixIndex]] (r14): a pair repeats once per shared
@@ -426,7 +419,7 @@ object Dedup {
       .join(hint(corpusSigs.select(col("doc").as("id_b"), col("hs").as("hb"))),
         "id_b")
       .select(col("id_a"), col("id_b"),
-        call_function("graft_sorted_intersect_count",
+        graft.functions.GraftFunctions.sortedIntersectCount(
           col("ha"), col("hb")).as("n_inter"),
         size(col("ha")).cast("long").as("n_a"),
         size(col("hb")).cast("long").as("n_b"))
@@ -468,10 +461,9 @@ object Dedup {
     */
   def minhashSignature(df: DataFrame, id: Column, text: Column,
                        k: Int = 64, n: Int = 3): DataFrame = {
-    graft.functions.GraftFunctions.register(df.sparkSession)
     df.select(id.as("doc"), TextOps.words(text).as("w"))
       .select(col("doc"),
-        call_function("graft_minhash", shinglesOfWords(col("w"), n), lit(k)).as("sig"))
+        graft.functions.GraftFunctions.minhashSignature(shinglesOfWords(col("w"), n), k).as("sig"))
   }
 
   /** Candidate pairing over exploded (doc, band, bucket) rows: cap each
@@ -509,14 +501,13 @@ object Dedup {
     */
   def lshCandidates(df: DataFrame, id: Column, text: Column,
                     n: Int = 3, maxBucket: Long = 1000L): DataFrame = {
-    graft.functions.GraftFunctions.register(df.sparkSession)
     val exploded = df.select(id.as("doc"), TextOps.words(text).as("w"))
       // docs with no shingles (< n words) would all share the identical
       // empty-set signature and bucket together quadratically — exclude
       // them up front (they cannot be near-dups of anything by content)
       .filter(size(col("w")) >= n)
       .select(col("doc"),
-        posexplode(call_function("graft_minhash_bands", shinglesOfWords(col("w"), n))))
+        posexplode(graft.functions.GraftFunctions.minhashBands(shinglesOfWords(col("w"), n))))
       .withColumnRenamed("pos", "band").withColumnRenamed("col", "bucket")
     bandPairs(exploded, maxBucket)
   }
@@ -544,12 +535,11 @@ object Dedup {
     * every hash-graded oracle value is unchanged.
     */
   private def verifiedJaccard(cands: DataFrame, sets: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(cands.sparkSession)
     cands
       .join(sets.select(col("doc").as("id_a"), col("sh_arr").as("sh_a")), "id_a")
       .join(sets.select(col("doc").as("id_b"), col("sh_arr").as("sh_b")), "id_b")
       .withColumn("inter",
-        call_function("graft_sorted_intersect_count", col("sh_a"), col("sh_b")))
+        graft.functions.GraftFunctions.sortedIntersectCount(col("sh_a"), col("sh_b")))
       .select(col("id_a"), col("id_b"),
         (col("inter").cast("double") /
           (size(col("sh_a")) + size(col("sh_b")) - col("inter")).cast("double"))
@@ -567,7 +557,7 @@ object Dedup {
     */
   private[graft] def bandRows(sets: DataFrame): DataFrame =
     sets.select(col("doc"),
-        posexplode(call_function("graft_minhash_bands", col("sh_arr"))))
+        posexplode(graft.functions.GraftFunctions.minhashBands(col("sh_arr"))))
       .withColumnRenamed("pos", "band").withColumnRenamed("col", "bucket")
 
   /** The staged band-hash table: (doc, band, bucket), one row per band
@@ -575,7 +565,6 @@ object Dedup {
     */
   def lshBandTable(df: DataFrame, id: Column, text: Column,
                    n: Int = 3): DataFrame = {
-    graft.functions.GraftFunctions.register(df.sparkSession)
     bandRows(shingleSets(df, id, text, n))
   }
 
@@ -588,7 +577,6 @@ object Dedup {
     */
   def minhashNearDups(df: DataFrame, id: Column, text: Column,
                       n: Int = 3, maxBucket: Long = 1000L): DataFrame = {
-    graft.functions.GraftFunctions.register(df.sparkSession)
     // ONE tokenize+shingle pass for both the banding and the verify:
     // exploded shingle rows (the Generate barrier keeps words
     // materialized) re-assemble into per-doc sets, and the band hashes
@@ -650,7 +638,6 @@ object Dedup {
     */
   def contamination(df: DataFrame, id: Column, text: Column,
                     evalPred: Column, n: Int = 3): DataFrame = {
-    graft.functions.GraftFunctions.register(df.sparkSession)
     val sh = df.select(id.as("doc"), evalPred.as("is_eval"),
         TextOps.words(text).as("w"))
       .select(col("doc"), col("is_eval"),
@@ -682,7 +669,6 @@ object Dedup {
   def contaminationBloom(df: DataFrame, id: Column, text: Column,
                          evalPred: Column, n: Int = 3,
                          fpp: Double = 0.001): DataFrame = {
-    graft.functions.GraftFunctions.register(df.sparkSession)
     val sh = df.select(id.as("doc"), evalPred.as("is_eval"),
         TextOps.words(text).as("w"))
       .select(col("doc"), col("is_eval"),
@@ -702,7 +688,7 @@ object Dedup {
       bos.toByteArray
     }
     sh.filter(!col("is_eval"))
-      .filter(call_function("graft_might_contain", lit(bytes), col("s")))
+      .filter(graft.functions.GraftFunctions.mightContain(lit(bytes), col("s")))
       .groupBy("doc").agg(count(lit(1)).as("n_maybe_shared"))
   }
 
@@ -844,7 +830,6 @@ object Dedup {
     */
   def crossDocDupRatio(df: DataFrame, id: Column, text: Column,
                        n: Int = 8): DataFrame = {
-    graft.functions.GraftFunctions.register(df.sparkSession)
     val grams = df.select(id.as("doc"), TextOps.words(text).as("w"))
       .select(col("doc"), explode(gramsOfWords(col("w"), n)).as("gram"))
     val perDoc = grams.groupBy("doc", "gram").agg(count(lit(1)).as("m"))
@@ -864,7 +849,6 @@ object Dedup {
     */
   private def positionalGrams(df: DataFrame, id: Column, text: Column,
                               n: Int): DataFrame = {
-    graft.functions.GraftFunctions.register(df.sparkSession)
     df.select(id.as("doc"), TextOps.words(text).as("w"))
       .select(col("doc"), posexplode(gramsOfWords(col("w"), n)))
       .select(col("doc"), (col("pos") + 1).as("i"), col("col").as("gram"))

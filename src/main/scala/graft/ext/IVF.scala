@@ -3,7 +3,7 @@ package graft.ext
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import Similarity.dotNative
+import Similarity.dot
 
 /** IVF (inverted-file) approximate nearest-neighbor search: coarse-quantize
   * vectors into k cells via a small k-means, then search only the `nprobe`
@@ -59,8 +59,6 @@ object IVF {
   private[graft] def kmeansCentroidsInit(emb: DataFrame, id: String, vec: String,
                                          k: Int, iters: Int,
                                          spreadInit: Boolean): DataFrame = {
-    val spark = emb.sparkSession
-    graft.functions.GraftFunctions.register(spark)
     val v = emb.select(col(id).as("vid"), col(vec).cast("array<double>").as("v"))
     val seedOrder =
       if (spreadInit) Seq(xxhash64(col("vid")), col("vid")) else Seq(col("vid"))
@@ -85,7 +83,6 @@ object IVF {
     */
   def kmeansRefine(emb: DataFrame, id: String, vec: String,
                    init: DataFrame, iters: Int = 1): DataFrame = {
-    graft.functions.GraftFunctions.register(emb.sparkSession)
     lloydRounds(
       emb.select(col(id).as("vid"), col(vec).cast("array<double>").as("v")),
       init.select(col("cell").cast("int").as("cell"), col("c")), iters)
@@ -147,7 +144,6 @@ object IVF {
     */
   def assignTable(emb: DataFrame, id: String, vec: String,
                   cells: Int = 8, iters: Int = 3): DataFrame = {
-    graft.functions.GraftFunctions.register(emb.sparkSession)
     val centroids = kmeansCentroids(emb, id, vec, cells, iters)
     assignCells(
       emb.select(col(id).as("vid"), col(vec).cast("array<double>").as("v")),
@@ -204,7 +200,6 @@ object IVF {
   def refreshAssignment(emb: DataFrame, id: String, vec: String,
                         oldCentroids: DataFrame,
                         newCentroids: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(emb.sparkSession)
     emb.select(col(id).as("vid"), col(vec).cast("array<double>").as("v"))
       .select(col("vid"),
         nearestCellExpr(oldCentroids, col("v")).as("cell_old"),
@@ -219,10 +214,9 @@ object IVF {
     * expression as literals — the established k-row-collect discipline.
     */
   private def nearestCellExpr(centroids: DataFrame, v: Column): Column = {
-    graft.functions.GraftFunctions.register(centroids.sparkSession)
     val rows = centroids.select(col("cell").cast("int"), col("c")).collect()
       .map(r => (r.getInt(0), r.getSeq[Double](1))).sortBy(_._1)
-    call_function("graft_nearest_cell", v,
+    graft.functions.GraftFunctions.nearestCell(v,
       typedLit(rows.map(_._1).toSeq),
       typedLit(rows.map(_._2).toSeq))
   }
@@ -231,8 +225,8 @@ object IVF {
     * suite pins [[assignCells]]'s native kernel against (IVFSkewSpec).
     */
   private[graft] def assignCellsViaJoin(v: DataFrame, centroids: DataFrame): DataFrame = {
-    val d2 = dotNative(col("v"), col("v")) - lit(2.0) * dotNative(col("v"), col("c")) +
-      dotNative(col("c"), col("c"))
+    val d2 = dot(col("v"), col("v")) - lit(2.0) * dot(col("v"), col("c")) +
+      dot(col("c"), col("c"))
     v.crossJoin(broadcast(centroids))
       .withColumn("d2", d2)
       .groupBy(col("vid"))
@@ -247,7 +241,6 @@ object IVF {
   def ivfTopK(emb: DataFrame, id: String, vec: String, queryPred: Column,
               k: Int = 5, cells: Int = 8, nprobe: Int = 2,
               iters: Int = 3): DataFrame = {
-    graft.functions.GraftFunctions.register(emb.sparkSession)
     val centroids = kmeansCentroids(emb, id, vec, cells, iters)
     val v = emb.select(col(id).as("vid"), col(vec).cast("array<double>").as("v"))
     ivfTopKWith(centroids, assignCells(v, centroids),
@@ -263,8 +256,8 @@ object IVF {
     */
   def ivfTopKWith(centroids: DataFrame, assigned: DataFrame, q: DataFrame,
                   k: Int, nprobe: Int): DataFrame = {
-    val dq = dotNative(col("q_vec"), col("q_vec")) - lit(2.0) * dotNative(col("q_vec"), col("c")) +
-      dotNative(col("c"), col("c"))
+    val dq = dot(col("q_vec"), col("q_vec")) - lit(2.0) * dot(col("q_vec"), col("c")) +
+      dot(col("c"), col("c"))
     val wp = Window.partitionBy("q_id").orderBy(col("d2"), col("cell"))
     val probes = q.crossJoin(broadcast(centroids))
       .withColumn("d2", dq)
@@ -275,12 +268,12 @@ object IVF {
     // candidates = vectors in probed cells; exact cosine rank. Norms are
     // computed once per side BEFORE the join (per-pair norm folds would
     // double the ranking cost — the posture Similarity documents).
-    val assignedN = assigned.withColumn("v_norm", sqrt(dotNative(col("v"), col("v"))))
-    val probesN   = probes.withColumn("q_norm", sqrt(dotNative(col("q_vec"), col("q_vec"))))
+    val assignedN = assigned.withColumn("v_norm", sqrt(dot(col("v"), col("v"))))
+    val probesN   = probes.withColumn("q_norm", sqrt(dot(col("q_vec"), col("q_vec"))))
     val cands = probesN.join(assignedN, "cell")
       .filter(col("vid") =!= col("q_id"))
     val cos = round(
-      dotNative(col("q_vec"), col("v")) / (col("q_norm") * col("v_norm")), 6)
+      dot(col("q_vec"), col("v")) / (col("q_norm") * col("v_norm")), 6)
     val wr = Window.partitionBy("q_id").orderBy(col("cos").desc, col("vid"))
     cands.withColumn("cos", cos)
       .withColumn("rn", row_number().over(wr))
@@ -329,7 +322,6 @@ object IVF {
   private[graft] def twoLevelModel(emb: DataFrame, id: String, vec: String,
                                    k1: Int, k2: Int, iters: Int)
       : (DataFrame, DataFrame, DataFrame) = {
-    graft.functions.GraftFunctions.register(emb.sparkSession)
     val v = emb.select(col(id).as("vid"), col(vec).cast("array<double>").as("v"))
     val l1 = kmeansCentroids(emb, id, vec, k1, iters)
     // residuals against the OWN cell's centroid: one broadcast join with
@@ -383,9 +375,9 @@ object IVF {
   private[graft] def ivf2TopKWith(l1: DataFrame, l2: DataFrame,
                                   assigned: DataFrame, q: DataFrame,
                                   k: Int, nprobe1: Int, nprobe2: Int): DataFrame = {
-    val d1 = dotNative(col("q_vec"), col("q_vec")) -
-      lit(2.0) * dotNative(col("q_vec"), col("c")) +
-      dotNative(col("c"), col("c"))
+    val d1 = dot(col("q_vec"), col("q_vec")) -
+      lit(2.0) * dot(col("q_vec"), col("c")) +
+      dot(col("c"), col("c"))
     val w1 = Window.partitionBy("q_id").orderBy(col("d2"), col("cell"))
     val probes1 = q.crossJoin(broadcast(l1))
       .withColumn("d2", d1)
@@ -393,9 +385,9 @@ object IVF {
       .filter(col("rn") <= nprobe1)
       .select(col("q_id"), col("q_vec"), col("cell").as("cell1"),
         zip_with(col("q_vec"), col("c"), (a, b) => a - b).as("rq"))
-    val d2c = dotNative(col("rq"), col("rq")) -
-      lit(2.0) * dotNative(col("rq"), col("c")) +
-      dotNative(col("c"), col("c"))
+    val d2c = dot(col("rq"), col("rq")) -
+      lit(2.0) * dot(col("rq"), col("c")) +
+      dot(col("c"), col("c"))
     val w2 = Window.partitionBy("q_id", "cell1").orderBy(col("d2"), col("cell"))
     val probes = probes1.crossJoin(broadcast(l2))
       .withColumn("d2", d2c)
@@ -403,12 +395,12 @@ object IVF {
       .filter(col("rn") <= nprobe2)
       .select(col("q_id"), col("q_vec"), col("cell1"), col("cell").as("cell2"))
 
-    val assignedN = assigned.withColumn("v_norm", sqrt(dotNative(col("v"), col("v"))))
-    val probesN = probes.withColumn("q_norm", sqrt(dotNative(col("q_vec"), col("q_vec"))))
+    val assignedN = assigned.withColumn("v_norm", sqrt(dot(col("v"), col("v"))))
+    val probesN = probes.withColumn("q_norm", sqrt(dot(col("q_vec"), col("q_vec"))))
     val cands = probesN.join(assignedN, Seq("cell1", "cell2"))
       .filter(col("vid") =!= col("q_id"))
     val cos = round(
-      dotNative(col("q_vec"), col("v")) / (col("q_norm") * col("v_norm")), 6)
+      dot(col("q_vec"), col("v")) / (col("q_norm") * col("v_norm")), 6)
     val wr = Window.partitionBy("q_id").orderBy(col("cos").desc, col("vid"))
     cands.withColumn("cos", cos)
       .withColumn("rn", row_number().over(wr))

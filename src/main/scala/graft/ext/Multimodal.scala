@@ -163,10 +163,8 @@ object Multimodal {
     // sqrt(Σs²/n) double; empty data sections vanish exactly like the
     // old `ns > 0` filter (empty array explodes to no rows).
     // MultimodalSpec pins parity against the explode formulation.
-    graft.functions.GraftFunctions.register(df.sparkSession)
     df.select(id.as("id"),
-        explode(call_function("graft_pcm16_frames", media,
-          lit(frameSamples))).as("f"))
+        explode(graft.functions.GraftFunctions.pcm16Frames(media, frameSamples)).as("f"))
       .select(col("id"), col("f.frame").as("frame"),
         col("f.n").as("n_samples"),
         sqrt(col("f.sumsq").cast("double") / col("f.n").cast("double"))
@@ -200,7 +198,6 @@ object Multimodal {
     // same long/long→double division the sum/count form produced. Clips
     // with ns ≤ 1 return a null struct and are filtered exactly like the
     // old `__ns > 1` gate. MultimodalSpec pins parity.
-    graft.functions.GraftFunctions.register(df.sparkSession)
     // gate on the header-derived sample count, NOT isnotnull(kernel): a
     // kernel-valued filter gets pushed below the projection and the
     // expression is then evaluated twice per row (once in the Filter,
@@ -211,7 +208,7 @@ object Multimodal {
     df.select(id.as("id"), media.as("__m"), ns.as("__ns"))
       .filter(col("__ns") > 1)
       .select(col("id"),
-        call_function("graft_pcm16_zcr", col("__m")).as("z"))
+        graft.functions.GraftFunctions.pcm16Zcr(col("__m")).as("z"))
       .select(col("id"), col("z.n_samples").as("n_samples"),
         col("z.crossings").as("crossings"),
         (col("z.crossings").cast("double") /
@@ -233,13 +230,12 @@ object Multimodal {
     // kernel returns (n_deltas, max |Δ|, Σ|Δ|) as exact longs; mean and
     // delta_bits are the same long→double division and length(bin(max))
     // the aggregate produced. MultimodalSpec pins parity.
-    graft.functions.GraftFunctions.register(df.sparkSession)
     // header-derived gate, not isnotnull(kernel) — see wavZeroCrossings
     val ns = (leInt(media, 41, 4) / lit(2)).cast("long")
     df.select(id.as("id"), media.as("__m"), ns.as("__ns"))
       .filter(col("__ns") > 1)
       .select(col("id"),
-        call_function("graft_pcm16_delta", col("__m")).as("d"))
+        graft.functions.GraftFunctions.pcm16Delta(col("__m")).as("d"))
       .select(col("id"), col("d.n_deltas").as("n_deltas"),
         col("d.max_abs").as("max_abs_delta"),
         (col("d.sum_abs").cast("double") /

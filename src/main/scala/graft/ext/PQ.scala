@@ -3,7 +3,7 @@ package graft.ext
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import Similarity.dotNative
+import Similarity.dot
 
 /** Product quantization (PQ) for embedding columns — the third ANN scale
   * path alongside RP-LSH (Similarity.annTopK) and IVF (IVF.ivfTopK), and
@@ -86,7 +86,7 @@ object PQ {
     cb.groupBy(_._1).toSeq.sortBy(_._1)
       .foldLeft(lit(null).cast("int")) { case (acc, (s, rows)) =>
         val sorted = rows.sortBy(_._2)
-        when(sub === s, call_function("graft_nearest_cell", subv,
+        when(sub === s, graft.functions.GraftFunctions.nearestCell(subv,
           typedLit(sorted.map(_._2).toSeq),
           typedLit(sorted.map(_._3.toSeq).toSeq))).otherwise(acc)
       }
@@ -100,7 +100,7 @@ object PQ {
     cb.groupBy(_._1).toSeq.sortBy(_._1)
       .foldLeft(lit(null).cast("double")) { case (acc, (s, rows)) =>
         val sorted = rows.sortBy(_._2)
-        when(sub === s, call_function("graft_nearest_cell_dist", subv,
+        when(sub === s, graft.functions.GraftFunctions.nearestCellDist(subv,
           typedLit(sorted.map(_._2).toSeq),
           typedLit(sorted.map(_._3.toSeq).toSeq))).otherwise(acc)
       }
@@ -110,7 +110,6 @@ object PQ {
     */
   private def assignCodesKernel(subs: DataFrame,
                                 cb: Array[(Int, Int, Array[Double])]): DataFrame = {
-    graft.functions.GraftFunctions.register(subs.sparkSession)
     subs.select(col("vid"), col("sub"),
       kernelCellExpr(cb, col("sub"), col("subv")).as("cell"), col("subv"))
   }
@@ -128,8 +127,8 @@ object PQ {
     * suite pins the kernel against — the IVF.assignCellsViaJoin role.
     */
   private[ext] def assignCodes(subs: DataFrame, cb: DataFrame): DataFrame = {
-    val d2 = dotNative(col("subv"), col("subv")) -
-      lit(2.0) * dotNative(col("subv"), col("c")) + dotNative(col("c"), col("c"))
+    val d2 = dot(col("subv"), col("subv")) -
+      lit(2.0) * dot(col("subv"), col("c")) + dot(col("c"), col("c"))
     subs.join(broadcast(cb), "sub")
       .withColumn("d2", d2)
       .groupBy(col("vid"), col("sub"))
@@ -208,7 +207,6 @@ object PQ {
   /** Train the m per-subspace codebooks: (sub, cell, c), m·k rows. */
   def codebooks(emb: DataFrame, id: String, vec: String,
                 m: Int = 8, k: Int = 16, iters: Int = 2): DataFrame = {
-    graft.functions.GraftFunctions.register(emb.sparkSession)
     val v = emb.select(col(id).as("vid"), col(vec).cast("array<double>").as("v"))
     trainCodebooks(subRows(v, m).localCheckpoint(), v, m, k, iters,
       keepAssign = false)._1
@@ -230,7 +228,6 @@ object PQ {
     */
   def encode(emb: DataFrame, id: String, vec: String, cb: DataFrame,
              m: Int = 8): DataFrame = {
-    graft.functions.GraftFunctions.register(emb.sparkSession)
     val v = emb.select(col(id).as("vid"), col(vec).cast("array<double>").as("v"))
     // kernel assignment (map-only; the codebook is a ≤d·kc-double driver
     // pull — the k-row-collect discipline) + the per-vid pack. The pack's
@@ -255,7 +252,6 @@ object PQ {
     */
   def distortionBySubspace(emb: DataFrame, id: String, vec: String,
                            cb: DataFrame, m: Int = 8): DataFrame = {
-    graft.functions.GraftFunctions.register(emb.sparkSession)
     val v = emb.select(col(id).as("vid"), col(vec).cast("array<double>").as("v"))
     // winning distance straight from the native kernel
     // (graft_nearest_cell_dist — same float chain and (d2, cell)
@@ -280,7 +276,6 @@ object PQ {
   def adcTopK(emb: DataFrame, id: String, vec: String, queryPred: Column,
               k: Int = 5, m: Int = 8, kc: Int = 16, iters: Int = 2,
               rerank: Int = 4): DataFrame = {
-    graft.functions.GraftFunctions.register(emb.sparkSession)
     val v = emb.select(col(id).as("vid"), col(vec).cast("array<double>").as("v"))
     // the exploded sub-vector rows feed every training iteration —
     // materialize once (multi-consumer scan rule, SCALE.md)
@@ -300,10 +295,10 @@ object PQ {
       .select(col("vid").as("q_id"), col("sub"), col("subv").as("qs"))
     val lut = qsubs.join(cb, "sub")
       .select(col("q_id"), col("sub"), col("cell"),
-        dotNative(col("qs"), col("c")).as("qd"),
-        dotNative(col("c"), col("c")).as("cc"))
+        dot(col("qs"), col("c")).as("qd"),
+        dot(col("c"), col("c")).as("cc"))
     val qn = q.select(col("q_id"),
-      sqrt(dotNative(col("q_vec"), col("q_vec"))).as("q_norm"), col("q_vec"))
+      sqrt(dot(col("q_vec"), col("q_vec"))).as("q_norm"), col("q_vec"))
 
     // ADC scan: code rows ⋈ broadcast LUT on (sub, cell); partial sums
     // combine map-side so the shuffle carries (q, vid) partials
@@ -319,11 +314,11 @@ object PQ {
       .select(col("q_id"), col("vid"))
 
     // exact re-rank of the shortlist only
-    val vn = v.withColumn("v_norm", sqrt(dotNative(col("v"), col("v"))))
+    val vn = v.withColumn("v_norm", sqrt(dot(col("v"), col("v"))))
     val wExact = Window.partitionBy("q_id").orderBy(col("cos").desc, col("vid"))
     shortlist.join(vn, "vid").join(broadcast(qn), "q_id")
       .withColumn("cos", round(
-        dotNative(col("q_vec"), col("v")) / (col("q_norm") * col("v_norm")), 6))
+        dot(col("q_vec"), col("v")) / (col("q_norm") * col("v_norm")), 6))
       .withColumn("rn", row_number().over(wExact))
       .filter(col("rn") <= k)
       .select(col("q_id"), col("vid").as("c_id"), col("cos"),
@@ -342,7 +337,6 @@ object PQ {
   def adcTopKFromIndex(emb: DataFrame, id: String, vec: String,
                        queryPred: Column, cb: DataFrame, codes: DataFrame,
                        k: Int = 5, m: Int = 8, rerank: Int = 4): DataFrame = {
-    graft.functions.GraftFunctions.register(emb.sparkSession)
     val v = emb.select(col(id).as("vid"), col(vec).cast("array<double>").as("v"))
     val codeRows = codes.select(col("vid"), posexplode(col("codes")))
       .select(col("vid"), col("pos").as("sub"), col("col").as("cell"))
@@ -353,10 +347,10 @@ object PQ {
       .select(col("vid").as("q_id"), col("sub"), col("subv").as("qs"))
     val lut = qsubs.join(cb, "sub")
       .select(col("q_id"), col("sub"), col("cell"),
-        dotNative(col("qs"), col("c")).as("qd"),
-        dotNative(col("c"), col("c")).as("cc"))
+        dot(col("qs"), col("c")).as("qd"),
+        dot(col("c"), col("c")).as("cc"))
     val qn = q.select(col("q_id"),
-      sqrt(dotNative(col("q_vec"), col("q_vec"))).as("q_norm"), col("q_vec"))
+      sqrt(dot(col("q_vec"), col("q_vec"))).as("q_norm"), col("q_vec"))
 
     val wApprox = Window.partitionBy("q_id").orderBy(col("approx_cos").desc, col("vid"))
     val shortlist = codeRows.join(broadcast(lut), Seq("sub", "cell"))
@@ -369,11 +363,11 @@ object PQ {
       .filter(col("arn") <= k * rerank)
       .select(col("q_id"), col("vid"))
 
-    val vn = v.withColumn("v_norm", sqrt(dotNative(col("v"), col("v"))))
+    val vn = v.withColumn("v_norm", sqrt(dot(col("v"), col("v"))))
     val wExact = Window.partitionBy("q_id").orderBy(col("cos").desc, col("vid"))
     shortlist.join(vn, "vid").join(broadcast(qn), "q_id")
       .withColumn("cos", round(
-        dotNative(col("q_vec"), col("v")) / (col("q_norm") * col("v_norm")), 6))
+        dot(col("q_vec"), col("v")) / (col("q_norm") * col("v_norm")), 6))
       .withColumn("rn", row_number().over(wExact))
       .filter(col("rn") <= k)
       .select(col("q_id"), col("vid").as("c_id"), col("cos"),
@@ -397,7 +391,6 @@ object PQ {
                  k: Int = 5, cells: Int = 8, nprobe: Int = 2, ivfIters: Int = 3,
                  m: Int = 8, kc: Int = 16, pqIters: Int = 2,
                  rerank: Int = 4, trainFrac: Int = 1): DataFrame = {
-    graft.functions.GraftFunctions.register(emb.sparkSession)
     val v = emb.select(col(id).as("vid"), col(vec).cast("array<double>").as("v"))
     // both quantizers are ESTIMATORS (their outputs are averages): a
     // deterministic 1/trainFrac hash-sample saturates them long before
@@ -441,8 +434,8 @@ object PQ {
 
     val q = emb.filter(queryPred)
       .select(col(id).as("q_id"), col(vec).cast("array<double>").as("q_vec"))
-    val dq = dotNative(col("q_vec"), col("q_vec")) -
-      lit(2.0) * dotNative(col("q_vec"), col("c")) + dotNative(col("c"), col("c"))
+    val dq = dot(col("q_vec"), col("q_vec")) -
+      lit(2.0) * dot(col("q_vec"), col("c")) + dot(col("c"), col("c"))
     val wp = Window.partitionBy("q_id").orderBy(col("d2"), col("cell"))
     val probes = q.crossJoin(broadcast(centroids))
       .withColumn("d2", dq)
@@ -458,10 +451,10 @@ object PQ {
       .select(col("vid").as("q_id"), col("sub"), col("subv").as("qs"))
     val lut = qsubs.join(cb, "sub")
       .select(col("q_id"), col("sub"), col("cell"),
-        dotNative(col("qs"), col("c")).as("qd"),
-        dotNative(col("c"), col("c")).as("cc"))
+        dot(col("qs"), col("c")).as("qd"),
+        dot(col("c"), col("c")).as("cc"))
     val qn = q.select(col("q_id"),
-      sqrt(dotNative(col("q_vec"), col("q_vec"))).as("q_norm"), col("q_vec"))
+      sqrt(dot(col("q_vec"), col("q_vec"))).as("q_norm"), col("q_vec"))
 
     // ADC over the probed-cell candidates only: the cell restriction rides
     // the (vid → q_id) join, the LUT lookup keys on (q_id, sub, cell)
@@ -476,11 +469,11 @@ object PQ {
       .filter(col("arn") <= k * rerank)
       .select(col("q_id"), col("vid"))
 
-    val vn = v.withColumn("v_norm", sqrt(dotNative(col("v"), col("v"))))
+    val vn = v.withColumn("v_norm", sqrt(dot(col("v"), col("v"))))
     val wExact = Window.partitionBy("q_id").orderBy(col("cos").desc, col("vid"))
     shortlist.join(vn, "vid").join(broadcast(qn), "q_id")
       .withColumn("cos", round(
-        dotNative(col("q_vec"), col("v")) / (col("q_norm") * col("v_norm")), 6))
+        dot(col("q_vec"), col("v")) / (col("q_norm") * col("v_norm")), 6))
       .withColumn("rn", row_number().over(wExact))
       .filter(col("rn") <= k)
       .select(col("q_id"), col("vid").as("c_id"), col("cos"),
@@ -510,12 +503,11 @@ object PQ {
                           codesByCell: DataFrame, cb: DataFrame,
                           k: Int = 5, nprobe: Int = 2, m: Int = 8,
                           rerank: Int = 4): DataFrame = {
-    graft.functions.GraftFunctions.register(emb.sparkSession)
     val v = emb.select(col(id).as("vid"), col(vec).cast("array<double>").as("v"))
     val q = emb.filter(queryPred)
       .select(col(id).as("q_id"), col(vec).cast("array<double>").as("q_vec"))
-    val dq = dotNative(col("q_vec"), col("q_vec")) -
-      lit(2.0) * dotNative(col("q_vec"), col("c")) + dotNative(col("c"), col("c"))
+    val dq = dot(col("q_vec"), col("q_vec")) -
+      lit(2.0) * dot(col("q_vec"), col("c")) + dot(col("c"), col("c"))
     val wp = Window.partitionBy("q_id").orderBy(col("d2"), col("cell"))
     val probes = q.crossJoin(broadcast(centroids))
       .withColumn("d2", dq)
@@ -543,10 +535,10 @@ object PQ {
       .select(col("vid").as("q_id"), col("sub"), col("subv").as("qs"))
     val lut = qsubs.join(cb, "sub")
       .select(col("q_id"), col("sub"), col("cell"),
-        dotNative(col("qs"), col("c")).as("qd"),
-        dotNative(col("c"), col("c")).as("cc"))
+        dot(col("qs"), col("c")).as("qd"),
+        dot(col("c"), col("c")).as("cc"))
     val qn = q.select(col("q_id"),
-      sqrt(dotNative(col("q_vec"), col("q_vec"))).as("q_norm"), col("q_vec"))
+      sqrt(dot(col("q_vec"), col("q_vec"))).as("q_norm"), col("q_vec"))
 
     val wApprox = Window.partitionBy("q_id").orderBy(col("approx_cos").desc, col("vid"))
     val shortlist = codeRows.join(broadcast(lut), Seq("q_id", "sub", "cell"))
@@ -558,11 +550,11 @@ object PQ {
       .filter(col("arn") <= k * rerank)
       .select(col("q_id"), col("vid"))
 
-    val vn = v.withColumn("v_norm", sqrt(dotNative(col("v"), col("v"))))
+    val vn = v.withColumn("v_norm", sqrt(dot(col("v"), col("v"))))
     val wExact = Window.partitionBy("q_id").orderBy(col("cos").desc, col("vid"))
     shortlist.join(vn, "vid").join(broadcast(qn), "q_id")
       .withColumn("cos", round(
-        dotNative(col("q_vec"), col("v")) / (col("q_norm") * col("v_norm")), 6))
+        dot(col("q_vec"), col("v")) / (col("q_norm") * col("v_norm")), 6))
       .withColumn("rn", row_number().over(wExact))
       .filter(col("rn") <= k)
       .select(col("q_id"), col("vid").as("c_id"), col("cos"),
@@ -600,7 +592,6 @@ object PQ {
     */
   def residualTable(emb: DataFrame, id: String, vec: String,
                     centroids: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(emb.sparkSession)
     val v = emb.select(col(id).as("vid"), col(vec).cast("array<double>").as("v"))
     IVF.assignCells(v, centroids)
       .join(broadcast(centroids), "cell")
@@ -641,7 +632,7 @@ object PQ {
         col("subv").as("cs"))
     csubs.join(cb, "sub")
       .select(col("ccell"), col("sub"), col("cell"),
-        dotNative(col("cs"), col("c")).as("cd"))
+        dot(col("cs"), col("c")).as("cd"))
   }
 
   /** IVF-PQ with RESIDUAL encoding — [[ivfAdcTopK]]'s pipeline with the
@@ -656,7 +647,6 @@ object PQ {
                          nprobe: Int = 2, ivfIters: Int = 3, m: Int = 8,
                          kc: Int = 16, pqIters: Int = 2,
                          rerank: Int = 4): DataFrame = {
-    graft.functions.GraftFunctions.register(emb.sparkSession)
     val v = emb.select(col(id).as("vid"), col(vec).cast("array<double>").as("v"))
     val centroids = IVF.kmeansCentroids(emb, id, vec, cells, ivfIters)
     // residuals feed pqIters training passes AND the code assignment —
@@ -671,8 +661,8 @@ object PQ {
 
     val q = emb.filter(queryPred)
       .select(col(id).as("q_id"), col(vec).cast("array<double>").as("q_vec"))
-    val dq = dotNative(col("q_vec"), col("q_vec")) -
-      lit(2.0) * dotNative(col("q_vec"), col("c")) + dotNative(col("c"), col("c"))
+    val dq = dot(col("q_vec"), col("q_vec")) -
+      lit(2.0) * dot(col("q_vec"), col("c")) + dot(col("c"), col("c"))
     val wp = Window.partitionBy("q_id").orderBy(col("d2"), col("cell"))
     // the probe ranking already touches every (q, centroid) pair, so the
     // per-probed-cell cosine terms (q·c₁, ‖c₁‖²) ride out of it for free
@@ -681,8 +671,8 @@ object PQ {
       .withColumn("rn", row_number().over(wp))
       .filter(col("rn") <= nprobe)
       .select(col("q_id"), col("cell").as("ccell"),
-        dotNative(col("q_vec"), col("c")).as("qc1"),
-        dotNative(col("c"), col("c")).as("cn2"))
+        dot(col("q_vec"), col("c")).as("qc1"),
+        dot(col("c"), col("c")).as("cn2"))
     val cands = coarse
       .join(broadcast(probes.select(col("q_id"), col("ccell"))), "ccell")
       .filter(col("vid") =!= col("q_id"))
@@ -694,14 +684,14 @@ object PQ {
       .select(col("vid").as("q_id"), col("sub"), col("subv").as("qs"))
     val lut = qsubs.join(cb, "sub")
       .select(col("q_id"), col("sub"), col("cell"),
-        dotNative(col("qs"), col("c")).as("qd"),
-        dotNative(col("c"), col("c")).as("cc"))
+        dot(col("qs"), col("c")).as("qd"),
+        dot(col("c"), col("c")).as("cc"))
     // centroid×codeword cross terms: cells·m·kc rows, query-independent —
     // the build-time artifact [[residualCrossTerms]] gives a stored
     // deployment (s45 persists it; here it derives in-query)
     val cterm = residualCrossTerms(centroids, cb, m)
     val qn = q.select(col("q_id"),
-      sqrt(dotNative(col("q_vec"), col("q_vec"))).as("q_norm"), col("q_vec"))
+      sqrt(dot(col("q_vec"), col("q_vec"))).as("q_norm"), col("q_vec"))
 
     // ‖v̂‖² = cn2 + n2_r is a squared norm, ≥ 0 in real arithmetic, but
     // float cancellation can drive the sum slightly negative — or to
@@ -726,11 +716,11 @@ object PQ {
       .filter(col("arn") <= k * rerank)
       .select(col("q_id"), col("vid"))
 
-    val vn = v.withColumn("v_norm", sqrt(dotNative(col("v"), col("v"))))
+    val vn = v.withColumn("v_norm", sqrt(dot(col("v"), col("v"))))
     val wExact = Window.partitionBy("q_id").orderBy(col("cos").desc, col("vid"))
     shortlist.join(vn, "vid").join(broadcast(qn), "q_id")
       .withColumn("cos", round(
-        dotNative(col("q_vec"), col("v")) / (col("q_norm") * col("v_norm")), 6))
+        dot(col("q_vec"), col("v")) / (col("q_norm") * col("v_norm")), 6))
       .withColumn("rn", row_number().over(wExact))
       .filter(col("rn") <= k)
       .select(col("q_id"), col("vid").as("c_id"), col("cos"),
@@ -760,12 +750,11 @@ object PQ {
                                   ctermByCell: DataFrame, k: Int = 5,
                                   nprobe: Int = 2, m: Int = 8,
                                   rerank: Int = 4): DataFrame = {
-    graft.functions.GraftFunctions.register(emb.sparkSession)
     val v = emb.select(col(id).as("vid"), col(vec).cast("array<double>").as("v"))
     val q = emb.filter(queryPred)
       .select(col(id).as("q_id"), col(vec).cast("array<double>").as("q_vec"))
-    val dq = dotNative(col("q_vec"), col("q_vec")) -
-      lit(2.0) * dotNative(col("q_vec"), col("c")) + dotNative(col("c"), col("c"))
+    val dq = dot(col("q_vec"), col("q_vec")) -
+      lit(2.0) * dot(col("q_vec"), col("c")) + dot(col("c"), col("c"))
     val wp = Window.partitionBy("q_id").orderBy(col("d2"), col("cell"))
     // probe scalars (q·c₁, ‖c₁‖²) ride the ranking, as in the in-query form
     val probes = q.crossJoin(broadcast(centroids))
@@ -773,8 +762,8 @@ object PQ {
       .withColumn("rn", row_number().over(wp))
       .filter(col("rn") <= nprobe)
       .select(col("q_id"), col("cell").as("ccell"),
-        dotNative(col("q_vec"), col("c")).as("qc1"),
-        dotNative(col("c"), col("c")).as("cn2"))
+        dot(col("q_vec"), col("c")).as("qc1"),
+        dot(col("c"), col("c")).as("cn2"))
     // ≤cells-row driver pull → literal PartitionFilters on both stored
     // scans (the s36 static-prune discipline; no checkpoint on `probes`
     // for the same no-driver-state-in-plan reason)
@@ -795,10 +784,10 @@ object PQ {
       .select(col("vid").as("q_id"), col("sub"), col("subv").as("qs"))
     val lut = qsubs.join(cb, "sub")
       .select(col("q_id"), col("sub"), col("cell"),
-        dotNative(col("qs"), col("c")).as("qd"),
-        dotNative(col("c"), col("c")).as("cc"))
+        dot(col("qs"), col("c")).as("qd"),
+        dot(col("c"), col("c")).as("cc"))
     val qn = q.select(col("q_id"),
-      sqrt(dotNative(col("q_vec"), col("q_vec"))).as("q_norm"), col("q_vec"))
+      sqrt(dot(col("q_vec"), col("q_vec"))).as("q_norm"), col("q_vec"))
 
     val wApprox = Window.partitionBy("q_id").orderBy(col("approx_cos").desc, col("vid"))
     val shortlist = candCodes
@@ -815,11 +804,11 @@ object PQ {
       .filter(col("arn") <= k * rerank)
       .select(col("q_id"), col("vid"))
 
-    val vn = v.withColumn("v_norm", sqrt(dotNative(col("v"), col("v"))))
+    val vn = v.withColumn("v_norm", sqrt(dot(col("v"), col("v"))))
     val wExact = Window.partitionBy("q_id").orderBy(col("cos").desc, col("vid"))
     shortlist.join(vn, "vid").join(broadcast(qn), "q_id")
       .withColumn("cos", round(
-        dotNative(col("q_vec"), col("v")) / (col("q_norm") * col("v_norm")), 6))
+        dot(col("q_vec"), col("v")) / (col("q_norm") * col("v_norm")), 6))
       .withColumn("rn", row_number().over(wExact))
       .filter(col("rn") <= k)
       .select(col("q_id"), col("vid").as("c_id"), col("cos"),

@@ -9,8 +9,8 @@ import org.apache.spark.sql.types.ArrayType
   * north-star ANN surface: brute-force cosine top-k as the exact baseline,
   * and a signed-random-projection LSH variant as the scale path.
   *
-  * All vector math is built-in HOFs (`zip_with` + `aggregate`) over arrays
-  * cast to double — sequential fold, bit-identical to DuckDB's
+  * All vector math is the native [[dot]] kernel over arrays cast to
+  * double — a sequential fold, bit-identical to DuckDB's
   * list_dot_product, so the exact queries hash-match the oracle without
   * tolerance. No UDFs.
   *
@@ -22,39 +22,26 @@ import org.apache.spark.sql.types.ArrayType
   */
 object Similarity {
 
-  /** Dot product of two double arrays — the public Column-level form.
-    * Built-in HOFs only (`zip_with` + `aggregate` left-to-right fold), so
-    * it works on ANY session with no registration prerequisite; this is
-    * also the exact formulation the DuckDB oracles mirror.
-    *
-    * The df-level operators below use [[dotNative]] instead (bit-identical,
-    * one fused codegen'd loop) — they can, because each entry point
-    * registers the function on its own session first.
+  /** Dot product of two double arrays: the native
+    * [[graft.functions.DotProduct]] kernel, one fused left-to-right loop.
+    * It needs no registration, so it works on any session. Bit-identical
+    * to [[dotHof]], including its null and length-mismatch semantics,
+    * and so to the DuckDB oracles' list_dot_product. Both inputs must
+    * already be array<double>: there is no implicit cast, so cast
+    * float or int embeddings first (analysis fails otherwise).
     */
-  def dot(a: Column, b: Column): Column = dotHof(a, b)
+  def dot(a: Column, b: Column): Column =
+    graft.functions.GraftFunctions.dotProduct(a, b)
 
-  /** Built-in-HOF reference formulation (what [[dotNative]] must keep
+  /** Built-in-HOF reference formulation (what [[dot]] must keep
     * matching bit-for-bit — DotProductSpec pins the equality).
     */
   def dotHof(a: Column, b: Column): Column =
     aggregate(zip_with(a, b, (x, y) => x * y), lit(0.0), (acc, x) => acc + x)
 
-  /** Native codegen'd [[graft.functions.DotProduct]] — bit-identical to
-    * [[dotHof]] including null/length-mismatch semantics, but one fused
-    * loop instead of an interpreted per-element lambda pair with a
-    * zip_with intermediate. REQUIRES `GraftFunctions.register` on the
-    * session (unresolved-routine error otherwise) — hence private to the
-    * engine: every df-level entry point here and in IVF registers first.
-    */
-  private[graft] def dotNative(a: Column, b: Column): Column =
-    call_function("graft_dot", a, b)
-
-  private def ensureRegistered(df: DataFrame): Unit =
-    graft.functions.GraftFunctions.register(df.sparkSession)
-
-  /** Cosine via dot/(sqrt(aa)·sqrt(bb)) — the exact formula the DuckDB
-    * oracle mirrors (term order matters for bit parity). Registration-free
-    * like [[dot]].
+  /** Cosine via dot/(sqrt(aa)·sqrt(bb)) over the native [[dot]] — the
+    * exact formula the DuckDB oracle mirrors (term order matters for bit
+    * parity). Like [[dot]], it takes array<double> inputs only.
     */
   def cosine(a: Column, b: Column): Column =
     dot(a, b) / (sqrt(dot(a, a)) * sqrt(dot(b, b)))
@@ -66,17 +53,16 @@ object Similarity {
     */
   def bruteForceTopK(emb: DataFrame, id: String, vec: String,
                      queryPred: Column, k: Int = 5): DataFrame = {
-    ensureRegistered(emb)
     val e = emb.select(col(id).as("c_id"), col(vec).cast("array<double>").as("c_vec"))
-      .withColumn("c_norm", sqrt(dotNative(col("c_vec"), col("c_vec"))))
+      .withColumn("c_norm", sqrt(dot(col("c_vec"), col("c_vec"))))
     val q = emb.filter(queryPred)
       .select(col(id).as("q_id"), col(vec).cast("array<double>").as("q_vec"))
-      .withColumn("q_norm", sqrt(dotNative(col("q_vec"), col("q_vec"))))
+      .withColumn("q_norm", sqrt(dot(col("q_vec"), col("q_vec"))))
     val w = Window.partitionBy("q_id").orderBy(col("cos").desc, col("c_id"))
     e.crossJoin(broadcast(q))
       .filter(col("q_id") =!= col("c_id"))
       .withColumn("cos",
-        round(dotNative(col("q_vec"), col("c_vec")) / (col("q_norm") * col("c_norm")), 6))
+        round(dot(col("q_vec"), col("c_vec")) / (col("q_norm") * col("c_norm")), 6))
       .withColumn("rn", row_number().over(w))
       .filter(col("rn") <= k)
       .select(col("q_id"), col("c_id"), col("cos"), col("rn").cast("int").as("rn"))
@@ -97,19 +83,18 @@ object Similarity {
     */
   def labelFilteredTopK(emb: DataFrame, id: String, vec: String,
                         queryPred: Column, k: Int = 5): DataFrame = {
-    ensureRegistered(emb)
     val c = emb.select(col(id).as("c_id"),
         col(vec).cast("array<double>").as("c_vec"), col("label"))
-      .withColumn("c_norm", sqrt(dotNative(col("c_vec"), col("c_vec"))))
+      .withColumn("c_norm", sqrt(dot(col("c_vec"), col("c_vec"))))
     val q = emb.filter(queryPred)
       .select(col(id).as("q_id"),
         col(vec).cast("array<double>").as("q_vec"), col("label"))
-      .withColumn("q_norm", sqrt(dotNative(col("q_vec"), col("q_vec"))))
+      .withColumn("q_norm", sqrt(dot(col("q_vec"), col("q_vec"))))
     val w = Window.partitionBy("q_id").orderBy(col("cos").desc, col("c_id"))
     c.join(broadcast(q), Seq("label"))
       .filter(col("q_id") =!= col("c_id"))
       .withColumn("cos",
-        round(dotNative(col("q_vec"), col("c_vec")) / (col("q_norm") * col("c_norm")), 6))
+        round(dot(col("q_vec"), col("c_vec")) / (col("q_norm") * col("c_norm")), 6))
       .withColumn("rn", row_number().over(w))
       .filter(col("rn") <= k)
       .select(col("q_id"), col("label"), col("c_id"), col("cos"),
@@ -131,17 +116,16 @@ object Similarity {
     */
   def contaminationAudit(emb: DataFrame, id: String, vec: String,
                          evalPred: Column, tau: Double): DataFrame = {
-    ensureRegistered(emb)
     val t = emb.filter(!evalPred)
       .select(col(id).as("t_id"), col(vec).cast("array<double>").as("t_vec"))
-      .withColumn("t_norm", sqrt(dotNative(col("t_vec"), col("t_vec"))))
+      .withColumn("t_norm", sqrt(dot(col("t_vec"), col("t_vec"))))
     val q = emb.filter(evalPred)
       .select(col(id).as("q_id"), col(vec).cast("array<double>").as("q_vec"))
-      .withColumn("q_norm", sqrt(dotNative(col("q_vec"), col("q_vec"))))
+      .withColumn("q_norm", sqrt(dot(col("q_vec"), col("q_vec"))))
     val w = Window.partitionBy("q_id").orderBy(col("cos").desc, col("t_id"))
     t.crossJoin(broadcast(q))
       .withColumn("cos",
-        round(dotNative(col("q_vec"), col("t_vec")) /
+        round(dot(col("q_vec"), col("t_vec")) /
           (col("q_norm") * col("t_norm")), 6))
       .withColumn("rn", row_number().over(w))
       .groupBy(col("q_id"))
@@ -180,15 +164,14 @@ object Similarity {
     */
   private def pairCosines(emb: DataFrame, id: String, vec: String,
                           pred: Column): DataFrame = {
-    ensureRegistered(emb)
     val e = emb.filter(pred)
       .select(col(id).as("v_id"), col(vec).cast("array<double>").as("v"))
-      .withColumn("n", sqrt(dotNative(col("v"), col("v"))))
+      .withColumn("n", sqrt(dot(col("v"), col("v"))))
     val a = e.select(col("v_id").as("id_a"), col("v").as("va"), col("n").as("na"))
     val b = e.select(col("v_id").as("id_b"), col("v").as("vb"), col("n").as("nb"))
     a.join(b, col("id_a") < col("id_b"))
       .withColumn("cos",
-        round(dotNative(col("va"), col("vb")) / (col("na") * col("nb")), 6))
+        round(dot(col("va"), col("vb")) / (col("na") * col("nb")), 6))
       .select(col("id_a"), col("id_b"), col("cos"))
   }
 
@@ -233,7 +216,7 @@ object Similarity {
                    threshold: Double, cells: Int = 8,
                    iters: Int = 3): DataFrame = {
     val n = graft.ext.IVF.assignTable(emb, id, vec, cells, iters)
-      .withColumn("nrm", sqrt(dotNative(col("v"), col("v"))))
+      .withColumn("nrm", sqrt(dot(col("v"), col("v"))))
       .localCheckpoint() // feeds both join sides — one assignment pass
     val a = n.select(col("cell"), col("vid").as("id_a"), col("v").as("va"),
       col("nrm").as("na"))
@@ -241,7 +224,7 @@ object Similarity {
       col("nrm").as("nb"))
     val dropped = a.join(b, Seq("cell")).filter(col("id_a") < col("id_b"))
       .withColumn("cos",
-        round(dotNative(col("va"), col("vb")) / (col("na") * col("nb")), 6))
+        round(dot(col("va"), col("vb")) / (col("na") * col("nb")), 6))
       .filter(col("cos") >= threshold)
       .select(col("id_b").as("v_id")).distinct()
     emb.select(col(id).as("v_id")).join(dropped, Seq("v_id"), "left_anti")
@@ -280,7 +263,6 @@ object Similarity {
   def annTopK(emb: DataFrame, id: String, vec: String,
               queryPred: Column, k: Int = 5,
               bits: Int = 32, bands: Int = 4): DataFrame = {
-    ensureRegistered(emb)
     val sk = rpSketch(emb, id, vec, bits, bands)
     val bandStructs = explode(array((0 until bands).map(b =>
       struct(lit(b).as("band"), col(s"band$b").as("bucket"))): _*)).as("bb")
@@ -294,14 +276,14 @@ object Similarity {
       .select(col("q_id"), col("doc").as("c_id")).distinct()
 
     val e = emb.select(col(id).as("c_id"), col(vec).cast("array<double>").as("c_vec"))
-      .withColumn("c_norm", sqrt(dotNative(col("c_vec"), col("c_vec"))))
+      .withColumn("c_norm", sqrt(dot(col("c_vec"), col("c_vec"))))
     val q = emb.filter(queryPred)
       .select(col(id).as("q_id"), col(vec).cast("array<double>").as("q_vec"))
-      .withColumn("q_norm", sqrt(dotNative(col("q_vec"), col("q_vec"))))
+      .withColumn("q_norm", sqrt(dot(col("q_vec"), col("q_vec"))))
     val w = Window.partitionBy("q_id").orderBy(col("cos").desc, col("c_id"))
     cands.join(e, "c_id").join(broadcast(q), "q_id")
       .withColumn("cos",
-        round(dotNative(col("q_vec"), col("c_vec")) / (col("q_norm") * col("c_norm")), 6))
+        round(dot(col("q_vec"), col("c_vec")) / (col("q_norm") * col("c_norm")), 6))
       .withColumn("rn", row_number().over(w))
       .filter(col("rn") <= k)
       .select(col("q_id"), col("c_id"), col("cos"), col("rn").cast("int").as("rn"))
@@ -348,12 +330,11 @@ object Similarity {
     * can't be trusted and the corpus needs per-block scales instead.
     */
   def int8QuantAudit(emb: DataFrame, id: String, vec: String): DataFrame = {
-    ensureRegistered(emb)
     val q = int8Quantize(emb, id, vec)
       .withColumn("vh", transform(col("codes"), c => c.cast("double") * col("scale")))
-    val vv = dotNative(col("v"), col("v"))
-    val vh = dotNative(col("v"), col("vh"))
-    val hh = dotNative(col("vh"), col("vh"))
+    val vv = dot(col("v"), col("v"))
+    val vh = dot(col("v"), col("vh"))
+    val hh = dot(col("vh"), col("vh"))
     q.select(
       col("vid").as("vec_id"),
       round(col("scale"), 9).as("scale_r"),
@@ -378,25 +359,24 @@ object Similarity {
     */
   def int8TopK(emb: DataFrame, id: String, vec: String,
                queryPred: Column, k: Int = 5, overfetch: Int = 4): DataFrame = {
-    ensureRegistered(emb)
     val cand = int8Quantize(emb, id, vec)
       .withColumn("vh", transform(col("codes"), c => c.cast("double") * col("scale")))
       .select(col("vid").as("c_id"), col("v").as("c_vec"), col("vh"))
-      .withColumn("c_norm", sqrt(dotNative(col("c_vec"), col("c_vec"))))
-      .withColumn("h_norm", sqrt(dotNative(col("vh"), col("vh"))))
+      .withColumn("c_norm", sqrt(dot(col("c_vec"), col("c_vec"))))
+      .withColumn("h_norm", sqrt(dot(col("vh"), col("vh"))))
     val q = emb.filter(queryPred)
       .select(col(id).as("q_id"), col(vec).cast("array<double>").as("q_vec"))
-      .withColumn("q_norm", sqrt(dotNative(col("q_vec"), col("q_vec"))))
+      .withColumn("q_norm", sqrt(dot(col("q_vec"), col("q_vec"))))
     val wShort = Window.partitionBy("q_id").orderBy(col("cos_dq").desc, col("c_id"))
     val wFinal = Window.partitionBy("q_id").orderBy(col("cos").desc, col("c_id"))
     cand.crossJoin(broadcast(q))
       .filter(col("q_id") =!= col("c_id"))
       .withColumn("cos_dq",
-        round(dotNative(col("q_vec"), col("vh")) / (col("q_norm") * col("h_norm")), 6))
+        round(dot(col("q_vec"), col("vh")) / (col("q_norm") * col("h_norm")), 6))
       .withColumn("sl", row_number().over(wShort))
       .filter(col("sl") <= k * overfetch)
       .withColumn("cos",
-        round(dotNative(col("q_vec"), col("c_vec")) / (col("q_norm") * col("c_norm")), 6))
+        round(dot(col("q_vec"), col("c_vec")) / (col("q_norm") * col("c_norm")), 6))
       .withColumn("rn", row_number().over(wFinal))
       .filter(col("rn") <= k)
       .select(col("q_id"), col("c_id"), col("cos"), col("rn").cast("int").as("rn"))
@@ -428,21 +408,20 @@ object Similarity {
     */
   def binaryTopK(emb: DataFrame, id: String, vec: String,
                  queryPred: Column, k: Int = 5, overfetch: Int = 8): DataFrame = {
-    ensureRegistered(emb)
     val base = emb
       .select(col(id).as("c_id"), col(vec).cast("array<double>").as("v"))
       .withColumn("b1", signBits(col("v"), 0, 32))
       .withColumn("b2", signBits(col("v"), 32, 64))
     val cand = base
       .select(col("c_id"), col("v").as("c_vec"), col("b1"), col("b2"))
-      .withColumn("c_norm", sqrt(dotNative(col("c_vec"), col("c_vec"))))
+      .withColumn("c_norm", sqrt(dot(col("c_vec"), col("c_vec"))))
     // queryPred references the original column names → select query ids
     // from the raw frame, then reuse base's packed bits via a join
     val qq = emb.filter(queryPred).select(col(id).as("q_id"))
       .join(base.withColumnRenamed("c_id", "q_id"), "q_id")
       .select(col("q_id"), col("v").as("q_vec"),
         col("b1").as("qb1"), col("b2").as("qb2"))
-      .withColumn("q_norm", sqrt(dotNative(col("q_vec"), col("q_vec"))))
+      .withColumn("q_norm", sqrt(dot(col("q_vec"), col("q_vec"))))
     val wShort = Window.partitionBy("q_id").orderBy(col("ham"), col("c_id"))
     val wFinal = Window.partitionBy("q_id").orderBy(col("cos").desc, col("c_id"))
     cand.crossJoin(broadcast(qq))
@@ -453,7 +432,7 @@ object Similarity {
       .withColumn("sl", row_number().over(wShort))
       .filter(col("sl") <= k * overfetch)
       .withColumn("cos",
-        round(dotNative(col("q_vec"), col("c_vec")) / (col("q_norm") * col("c_norm")), 6))
+        round(dot(col("q_vec"), col("c_vec")) / (col("q_norm") * col("c_norm")), 6))
       .withColumn("rn", row_number().over(wFinal))
       .filter(col("rn") <= k)
       .select(col("q_id"), col("c_id"), col("cos"), col("rn").cast("int").as("rn"))
@@ -536,7 +515,7 @@ object Similarity {
     else {
       val (k1, k2) = graft.ext.IVF.autoK1K2(n)
       val t = graft.ext.IVF.twoLevelModel(emb, id, vec, k1, k2, iters)._3
-        .withColumn("nrm", sqrt(dotNative(col("v"), col("v"))))
+        .withColumn("nrm", sqrt(dot(col("v"), col("v"))))
         .localCheckpoint() // feeds both self-join sides — one assignment pass
       val a = t.select(col("cell1"), col("cell2"), col("vid").as("q_id"),
         col("v").as("qv"), col("nrm").as("qn"))
@@ -546,7 +525,7 @@ object Similarity {
       a.join(b, Seq("cell1", "cell2"))
         .filter(col("q_id") =!= col("c_id"))
         .withColumn("cos",
-          round(dotNative(col("qv"), col("cv")) / (col("qn") * col("cn")), 6))
+          round(dot(col("qv"), col("cv")) / (col("qn") * col("cn")), 6))
         .withColumn("rn", row_number().over(w))
         .filter(col("rn") <= k)
         .select(col("q_id"), col("c_id"), col("cos"),
@@ -571,7 +550,7 @@ object Similarity {
     else {
       val (k1, k2) = graft.ext.IVF.autoK1K2(n)
       val t = graft.ext.IVF.twoLevelModel(emb, id, vec, k1, k2, iters)._3
-        .withColumn("nrm", sqrt(dotNative(col("v"), col("v"))))
+        .withColumn("nrm", sqrt(dot(col("v"), col("v"))))
         .localCheckpoint()
       val a = t.select(col("cell1"), col("cell2"), col("vid").as("id_a"),
         col("v").as("va"), col("nrm").as("na"))
@@ -580,7 +559,7 @@ object Similarity {
       val dropped = a.join(b, Seq("cell1", "cell2"))
         .filter(col("id_a") < col("id_b"))
         .withColumn("cos",
-          round(dotNative(col("va"), col("vb")) / (col("na") * col("nb")), 6))
+          round(dot(col("va"), col("vb")) / (col("na") * col("nb")), 6))
         .filter(col("cos") >= threshold)
         .select(col("id_b").as("v_id")).distinct()
       emb.select(col(id).as("v_id")).join(dropped, Seq("v_id"), "left_anti")
@@ -590,7 +569,7 @@ object Similarity {
   def knnGraph(emb: DataFrame, id: String, vec: String, k: Int = 3,
                cells: Int = 8, iters: Int = 3): DataFrame = {
     val n = graft.ext.IVF.assignTable(emb, id, vec, cells, iters)
-      .withColumn("nrm", sqrt(dotNative(col("v"), col("v"))))
+      .withColumn("nrm", sqrt(dot(col("v"), col("v"))))
       .localCheckpoint() // feeds both self-join sides — one assignment pass
     val a = n.select(col("cell"), col("vid").as("q_id"), col("v").as("qv"),
       col("nrm").as("qn"))
@@ -600,7 +579,7 @@ object Similarity {
     a.join(b, Seq("cell"))
       .filter(col("q_id") =!= col("c_id"))
       .withColumn("cos",
-        round(dotNative(col("qv"), col("cv")) / (col("qn") * col("cn")), 6))
+        round(dot(col("qv"), col("cv")) / (col("qn") * col("cn")), 6))
       .withColumn("rn", row_number().over(w))
       .filter(col("rn") <= k)
       .select(col("q_id"), col("c_id"), col("cos"), col("rn").cast("int").as("rn"))
@@ -685,10 +664,9 @@ object Similarity {
   def mipsTopK(emb: DataFrame, id: String, vec: String,
                queryPred: Column, k: Int = 5,
                bits: Int = 32, bands: Int = 4): DataFrame = {
-    ensureRegistered(emb)
     val qIds = emb.filter(queryPred).select(col(id).as("q_id"))
     val v = emb.select(col(id).as("vid"), col(vec).cast("array<double>").as("v"))
-      .withColumn("n2", dotNative(col("v"), col("v")))
+      .withColumn("n2", dot(col("v"), col("v")))
     val m2 = v.agg(max(col("n2")).as("m2"))
     // one (vector, norm, M²) pass feeds the two sketch builds AND the
     // exact-rank join — the same single-assignment idiom clusterDedup uses
@@ -715,7 +693,7 @@ object Similarity {
       .select(col("q_id"), col("v").as("q_vec"))
     val w = Window.partitionBy("q_id").orderBy(col("dot").desc, col("c_id"))
     cands.join(c, "c_id").join(broadcast(q), "q_id")
-      .withColumn("dot", round(dotNative(col("q_vec"), col("c_vec")), 6))
+      .withColumn("dot", round(dot(col("q_vec"), col("c_vec")), 6))
       .withColumn("rn", row_number().over(w))
       .filter(col("rn") <= k)
       .select(col("q_id"), col("c_id"), col("dot"),
@@ -742,12 +720,11 @@ object Similarity {
     */
   def mmrTopK(emb: DataFrame, id: String, vec: String,
               queryPred: Column, k: Int = 5, depth: Int = 20): DataFrame = {
-    ensureRegistered(emb)
     val cands = bruteForceTopK(emb, id, vec, queryPred, depth)
       .select(col("q_id"), col("c_id"), col("cos").as("rel"))
       .localCheckpoint() // feeds the sim table and every greedy step
     val vecs = emb.select(col(id).as("vid"), col(vec).cast("array<double>").as("v"))
-      .withColumn("nrm", sqrt(dotNative(col("v"), col("v"))))
+      .withColumn("nrm", sqrt(dot(col("v"), col("v"))))
     val sims = cands.select(col("q_id"), col("c_id").as("a_id"))
       .join(cands.select(col("q_id").as("q2"), col("c_id").as("b_id")),
         col("q_id") === col("q2") && col("a_id") =!= col("b_id"))
@@ -757,7 +734,7 @@ object Similarity {
       .join(vecs.select(col("vid").as("b_id"), col("v").as("vb"),
         col("nrm").as("nb")), "b_id")
       .select(col("q_id"), col("a_id"), col("b_id"),
-        round(dotNative(col("va"), col("vb")) / (col("na") * col("nb")), 6)
+        round(dot(col("va"), col("vb")) / (col("na") * col("nb")), 6)
           .as("sim"))
     // (sims' checkpoint dropped in r15: the grouped greedy leaves it ONE
     // consumer — the k-round loop that re-read it every step is gone)
@@ -779,8 +756,8 @@ object Similarity {
     // is exactly what the inner-join rounds produced for such a query
     cg.join(sg, Seq("q_id"), "left")
       .select(col("q_id"),
-        explode(call_function("graft_mmr", col("cands"), col("sims"),
-          lit(k))).as("p"))
+        explode(graft.functions.GraftFunctions.mmrSelect(col("cands"),
+          col("sims"), k)).as("p"))
       .select(col("q_id"), col("p.c_id").as("c_id"),
         col("p.step").cast("int").as("rn"), col("p.score").as("score"))
   }
@@ -925,8 +902,7 @@ object Similarity {
     // the element-wise cast to double commutes with the array-level
     // cast). Partial aggregation collapses map-side; DECIMAL sums exact;
     // every group's count is exactly n.
-    graft.functions.GraftFunctions.register(spark)
-    val momentRows = df.select(explode(call_function("graft_moment_pairs",
+    val momentRows = df.select(explode(graft.functions.GraftFunctions.momentPairs(
         vec.cast("array<double>"))).as("e"))
       .select(col("e.j").as("j"), col("e.k").as("k"), col("e.p").as("p"))
       .groupBy("j", "k")
@@ -1044,7 +1020,6 @@ object Similarity {
     */
   private def labelDistRows(emb: DataFrame, id: Column, label: Column,
                             vec: Column): DataFrame = {
-    graft.functions.GraftFunctions.register(emb.sparkSession)
     val x = emb.select(id.as("rid"),
         label.as("slabel"), posexplode(transform(vec, v => v.cast("double"))))
       .select(col("rid"), col("slabel"), (col("pos") + 1).as("dim"),
@@ -1076,7 +1051,7 @@ object Similarity {
     // distance to any centroid — the kernel would return L nulls instead
     emb.filter(vec.isNotNull && size(vec) > 0)
       .select(id.as("rid"), label.as("slabel"),
-        posexplode(call_function("graft_sqdist_dec",
+        posexplode(graft.functions.GraftFunctions.sqDistDecimal(
           vec.cast("array<double>"), typedLit(matrix))))
       .select(col("rid"), col("slabel"),
         element_at(labels, col("pos") + 1).as("clabel"),

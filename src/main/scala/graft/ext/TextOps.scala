@@ -750,7 +750,6 @@ object TextOps {
     require(trainFrac == 1 || sampleId.nonEmpty,
       "bpeTrainRounds: trainFrac > 1 needs sampleId (the doc id column)")
     val spark = df.sparkSession
-    graft.functions.GraftFunctions.register(spark)
     val src = sampleId match {
       case Some(idc) if trainFrac > 1 =>
         val keepBelow = "0123456789abcdef".charAt(16 / trainFrac).toString

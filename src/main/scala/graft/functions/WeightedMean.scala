@@ -6,7 +6,8 @@ import org.apache.spark.sql.expressions.Aggregator
 /** Typed `Aggregator` UDAF — the third native-extension tier the engine
   * demonstrates (Catalyst `Expression`s with codegen: DotProduct/MinHash;
   * optimizer `Rule`: ApproxDistinctRewrite; typed `Aggregator`: this).
-  * Registered as `graft_wmean(x, w)` via `functions.udaf`.
+  * Held as `GraftFunctions.weightedMean` via `functions.udaf`; SQL calls
+  * it as `graft_wmean(x, w)`.
   *
   * Weighted mean with EXACT decimal accumulation: both partial sums are
   * unlimited-precision BigDecimal adds, so reduce/merge are associative

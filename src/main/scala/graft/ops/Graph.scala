@@ -97,10 +97,9 @@ object Graph {
     // replaces was the dominant task CPU of every graph-family query
     // (guide §4: non-codegen expressions in the hot path); same pairs,
     // same order, one allocation per pair (PrepSpec pins parity).
-    graft.functions.GraftFunctions.register(df.sparkSession)
     df.groupBy(col(groupCol).as("g"))
       .agg(collect_set(col(itemCol)).as("items"))
-      .select(explode(call_function("graft_pairs", col("items"))).as("e"))
+      .select(explode(graft.functions.GraftFunctions.arrayPairs(col("items"))).as("e"))
       .groupBy(col("e.src").as("src"), col("e.dst").as("dst"))
       .agg(count(lit(1)).as("__n"))
       .filter(col("__n") >= minSupport)

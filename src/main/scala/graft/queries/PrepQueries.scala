@@ -359,10 +359,9 @@ object PrepQueries {
         |      / CAST(sum(CAST(l_quantity AS DECIMAL(15,2))) AS DOUBLE), 6)
         |    AS wavg_price
         |FROM lineitem GROUP BY 1 ORDER BY l_returnflag""".stripMargin) { (s, dir) =>
-      graft.functions.GraftFunctions.register(s)
       Tables.lineitem(s, dir)
         .groupBy("l_returnflag")
-        .agg(round(call_function("graft_wmean",
+        .agg(round(graft.functions.GraftFunctions.weightedMean(
             // (15,2): lossless for 2-decimal prices/integral quantities,
             // and the oracle's int64 decimal multiply stays in range
             col("l_extendedprice").cast("decimal(15,2)"),

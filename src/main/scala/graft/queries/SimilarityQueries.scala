@@ -387,7 +387,7 @@ object SimilarityQueries {
     //      deterministic training), DuckDB re-derives the entire last
     //      round from raw embeddings: the argmin assignment (identical
     //      float chain to s09's oracle — list_dot_product matches
-    //      dotNative bit-for-bit) and the DECIMAL(38,18)-sum mean (the
+    //      dot bit-for-bit) and the DECIMAL(38,18)-sum mean (the
     //      s24 centroid parity pattern). A wrong distance, tie-break,
     //      dropped vector, or broken decimal discipline in the
     //      mean-update flips this row. Only the penultimate centroid
@@ -714,7 +714,7 @@ object SimilarityQueries {
     //      staged codebooks (_staged_pq_codebooks, the same deterministic
     //      training s07 runs), DuckDB re-derives EVERYTHING: the
     //      sub-vector slices, the (d2, cell) argmin float chain
-    //      (list_dot_product == dotNative bit-for-bit, the s09/s31
+    //      (list_dot_product == dot bit-for-bit, the s09/s31
     //      precedent), and the DECIMAL(38,18) error sums
     //      (merge-order-independent — the centroid-update discipline
     //      applied to the error side). round(6dp) both sides: the

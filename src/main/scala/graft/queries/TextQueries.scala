@@ -1722,7 +1722,6 @@ object TextQueries {
         |    AS DOUBLE) / count(*), 6) AS novelty
         |FROM sh JOIN fo USING (s)
         |GROUP BY doc ORDER BY doc""".stripMargin) { (s, dir) =>
-      graft.functions.GraftFunctions.register(s)
       val sh = Tables.documents(s, dir)
         .select(col("doc_id").as("doc"), TextOps.words(col("text")).as("w"))
         .select(col("doc"), explode(Dedup.shinglesOfWords(col("w"), 3)).as("s"))
@@ -2182,7 +2181,6 @@ object TextQueries {
         |    AS flagged
         |FROM c LEFT JOIN ev ON ev.s = c.s
         |GROUP BY 1 ORDER BY 1""".stripMargin) { (s, dir) =>
-      graft.functions.GraftFunctions.register(s)
       val sh = Tables.documents(s, dir)
         .select(col("doc_id").as("doc"), TextOps.words(col("text")).as("w"))
         .select(col("doc"), explode(Dedup.shinglesOfWords(col("w"), 3)).as("s"))

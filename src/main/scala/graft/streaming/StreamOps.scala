@@ -163,12 +163,11 @@ object StreamOps {
     */
   def streamNearDupScreen(stream: DataFrame, id: Column, text: Column,
                           staticBands: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(stream.sparkSession)
     val bands = stream
       .select(id.as("doc"), graft.ext.Dedup.shingles(text).as("sh_arr"))
       .filter(size(col("sh_arr")) > 0)
       .select(col("doc"),
-        posexplode(call_function("graft_minhash_bands", col("sh_arr"))))
+        posexplode(graft.functions.GraftFunctions.minhashBands(col("sh_arr"))))
       .withColumnRenamed("pos", "band").withColumnRenamed("col", "bucket")
     bands.join(
         broadcast(staticBands.select(col("doc").as("partner"),
@@ -241,7 +240,6 @@ object StreamOps {
   def streamPrefixProbe(stream: DataFrame, id: Column, text: Column,
                         corpusPref: DataFrame, corpusSigs: DataFrame,
                         tauNum: Int, tauDen: Int): DataFrame = {
-    graft.functions.GraftFunctions.register(stream.sparkSession)
     val sig = stream
       .select(id.as("doc"),
         sort_array(transform(graft.ext.Dedup.shingles(text),
@@ -258,7 +256,7 @@ object StreamOps {
       .join(broadcast(corpusSigs.select(col("doc").as("partner"),
         col("hs").as("hb"))), "partner")
       .select(col("doc"), col("partner"),
-        call_function("graft_sorted_intersect_count",
+        graft.functions.GraftFunctions.sortedIntersectCount(
           col("ha"), col("hb")).as("n_inter"),
         col("n_a"), col("n_b"))
       .filter(col("n_inter") * (tauDen + tauNum) >=

@@ -5,14 +5,13 @@ import graft.ext.Similarity
 
 /** Pins the bit-equality contract between the native codegen'd graft_dot
   * expression and the built-in-HOF fold the DuckDB oracles mirror — the
-  * parity every similarity oracle pairing depends on (Similarity.dotNative
+  * parity every similarity oracle pairing depends on (Similarity.dot
   * doc). Null semantics must match exactly: null side, length mismatch,
   * and null element all poison the result; empty arrays fold to 0.0.
   */
 class DotProductSpec extends SparkSpec {
 
   test("graft_dot == dotHof on normal/null/mismatch/empty/NaN/null-element arrays") {
-    graft.functions.GraftFunctions.register(spark)
     val df = spark.sql(
       """SELECT * FROM VALUES
         |  (array(1.0d, 2.0d, 3.0d),            array(4.0d, 5.0d, 6.0d)),
@@ -27,7 +26,7 @@ class DotProductSpec extends SparkSpec {
         |  (array(1e300d, 1e300d),              array(1e300d, -1e300d))
         |AS t(a, b)""".stripMargin)
     val rows = df.select(
-      Similarity.dotNative(col("a"), col("b")).as("native"),
+      Similarity.dot(col("a"), col("b")).as("native"),
       Similarity.dotHof(col("a"), col("b")).as("hof")).collect()
     rows.zipWithIndex.foreach { case (r, i) =>
       assert(r.isNullAt(0) == r.isNullAt(1), s"row $i null mismatch: $r")

@@ -43,7 +43,6 @@ class PQSpec extends SparkSpec {
     // the fine one. The join reference is rebuilt inline from the same
     // codebooks (dot-product float chain and min_by tie-break verbatim).
     import graft.functions.GraftFunctions.dotProduct
-    implicit val s: org.apache.spark.sql.SparkSession = spark
     val m = 4
     val cb = PQ.codebooks(clustered, "vec_id", "embedding", m = m, k = 8)
     val kernelCodes = PQ.encode(clustered, "vec_id", "embedding", cb, m = m)
