@@ -1,6 +1,6 @@
 package graft.core
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 
 /** Loud gates for code paths that are intentionally super-linear.
   *
@@ -28,5 +28,17 @@ object Guard {
         s"but got $n — sample the input explicitly or raise maxRows " +
         "deliberately (no silent caps, no silent blowups)")
     df
+  }
+
+  /** Asserts a driver-side collect stayed within its row bound: `rows` is
+    * the result of `take(maxRows + 1)`, so more than `maxRows` rows means
+    * the input exceeded the bound. Returns `rows` unchanged; fails loudly
+    * instead of truncating (no silent caps).
+    */
+  def driverRows(rows: Array[Row], what: String, maxRows: Int): Array[Row] = {
+    require(rows.length <= maxRows,
+      s"$what: driver-side collect is gated at $maxRows rows but got more — " +
+        "use a smaller input or raise maxRows deliberately (no silent caps)")
+    rows
   }
 }

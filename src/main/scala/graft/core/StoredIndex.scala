@@ -18,6 +18,16 @@ import org.apache.spark.sql.functions._
   *    the source, `count` and the exact `sum(xxhash64(key, payload))`
   *    from ONE aggregate (a single corpus scan). A regenerated corpus at
   *    the same path and cardinality invalidates the index.
+  *  - Stamp memo: a source's (rows, fp) is computed once per session and
+  *    reused while its key holds: the source's canonical plan (equal keys
+  *    are exactly the plans `sameSemantics` calls equal, hashed by their
+  *    `semanticHash`), the key and payload columns, and the (path, size,
+  *    mtime) of every file in `source.inputFiles` ([[Tables.versions]]).
+  *    So a repeat probe of an unchanged corpus runs no stamp scan, two
+  *    families over one source share one scan, a differently filtered
+  *    source gets its own, and a rewritten corpus is scanned afresh. A
+  *    nondeterministic source is never memoized. The memo is a
+  *    [[SessionMemo]] slot, so `SessionMemo.release()` drops it.
   *  - Marker: `_GRAFT_INDEX`, the stamp line followed by optional
   *    `name=Long` metadata lines. An index is current iff the first line
   *    of its marker is the stamp.
@@ -52,7 +62,7 @@ object StoredIndex {
     * recorded. */
   final class Index private[StoredIndex] (s: SparkSession, root: Path,
                                           val meta: Map[String, Long]) {
-    def apply(table: String): DataFrame = s.read.parquet(root.resolve(table).toString)
+    def apply(table: String): DataFrame = Tables.parquet(s, root.resolve(table).toString)
   }
 
   /** A build in progress: where to write each table, the source row count
@@ -70,14 +80,33 @@ object StoredIndex {
             key: String, payload: String, suffix: String = "")
            (build: Build => Unit): Index = {
     val live = location(family, dir, suffix)
-    // the hash sum is exact (decimal), so no session's overflow mode matters
-    val row = source.agg(count(lit(1)),
-      sum(xxhash64(col(key), col(payload)).cast("decimal(38,0)"))).first()
-    val stamp = s"$params rows=${row.getLong(0)} fp=${row.get(1)} src=$dir"
     val s = source.sparkSession
+    val (rows, fp) = contentStamp(source, key, payload)
+    val stamp = s"$params rows=$rows fp=$fp src=$dir"
     current(s, live, stamp).getOrElse(exclusive(live) {
-      current(s, live, stamp).getOrElse(publish(s, live, stamp, row.getLong(0), build))
+      current(s, live, stamp).getOrElse(publish(s, live, stamp, rows, build))
     })
+  }
+
+  private val stamps = SessionMemo[ConcurrentHashMap[AnyRef, (Long, Any)]]()
+
+  /** `source`'s (count, exact hash sum) stamp, through the stamp memo. */
+  private def contentStamp(source: DataFrame, key: String, payload: String): (Long, Any) = {
+    def scan(): (Long, Any) = {
+      // the hash sum is exact (decimal), so no session's overflow mode matters
+      val row = source.agg(count(lit(1)),
+        sum(xxhash64(col(key), col(payload)).cast("decimal(38,0)"))).first()
+      (row.getLong(0), row.get(1))
+    }
+    val plan = source.queryExecution.analyzed
+    if (!plan.deterministic) scan()
+    else {
+      val s = source.sparkSession
+      val memo = stamps(s, "")(new ConcurrentHashMap[AnyRef, (Long, Any)]())
+      val files = source.inputFiles.toSeq.map(f => new org.apache.hadoop.fs.Path(new java.net.URI(f)))
+      val k = (plan.canonicalized, key, payload, Tables.versions(s, files))
+      Option(memo.get(k)).getOrElse { val v = scan(); memo.put(k, v); v }
+    }
   }
 
   private def current(s: SparkSession, live: Path, stamp: String): Option[Index] = {

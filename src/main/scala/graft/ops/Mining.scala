@@ -320,6 +320,9 @@ object Mining {
       .groupBy(col("k"))
       .agg(min(coalesce(col("c"), lit(0L))).as("est"))
 
+  /** Driver-side bound on [[hashWalks]]' live walks per hop. */
+  private val MaxWalks = 100000
+
   /** Deterministic "random" walks over an edge list: from each start node,
     * `steps` hops where the next node is the out-neighbour minimizing
     * [[Prep.portableHash]](walk·31 + step, dst) — node2vec-style sampling
@@ -336,6 +339,8 @@ object Mining {
     * walk is full-length; callers walking general directed edge lists
     * should expect the ragged shape (the oracle [[walkStepSql]] has the
     * same semantics: an inner join against the edge CTE drops the walk).
+    * Each hop's frontier (one row per live walk) is held on the driver,
+    * so more than [[MaxWalks]] starts fail loudly ([[graft.core.Guard.driverRows]]).
     */
   def hashWalks(edges: DataFrame, starts: DataFrame, steps: Int): DataFrame = {
     val e = edges.select(col("src"), col("dst"))
@@ -356,20 +361,21 @@ object Mining {
     val schema = step0.schema
     def local(rows: Array[org.apache.spark.sql.Row]): DataFrame =
       spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
-    var curRows = step0.collect()
+    def frontier(df: DataFrame): Array[org.apache.spark.sql.Row] =
+      graft.core.Guard.driverRows(df.take(MaxWalks + 1), "hashWalks frontier", MaxWalks)
+    var curRows = frontier(step0)
     var out = local(curRows)
     var i = 1
     while (i <= steps && curRows.nonEmpty) {
       val cur = local(curRows)
-      curRows = e.join(broadcast(cur.select(col("walk_id"), col("node"))),
+      curRows = frontier(e.join(broadcast(cur.select(col("walk_id"), col("node"))),
           col("node") === col("src"))
         .withColumn("__score",
           Prep.portableHash(col("walk_id") * lit(31) + lit(i), col("dst")))
         .groupBy(col("walk_id"))
         .agg(min(struct(col("__score"), col("dst"))).as("__m"))
         .select(col("walk_id"), lit(i).as("step"),
-          col("__m.dst").as("node"))
-        .collect()
+          col("__m.dst").as("node")))
       out = out.unionByName(local(curRows))
       i += 1
     }

@@ -253,6 +253,15 @@ class MiningSpec extends SparkSpec {
     assert(w2 == w)
   }
 
+  test("hashWalks: more than 100000 walks fail loudly, naming the bound") {
+    val edges = Seq((1L, 2L), (2L, 1L)).toDF("src", "dst")
+    val starts = spark.range(100001).select(col("id").as("node"))
+    val e = intercept[IllegalArgumentException] {
+      Mining.hashWalks(edges, starts, steps = 0)
+    }
+    assert(e.getMessage.contains("hashWalks frontier") && e.getMessage.contains("100000 rows"))
+  }
+
   test("calibrationBins: 20 hand units — exact rational bins, perfect-score calibration") {
     // ranks 1..20, N=20: bin = (10·r) div 21 → every bin holds 2 ranks;
     // pred_avg(bin 0) = (1+2)/(2·21) = 1/14; responders = top-4 scores

@@ -22,4 +22,18 @@ object TestSpark {
 abstract class SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = TestSpark.spark
   val sf: String = TestSpark.sf
+
+  /** Spark jobs `body` starts. */
+  def jobs(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val n = new java.util.concurrent.atomic.AtomicInteger()
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        n.incrementAndGet()
+    }
+    org.apache.spark.graft.ListenerBus.drain(sc)
+    sc.addSparkListener(l)
+    try { body; org.apache.spark.graft.ListenerBus.drain(sc); n.get }
+    finally sc.removeSparkListener(l)
+  }
 }

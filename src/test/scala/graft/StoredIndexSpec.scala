@@ -118,6 +118,33 @@ class StoredIndexSpec extends SparkSpec {
     assert(traces("spec_upper", dir) == Seq(liveName("spec_upper", dir)))
   }
 
+  /** A StoredIndex call over `src` whose build writes nothing. */
+  private def probe(family: String, dir: String, src: DataFrame): Unit = {
+    StoredIndex(family, "v=1", dir, src, "doc_id", "text")(b => b.record("rows", b.rows))
+    ()
+  }
+
+  test("stamp memo: a repeat call on an unchanged corpus runs no stamp job") {
+    val dir = corpus(Seq("alpha", "beta", "gamma"))
+    val src = spark.read.parquet(dir)
+    assert(jobs(probe("spec_memo", dir, src)) >= 1, "the first call scans for the stamp")
+    // a fresh relation over the same files: the memo keys by plan, not identity
+    val again = spark.read.parquet(dir)
+    assert(jobs(probe("spec_memo", dir, again)) == 0)
+  }
+
+  test("stamp memo: two families over one source share one scan; a filtered source gets its own") {
+    val dir = corpus(Seq("one", "two", "three", "four"))
+    val src = spark.read.parquet(dir)
+    assert(jobs(probe("spec_fam_a", dir, src)) >= 1)
+    assert(jobs(probe("spec_fam_b", dir, src)) == 0)
+    assert(jobs(probe("spec_fam_even", dir, src.filter(col("doc_id") % 2 === 0))) >= 1)
+    val stamp = (f: String) => Files.readString(marker(f, dir))
+    assert(stamp("spec_fam_a").contains(" rows=4 "))
+    assert(stamp("spec_fam_even").contains(" rows=2 "))
+    assert(stamp("spec_fam_a") == stamp("spec_fam_b"))
+  }
+
   test("SessionMemo: one value per (session, dir); a new session rebuilds; release() clears and unpersists") {
     val memo = SessionMemo[DataFrame](_.unpersist())
     var builds = 0
