@@ -27,18 +27,6 @@ object Multimodal {
   def withMediaBytes(df: DataFrame, payload: Column, out: String = "media"): DataFrame =
     df.withColumn(out, payload.cast("binary"))
 
-  /** Typed metadata extracted WITHOUT decoding (container-level facts):
-    * byte length plus deterministic fake dimensions derived from the
-    * length — stands in for header parsing.
-    */
-  def mediaMeta(df: DataFrame, media: Column, sizeHint: Column): DataFrame =
-    df.withColumn("byte_len", length(media))
-      .withColumn("width", (sizeHint % 640 + 32).cast("int"))
-      // long math before the multiply: an int sizeHint over ~306M would
-      // overflow sizeHint * 7 and wrap the fake height negative
-      .withColumn("height",
-        ((sizeHint.cast("long") * 7) % 480 + 32).cast("int"))
-
   /** Frame sampling: slice the payload into `n` fixed-stride frames,
     * exploded to (id, frame_idx, frame) rows — the real plumbing shape a
     * video pipeline uses (frame rows flow into per-frame feature ops).

@@ -503,67 +503,6 @@ object TextOps {
     * tables, orders of magnitude smaller than the token stream. Returns
     * (w1, w2, c_ab, lift) for pairs with c_ab ≥ minCount.
     */
-  /** Adjacent-bigram collocation strength — the corpus-linguistics PMI
-    * extractor, and a classic data-quality probe (boilerplate/templated
-    * text surfaces as impossibly strong collocations). Emits the LIFT
-    * (c_ab/N2) / ((c_a/N1)·(c_b/N1)) = exp(PMI) rather than the log:
-    * monotonic in PMI (identical ranking) but pure IEEE divide/multiply
-    * in a fixed order, so any engine computes the bit-identical double —
-    * ln() is libm territory, the one place two engines legitimately
-    * diverge by an ulp. Counts are occurrence counts (NOT distinct —
-    * frequency is the signal here, unlike the dedup shingle sets).
-    *
-    * Shape at scale: one tokenize pass materialized for the two count
-    * aggregates (multi-consumer scan rule); corpus totals ride a
-    * broadcast; the final join keys are the (already aggregated) vocab
-    * tables, orders of magnitude smaller than the token stream. Returns
-    * (w1, w2, c_ab, lift) for pairs with c_ab ≥ minCount.
-    */
-  /** Intra-document repetition metrics — the Gopher repetition-filter
-    * family (Rae et al. 2021 §A1.1.2): templated/looping generations
-    * show up as one dominant n-gram or a collapsed vocabulary long
-    * before any cross-doc dedup sees them. Per doc:
-    *  - `dup_word_frac`  = 1 − distinct/total words (vocabulary collapse);
-    *  - `top_bigram_frac` = occurrences of the single most repeated
-    *    adjacent bigram / total bigrams (dominant-phrase loop; ties on
-    *    count are irrelevant — only the max count is used);
-    *  - `flagged` = either fraction over its threshold.
-    * All divisions are pinned-order IEEE doubles (exact small-int
-    * ratios), so the oracle matches bit-for-bit. Word stats are map-only;
-    * the bigram max is one explode + two-level aggregate joined back on
-    * doc id — no corpus-wide state of any kind, so the op scales as a
-    * pure per-doc pass (the 100 TB posture: this runs BEFORE dedup).
-    * Returns (doc, n_words, dup_word_frac, top_bigram_frac, flagged).
-    */
-  def repetitionScores(df: DataFrame, idCol: Column, textCol: Column,
-                       topBigramMax: Double = 0.18,
-                       dupWordMax: Double = 0.3): DataFrame = {
-    val stats = df.select(idCol.as("doc"), words(textCol).as("w"))
-      .select(col("doc"), size(col("w")).as("n_words"),
-        size(array_distinct(col("w"))).as("n_distinct"), col("w"))
-    val bigTop = stats
-      .filter(col("n_words") >= 2)
-      .select(col("doc"), col("n_words"),
-        explode(transform(sequence(lit(1), size(col("w")) - 1),
-          i => struct(element_at(col("w"), i).as("w1"),
-            element_at(col("w"), i + 1).as("w2")))).as("p"))
-      .groupBy(col("doc"), col("n_words"), col("p"))
-      .agg(count(lit(1)).as("c"))
-      .groupBy("doc").agg(max(col("c")).as("top_c"))
-    val dupFrac = lit(1.0) -
-      col("n_distinct").cast("double") / col("n_words").cast("double")
-    val topFrac = when(col("n_words") >= 2,
-      coalesce(col("top_c"), lit(0L)).cast("double") /
-        (col("n_words") - 1).cast("double")).otherwise(0.0)
-    stats.drop("w").join(bigTop, Seq("doc"), "left")
-      .withColumn("dup_word_frac", dupFrac)
-      .withColumn("top_bigram_frac", topFrac)
-      .select(col("doc"), col("n_words"),
-        col("dup_word_frac"), col("top_bigram_frac"),
-        (col("top_bigram_frac") >= topBigramMax ||
-          col("dup_word_frac") >= dupWordMax).as("flagged"))
-  }
-
   def pmiCollocations(df: DataFrame, textCol: Column,
                       minCount: Long = 5L): DataFrame = {
     val wdf = df.select(words(textCol).as("w")).localCheckpoint()

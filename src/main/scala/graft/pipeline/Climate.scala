@@ -100,14 +100,28 @@ object Climate {
     * independent recomputation could flip a z at the 3-dp boundary; one
     * shared cache of this frame makes fact + staged stats bit-consistent
     * by construction). Callers cache THIS and project.
+    *
+    * The station sample is the stream side of the cross join, hash
+    * partitioned on `station_id` into the session's shuffle-partition
+    * count, and the year ≥ 2000 Berkeley silver is the broadcast side. So
+    * the station×day rows are produced in parallel tasks, already
+    * clustered for the per-station window, which needs no exchange. The
+    * count is explicit because AQE coalesces a by-column repartition
+    * without one down to a single task. Each station's rows still reach
+    * the window in Berkeley file order (one stream row meets the whole
+    * broadcast side in order), so the float window sums, and with them
+    * the stats and z-scores, are added in the same order as a Berkeley-
+    * streamed join that shuffles by station.
     */
   def factLineage(berkeley: DataFrame, dim: DataFrame): DataFrame = {
-    // Deterministic sample (documented deviation from bare limit(50)).
-    val sample = dim.orderBy("station_id").limit(50)
     val base   = berkeley.filter(col("year") >= 2000)
+    val sample = stationSample(dim)
     val keys   = Seq(col("station_id"), col("year"), col("month"))
 
-    val withNoise = base.crossJoin(broadcast(sample))
+    val parts = berkeley.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
+    val withNoise = sample.repartition(parts, col("station_id"))
+      .crossJoin(broadcast(base))
+      .select((base.columns ++ sample.columns).toSeq.map(col): _*)
       .withColumn("baseline_temperature",
         round(lit(30.0) - lit(0.5) * abs(col("latitude")), 2))
       .transform(Anomaly.deterministicNoise(keys))
@@ -130,6 +144,14 @@ object Climate {
       .withColumn("date", expr("make_date(year, month, 1)"))
       .withColumn("record_count", lit(30))
   }
+
+  /** The ≤50 stations the fact covers: the lowest ids, a deterministic
+    * sample (documented deviation from the reference's bare limit(50)).
+    * [[factLineage]] and [[noiseTable]] share it, so c03's staged noise
+    * covers exactly the fact's stations.
+    */
+  private def stationSample(dim: DataFrame): DataFrame =
+    dim.orderBy("station_id").limit(50)
 
   /** [[factLineage]] → the reference's published fact columns. */
   def factProject(lineage: DataFrame): DataFrame =
@@ -163,11 +185,10 @@ object Climate {
     * so the values are bit-identical to the fact's internal noise.
     */
   def noiseTable(berkeley: DataFrame, dim: DataFrame): DataFrame = {
-    val sample = dim.orderBy("station_id").limit(50)
-    val keys   = Seq(col("station_id"), col("year"), col("month"))
+    val keys = Seq(col("station_id"), col("year"), col("month"))
     berkeley.filter(col("year") >= 2000)
       .select(col("year"), col("month")).distinct()
-      .crossJoin(broadcast(sample.select(col("station_id"))))
+      .crossJoin(broadcast(stationSample(dim).select(col("station_id"))))
       .transform(Anomaly.deterministicNoise(keys))
       .transform(Anomaly.injectExtremes(keys))
       .select(col("station_id"), col("year"), col("month"), col("local_noise"))

@@ -1,5 +1,6 @@
 package graft.sources
 
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SaveMode}
 
 /** The reference's two sinks (SURVEY.md §2.2). */
@@ -13,17 +14,71 @@ object Sinks {
     df.write.mode(SaveMode.Overwrite).parquet(path)
 
   /** K2: single-file CSV export for BI tools
-    * (reference jobs/03_silver_to_gold.py:5-17). `coalesce(1)` makes the
-    * final write single-threaded BY DESIGN (one file contract) — only for
-    * small gold marts, never for fact-scale data.
+    * (reference jobs/03_silver_to_gold.py:5-17): `path` becomes a
+    * directory holding exactly one header-first `.csv` file, byte-identical
+    * to what the reference's `coalesce(1)` write produces.
+    *
+    * The rows are written in parallel, one header-bearing part file per
+    * non-empty partition (partition 0 always writes one), into a hidden
+    * staging sibling of `path`. The driver then concatenates the parts in
+    * part-name order (partition order), keeping the first header only,
+    * and publishes the single file by renaming its directory into place.
+    * A failed export leaves any previous export at `path` untouched and no
+    * staging directory behind. Column names must not contain a newline:
+    * the header is taken to be the first line of each part.
     */
-  def singleFileCsv(df: DataFrame, path: String): Unit =
-    df.coalesce(1).write
-      .mode(SaveMode.Overwrite)
-      .option("header", "true")
-      .option("delimiter", ",")
-      .option("encoding", "UTF-8")
-      .csv(path)
+  def singleFileCsv(df: DataFrame, path: String): Unit = {
+    require(!df.columns.exists(_.contains('\n')),
+      s"singleFileCsv: a column name holds a newline: ${df.columns.mkString(", ")}")
+    val live = new Path(path)
+    val fs = live.getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration)
+    val staging = new Path(fs.makeQualified(live).getParent,
+      s".${live.getName}.${java.util.UUID.randomUUID}.staging")
+    try {
+      val parts = new Path(staging, "parts")
+      df.write
+        .option("header", "true")
+        .option("delimiter", ",")
+        .option("encoding", "UTF-8")
+        .csv(parts.toString)
+      val files = fs.listStatus(parts).map(_.getPath)
+        .filter(p => p.getName.startsWith("part-") && p.getName.endsWith(".csv"))
+        .sortBy(_.getName)
+      val single = new Path(staging, "single")
+      concatenate(fs, files.toSeq, new Path(single, files.head.getName))
+      val old = new Path(staging, "old")
+      if (fs.exists(live) && !fs.rename(live, old)) sys.error(s"cannot move $live aside")
+      if (!fs.rename(single, live)) sys.error(s"cannot publish $live")
+    } finally fs.delete(staging, true)
+  }
+
+  /** `files` into `out`: one header, then each file without its own,
+    * which must be the same bytes. */
+  private def concatenate(fs: FileSystem, files: Seq[Path], out: Path): Unit = {
+    val header = firstLine(fs, files.head)
+    val sink = fs.create(out)
+    try {
+      sink.write(header)
+      files.foreach { f =>
+        val in = fs.open(f)
+        try {
+          require(java.util.Arrays.equals(in.readNBytes(header.length), header),
+            s"$f does not start with the header")
+          in.transferTo(sink)
+        } finally in.close()
+      }
+    } finally sink.close()
+  }
+
+  /** The first line of `f`, its newline included. */
+  private def firstLine(fs: FileSystem, f: Path): Array[Byte] = {
+    val in = fs.open(f)
+    try {
+      val line = new java.io.ByteArrayOutputStream()
+      Iterator.continually(in.read()).takeWhile(_ >= 0).find { b => line.write(b); b == '\n' }
+      line.toByteArray
+    } finally in.close()
+  }
 
   /** ORC layer write — the second columnar format Spark ships natively
     * (vectorized reader, predicate pushdown, column pruning — same scan

@@ -998,4 +998,48 @@ class PlanSpec extends SparkSpec {
       s"allowlist entries whose global window is gone — delete them: " +
         stale.mkString(", "))
   }
+
+  test("climate fact lineage: Berkeley broadcast into station-partitioned tasks; no exchange under the window") {
+    import org.apache.spark.sql.catalyst.optimizer.BuildRight
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan, TakeOrderedAndProjectExec}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.exchange.{Exchange, ShuffleExchangeExec}
+    import org.apache.spark.sql.execution.joins.BroadcastNestedLoopJoinExec
+    import org.apache.spark.sql.execution.window.WindowExec
+    import graft.pipeline.{Climate, ClimateFixture}
+    val (b, st) = ClimateFixture.default
+    val lineage = Climate.factLineage(
+      Climate.berkeleySilver(Climate.ingestText(spark, b, "Berkeley_Earth")),
+      Climate.stationsDim(Climate.stationsSilver(Climate.ingestText(spark, st, "NOAA_Stations"))))
+    // the plan AQE starts from, exchanges included
+    val plan = lineage.queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.executedPlan
+      case p => p
+    }
+    def scans(p: SparkPlan): Seq[String] = p.collect {
+      case f: FileSourceScanExec => f.relation.location.rootPaths.map(_.getName)
+    }.flatten
+    val berkeleyFile = new java.io.File(b).getName
+    val join = plan.collect { case j: BroadcastNestedLoopJoinExec => j }
+    assert(join.size == 1, plan.toString)
+    assert(join.head.buildSide == BuildRight && scans(join.head.right) == Seq(berkeleyFile),
+      s"the Berkeley scan must be the broadcast side:\n$plan")
+    val hash = plan.collect {
+      case e: ShuffleExchangeExec if e.outputPartitioning.isInstanceOf[HashPartitioning] => e
+    }
+    assert(hash.size == 1, s"one hash exchange expected:\n$plan")
+    assert(hash.head.outputPartitioning.asInstanceOf[HashPartitioning]
+      .expressions.map(_.references.map(_.name).mkString) == Seq("station_id"), plan.toString)
+    assert(hash.head.child.collectFirst { case t: TakeOrderedAndProjectExec => t.limit }
+      .contains(50), s"the hash exchange must be over the 50-station sample:\n$plan")
+    val window = plan.collect { case w: WindowExec => w }
+    assert(window.nonEmpty, plan.toString)
+    window.foreach { w =>
+      val below = w.collect { case j: BroadcastNestedLoopJoinExec => j }
+      assert(below.size == 1 &&
+        w.collect { case e: Exchange => e }.size == below.head.collect { case e: Exchange => e }.size,
+        s"an exchange sits between the join and the window:\n$plan")
+    }
+  }
 }

@@ -1,5 +1,7 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted, StageInfo}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -25,15 +27,28 @@ abstract class SparkSpec extends AnyFunSuite {
 
   /** Spark jobs `body` starts. */
   def jobs(body: => Unit): Int = {
-    val sc = spark.sparkContext
     val n = new java.util.concurrent.atomic.AtomicInteger()
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        n.incrementAndGet()
-    }
+    listening(new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = n.incrementAndGet()
+    })(body)
+    n.get
+  }
+
+  /** Stages `body` completes, in completion order. */
+  def stages(body: => Unit): Seq[StageInfo] = {
+    val done = new java.util.concurrent.ConcurrentLinkedQueue[StageInfo]()
+    listening(new SparkListener {
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit = done.add(e.stageInfo)
+    })(body)
+    done.asScala.toSeq
+  }
+
+  /** Runs `body` with `l` attached; `l` sees every event `body` posts. */
+  private def listening(l: SparkListener)(body: => Unit): Unit = {
+    val sc = spark.sparkContext
     org.apache.spark.graft.ListenerBus.drain(sc)
     sc.addSparkListener(l)
-    try { body; org.apache.spark.graft.ListenerBus.drain(sc); n.get }
+    try { body; org.apache.spark.graft.ListenerBus.drain(sc) }
     finally sc.removeSparkListener(l)
   }
 }
