@@ -1,13 +1,14 @@
 package graft
 
-import org.apache.spark.scheduler._
+import org.apache.spark.executor.TaskMetrics
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Join, LogicalPlan, Window => LWindow}
+import graft.core.Profile
 
 /** Dev tool for single board entries on [[Harness]]'s session, warm-up
   * and noop forcing, so a probe measures what [[Bench]] measures:
   * `time names…` (min of two forced runs), `profile names…|all` (a warm
-  * run, then one under [[StageTotals]]), `explain <outDir> <suffix>
+  * run, then one under a [[Profile]]), `explain <outDir> <suffix>
   * names…` (writes `<outDir>/<query>_<suffix>.txt`, the plans/rNN/
   * evidence) and `countprune` ([[countPrune]]). Usage:
   * `sbt "runMain graft.Probe time s07_ann_pq t06_jaccard_topk"`, with
@@ -48,53 +49,26 @@ object Probe {
     }
   }
 
-  /** Job/stage/task counts and executor run/CPU/GC time and shuffle
-    * writes, summed since [[reset]]. The gap between wall and per-core
-    * task time is driver-side cost (planning, codegen, scheduling,
-    * collect barriers). */
-  private class StageTotals extends SparkListener {
-    @volatile var jobs = 0
-    @volatile var stages = 0
-    @volatile var tasks = 0
-    @volatile var runMs = 0L
-    @volatile var cpuMs = 0L
-    @volatile var gcMs = 0L
-    @volatile var shufWrite = 0L
-    def reset(): Unit = { jobs = 0; stages = 0; tasks = 0; runMs = 0; cpuMs = 0; gcMs = 0; shufWrite = 0 }
-    override def onJobStart(e: SparkListenerJobStart): Unit = jobs += 1
-    override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
-      stages += 1
-      tasks += e.stageInfo.numTasks
-      val m = e.stageInfo.taskMetrics
-      if (m != null) {
-        runMs += m.executorRunTime
-        cpuMs += m.executorCpuTime / 1000000L
-        gcMs += m.jvmGCTime
-        shufWrite += m.shuffleWriteMetrics.bytesWritten
-      }
-    }
-  }
-
+  /** One row per entry: a warm run, then the forced run under a
+    * [[graft.core.Profile]], giving its job/stage/task counts and its
+    * executor run/CPU/GC time and shuffle writes. The gap between wall and
+    * per-core task time is driver-side cost (planning, codegen,
+    * scheduling, collect barriers). */
   def profile(spark: SparkSession, sfDir: String, names: Seq[String]): Unit = {
     Harness.warmUp(spark, sfDir)
-    val acc = new StageTotals
-    spark.sparkContext.addSparkListener(acc)
-    try {
-      val todo =
-        if (names.isEmpty || names == Seq("all")) Harness.registry.keys.toSeq.sorted
-        else names
-      println(f"${"query"}%-28s ${"wall"}%7s ${"jobs"}%5s ${"stgs"}%5s ${"tasks"}%6s ${"runS"}%7s ${"cpuS"}%7s ${"gcS"}%6s ${"shufMB"}%7s")
-      eachEntry(todo) { (name, fn) =>
-        // run 1 warms codegen caches (the min-of-two idea); run 2 is the
-        // instrumented one
-        Harness.force(fn(spark, sfDir))
-        Thread.sleep(300)
-        acc.reset()
-        val wall = Harness.timeForced(spark, sfDir, fn)
-        Thread.sleep(300) // let async listener events drain
-        println(f"$name%-28s $wall%7.2f ${acc.jobs}%5d ${acc.stages}%5d ${acc.tasks}%6d ${acc.runMs / 1e3}%7.2f ${acc.cpuMs / 1e3}%7.2f ${acc.gcMs / 1e3}%6.2f ${acc.shufWrite / 1e6}%7.1f")
-      }
-    } finally spark.sparkContext.removeSparkListener(acc)
+    val todo =
+      if (names.isEmpty || names == Seq("all")) Harness.registry.keys.toSeq.sorted
+      else names
+    println(f"${"query"}%-28s ${"wall"}%7s ${"jobs"}%5s ${"stgs"}%5s ${"tasks"}%6s ${"runS"}%7s ${"cpuS"}%7s ${"gcS"}%6s ${"shufMB"}%7s")
+    eachEntry(todo) { (name, fn) =>
+      // run 1 warms codegen caches (the min-of-two idea); run 2 is the
+      // profiled one
+      Harness.force(fn(spark, sfDir))
+      val (wall, p) = Profile.of(spark)(Harness.timeForced(spark, sfDir, fn))
+      val m = p.stages.flatMap(s => Option(s.taskMetrics))
+      def sum(f: TaskMetrics => Long): Long = m.map(f).sum
+      println(f"$name%-28s $wall%7.2f ${p.jobs}%5d ${p.stages.size}%5d ${p.stages.map(_.numTasks).sum}%6d ${sum(_.executorRunTime) / 1e3}%7.2f ${sum(_.executorCpuTime / 1000000L) / 1e3}%7.2f ${sum(_.jvmGCTime) / 1e3}%6.2f ${sum(_.shuffleWriteMetrics.bytesWritten) / 1e6}%7.1f")
+    }
   }
 
   def explain(spark: SparkSession, sfDir: String, outDir: String, suffix: String,

@@ -1,21 +1,22 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
+import org.apache.spark.scheduler.StageInfo
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import scala.collection.mutable
+import graft.core.Profile
 
 /** Scale exercise: run the heaviest iterative pipelines (t16-style LSH
   * near-dup clustering, s08-style semantic dedup) on a synthetically
   * multiplied + skew-injected fixture (~sf1 when SPARK_GRAFT_SCALE_MULT=10
-  * over sf0.1), with a stage-metrics listener asserting the partition
+  * over sf0.1), with a whole-run [[Profile]] asserting the partition
   * story holds:
   *
   *  - every stage that processes a non-trivial record volume runs
   *    MULTI-TASK (a single-task stage over big data is the local-mode bug
   *    that becomes the 1000-executor bottleneck);
-  *  - per-stage max/median task-time skew is reported, so a hot LSH
-  *    bucket or k-means cell shows up as a number, not an anecdote;
+  *  - the five longest of those stages are printed (`top_stages`: tasks,
+  *    records, stage wall time `run_ms`), so a hot LSH bucket or k-means
+  *    cell shows up as a number, not an anecdote;
   *  - the injected structure is verified exactly (the 400-copy hot
   *    cluster must come back as ONE component with 400 members; scaled
   *    copies of each doc must cluster with their original), so the scale
@@ -28,26 +29,13 @@ import scala.collection.mutable
   */
 object ScaleCheck {
 
-  /** Per-stage snapshot: task count, record volume, task-time skew. */
-  final case class StageStat(stageId: Int, name: String, numTasks: Int,
-                             records: Long, maxTaskMs: Long, runMs: Long)
+  /** Records a stage read: from its input plus from shuffles. */
+  private def records(s: StageInfo): Long = Option(s.taskMetrics)
+    .fold(0L)(m => m.inputMetrics.recordsRead + m.shuffleReadMetrics.recordsRead)
 
-  final class StageStats extends SparkListener {
-    val stats: mutable.ArrayBuffer[StageStat] = mutable.ArrayBuffer.empty
-    override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = {
-      val si = sc.stageInfo
-      val m = si.taskMetrics
-      val recs =
-        if (m == null) 0L
-        else m.inputMetrics.recordsRead + m.shuffleReadMetrics.recordsRead
-      val run = (for {s <- si.submissionTime; c <- si.completionTime}
-        yield c - s).getOrElse(0L)
-      stats.synchronized {
-        stats += StageStat(si.stageId, si.name.takeWhile(_ != '\n'),
-          si.numTasks, recs, m match { case null => 0L; case mm => mm.executorRunTime }, run)
-      }
-    }
-  }
+  /** A stage's wall time, submission to completion. */
+  private def runMs(s: StageInfo): Long =
+    (for {a <- s.submissionTime; c <- s.completionTime} yield c - a).getOrElse(0L)
 
   def main(args: Array[String]): Unit = {
     val sfDir = Harness.sfDir
@@ -60,8 +48,7 @@ object ScaleCheck {
     // exactly the class of bug the record-count assertions exist to catch
     val spark = Harness.session(Harness.cpus,
       "spark.sql.adaptive.coalescePartitions.enabled" -> "false")
-    val listener = new StageStats
-    spark.sparkContext.addSparkListener(listener)
+    val run = Profile.start(spark)
 
     val out = new StringBuilder("{")
     var failed = List.empty[String]
@@ -392,25 +379,11 @@ object ScaleCheck {
       .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
     val probedCells = cellSizes.keys.toSeq.sorted.take(2) // nprobe = 2
     val probedRows = probedCells.map(cellSizes).sum
-    // stage-completed events post ASYNC: settle the listener before
-    // snapshotting (else a straggler from the cellSizes job lands inside
-    // the probe window) and after the probe (else the probe's own events
-    // may not have arrived and the assertion reads 0 = vacuously green)
-    def settle(): Int = {
-      var last = -1; var same = 0
-      while (same < 3) {
-        Thread.sleep(100)
-        val now = listener.stats.synchronized(listener.stats.size)
-        if (now == last) same += 1 else { same = 0; last = now }
-      }
-      last
-    }
-    val beforeProbe = settle()
-    val gotProbe = idx.filter(col("cell").isin(probedCells.map(Integer.valueOf): _*)).count()
-    settle()
-    val probeRead = listener.stats.synchronized {
-      listener.stats.drop(beforeProbe).map(_.records).sum
-    }
+    // the probe's own profile: no straggler from the cellSizes job lands
+    // in it, and none of its events is missing (a 0 would be vacuously green)
+    val (gotProbe, probe) = Profile.of(spark)(
+      idx.filter(col("cell").isin(probedCells.map(Integer.valueOf): _*)).count())
+    val probeRead = probe.stages.map(records).sum
     check(gotProbe == probedRows, s"probe row count: $gotProbe vs $probedRows")
     // pruning: the scan reads the probed cells' rows only (small slack for
     // agg partials riding the same stages), never the full index
@@ -463,13 +436,9 @@ object ScaleCheck {
            |  WHERE r.depth < 2)
            |SELECT depth, count(*) AS n FROM reach GROUP BY depth""".stripMargin)
         .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-    val beforeBfs = settle()
-    val lvlScaled = bfsLevels("__scale_edges",
-      (0 until mult).map(i => seed0 + i * 10_000_000L))
-    settle()
-    val bfsStages = listener.stats.synchronized {
-      listener.stats.drop(beforeBfs).toVector
-    }
+    val (lvlScaled, bfs) = Profile.of(spark)(bfsLevels("__scale_edges",
+      (0 until mult).map(i => seed0 + i * 10_000_000L)))
+    val bfsStages = bfs.stages
     val lvl0 = bfsLevels("__scale_edges0", Seq(seed0))
     val tBfs = (System.nanoTime() - t5) / 1e9
     check(lvl0.size == 3 && lvl0.values.forall(_ > 0),
@@ -482,10 +451,10 @@ object ScaleCheck {
     // the co-occurrence edges from >100k to ~71k rows and a fixed 100k
     // bar started skipping the assertion entirely) — what matters is
     // that the per-level edge scans, whatever their size, stay multi-task
-    val bfsBig = bfsStages.filter(_.records >= math.min(100_000L, nEdgesPr))
+    val bfsBig = bfsStages.filter(records(_) >= math.min(100_000L, nEdgesPr))
     check(bfsBig.nonEmpty && bfsBig.forall(_.numTasks > 1),
       s"BFS levels run multi-task over non-trivial volume: " +
-        bfsStages.map(s => s"${s.stageId}(${s.numTasks}t,${s.records}r)").mkString(", "))
+        bfsStages.map(s => s"${s.stageId}(${s.numTasks}t,${records(s)}r)").mkString(", "))
 
     // ---------- q92-shape: Hilbert layout clustering at scale ----------
     // mult copies preserve (l_partkey, l_suppkey), so the hilbert-key
@@ -634,13 +603,12 @@ object ScaleCheck {
     // every stage reading >=100k records must be multi-task; the only
     // single-task stages allowed at ANY volume are the documented
     // driver-side materializations (k-means centroid collects: k rows)
-    val big = listener.stats.synchronized { listener.stats.toVector }
-      .filter(_.records >= 100_000)
+    val big = run.stop().stages.filter(records(_) >= 100_000)
     val singleBig = big.filter(_.numTasks <= 1)
     check(singleBig.isEmpty,
-      s"single-task big stages: ${singleBig.map(s => s"${s.stageId}:${s.name}(${s.records})").mkString(", ")}")
-    val worstSkew = big.sortBy(-_.runMs).take(5)
-      .map(s => f""""s${s.stageId}":{"tasks":${s.numTasks},"records":${s.records},"run_ms":${s.runMs}}""")
+      s"single-task big stages: ${singleBig.map(s => s"${s.stageId}:${s.name.takeWhile(_ != '\n')}(${records(s)})").mkString(", ")}")
+    val worstSkew = big.sortBy(-runMs(_)).take(5)
+      .map(s => f""""s${s.stageId}":{"tasks":${s.numTasks},"records":${records(s)},"run_ms":${runMs(s)}}""")
       .mkString(",")
 
     out ++= s""""n_docs":$nDocs,"n_vec":$nVec,"mult":$mult,"cells":$cells,"""

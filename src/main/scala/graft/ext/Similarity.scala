@@ -25,19 +25,15 @@ object Similarity {
   /** Dot product of two double arrays: the native
     * [[graft.functions.DotProduct]] kernel, one fused left-to-right loop.
     * It needs no registration, so it works on any session. Bit-identical
-    * to [[dotHof]], including its null and length-mismatch semantics,
-    * and so to the DuckDB oracles' list_dot_product. Both inputs must
+    * to the built-in `aggregate(zip_with(a, b, _ * _), 0.0, _ + _)` fold,
+    * including its null and length-mismatch semantics (DotProductSpec
+    * pins the equality), and so to the DuckDB oracles'
+    * list_dot_product. Both inputs must
     * already be array<double>: there is no implicit cast, so cast
     * float or int embeddings first (analysis fails otherwise).
     */
   def dot(a: Column, b: Column): Column =
     graft.functions.GraftFunctions.dotProduct(a, b)
-
-  /** Built-in-HOF reference formulation (what [[dot]] must keep
-    * matching bit-for-bit — DotProductSpec pins the equality).
-    */
-  def dotHof(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => x * y), lit(0.0), (acc, x) => acc + x)
 
   /** Cosine via dot/(sqrt(aa)·sqrt(bb)) over the native [[dot]] — the
     * exact formula the DuckDB oracle mirrors (term order matters for bit

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import graft.ext.Similarity
 
@@ -10,6 +11,11 @@ import graft.ext.Similarity
   * and null element all poison the result; empty arrays fold to 0.0.
   */
 class DotProductSpec extends SparkSpec {
+
+  /** Built-in-HOF reference formulation, what [[Similarity.dot]] must
+    * keep matching bit-for-bit. */
+  private def dotHof(a: Column, b: Column): Column =
+    aggregate(zip_with(a, b, (x, y) => x * y), lit(0.0), (acc, x) => acc + x)
 
   test("graft_dot == dotHof on normal/null/mismatch/empty/NaN/null-element arrays") {
     val df = spark.sql(
@@ -27,7 +33,7 @@ class DotProductSpec extends SparkSpec {
         |AS t(a, b)""".stripMargin)
     val rows = df.select(
       Similarity.dot(col("a"), col("b")).as("native"),
-      Similarity.dotHof(col("a"), col("b")).as("hof")).collect()
+      dotHof(col("a"), col("b")).as("hof")).collect()
     rows.zipWithIndex.foreach { case (r, i) =>
       assert(r.isNullAt(0) == r.isNullAt(1), s"row $i null mismatch: $r")
       if (!r.isNullAt(0))

@@ -172,28 +172,8 @@ class AqeSkewSpec extends SparkSpec {
   }
 
   /** Runs `action`, returns every task's shuffle-read record count. */
-  private def taskShuffleReads(action: => Unit): Seq[Long] = {
-    val recs = scala.collection.mutable.ArrayBuffer.empty[Long]
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-        if (te.taskMetrics != null) recs.synchronized {
-          recs += te.taskMetrics.shuffleReadMetrics.recordsRead
-        }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      action
-      // listener events are posted async — poll until the buffer settles
-      var last = -1
-      var same = 0
-      while (same < 3) {
-        Thread.sleep(100)
-        val now = recs.synchronized(recs.size)
-        if (now == last) same += 1 else { same = 0; last = now }
-      }
-      recs.synchronized(recs.toVector)
-    } finally spark.sparkContext.removeSparkListener(listener)
-  }
+  private def taskShuffleReads(action: => Unit): Seq[Long] =
+    profile(action).tasks.map(_.shuffleReadMetrics.recordsRead)
 
   test("AQE skew join: the hot partition is split — no task reads the whole key") {
     // one key carries 50k of 60k left rows (a ~5 MB shuffle partition vs
@@ -268,26 +248,8 @@ class SkewSpec extends SparkSpec {
     // agg+join form shuffles only per-key (avg, stddev) partials and
     // broadcast-joins them back, so no task ever shuffle-reads more than a
     // sliver regardless of key skew.
-    def taskReads(action: => Unit): Seq[Long] = {
-      val recs = scala.collection.mutable.ArrayBuffer.empty[Long]
-      val listener = new org.apache.spark.scheduler.SparkListener {
-        override def onTaskEnd(te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-          if (te.taskMetrics != null) recs.synchronized {
-            recs += te.taskMetrics.shuffleReadMetrics.recordsRead
-          }
-      }
-      spark.sparkContext.addSparkListener(listener)
-      try {
-        action
-        var last = -1; var same = 0
-        while (same < 3) {
-          Thread.sleep(100)
-          val now = recs.synchronized(recs.size)
-          if (now == last) same += 1 else { same = 0; last = now }
-        }
-        recs.synchronized(recs.toVector)
-      } finally spark.sparkContext.removeSparkListener(listener)
-    }
+    def taskReads(action: => Unit): Seq[Long] =
+      profile(action).tasks.map(_.shuffleReadMetrics.recordsRead)
     val hot = spark.range(0, 60000, 1, 16)
       .select(col("id").as("event_id"),
         when(col("id") < 50000, 7L).otherwise(col("id") % 97).as("user_id"),

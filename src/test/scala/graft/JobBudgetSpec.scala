@@ -1,7 +1,6 @@
 package graft
 
-import org.apache.spark.scheduler.StageInfo
-import org.apache.spark.sql.DataFrame
+import graft.core.Profile
 import graft.pipeline.{Climate, ClimateFixture}
 import graft.sources.Sinks
 
@@ -16,19 +15,16 @@ class JobBudgetSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("graft_jobs")
     val (b, st) = ClimateFixture.writeTo(dir.resolve("in").toString)
     val out = dir.resolve("gold")
-    var lineage: Option[DataFrame] = None
-    var done = Seq.empty[StageInfo]
-    val n = jobs {
-      done = stages {
-        val g = Climate.run(spark, b, st)
-        lineage = Some(g.lineage)
-        val tables = Seq("kpis" -> g.kpis, "dim" -> g.stationsDim,
-          "fact" -> g.fact, "extremes" -> g.extremes)
-        tables.foreach { case (t, df) => Sinks.parquetOverwrite(df, out.resolve(t).toString) }
-        tables.foreach { case (t, df) => Sinks.singleFileCsv(df, out.resolve(t + "_csv").toString) }
-      }
+    val (lineage, p) = Profile.of(spark) {
+      val g = Climate.run(spark, b, st)
+      val tables = Seq("kpis" -> g.kpis, "dim" -> g.stationsDim,
+        "fact" -> g.fact, "extremes" -> g.extremes)
+      tables.foreach { case (t, df) => Sinks.parquetOverwrite(df, out.resolve(t).toString) }
+      tables.foreach { case (t, df) => Sinks.singleFileCsv(df, out.resolve(t + "_csv").toString) }
+      g.lineage
     }
-    lineage.foreach(_.unpersist(blocking = true))
+    val (n, done) = (p.jobs, p.stages)
+    lineage.unpersist(blocking = true)
     val parts = spark.conf.get("spark.sql.shuffle.partitions").toInt
     // a stage that holds the cached lineage's RDD builds or reads the cache
     val cached = done.filter(_.rddInfos.exists(_.storageLevel.isValid))

@@ -521,28 +521,9 @@ class PlanSpec extends SparkSpec {
     // the map-side group limit must shrink what the orders shuffle
     // CARRIES, not only what the window later discards: run q79 with the
     // rewrite on vs off (windowGroupLimitThreshold=0 suppresses it) and
-    // compare total shuffle-write records. Listener events post async —
-    // poll until the buffer settles (3 stable polls; AQE lessons).
-    def totalShuffleWrites(action: => Unit): Long = {
-      val recs = scala.collection.mutable.ArrayBuffer.empty[Long]
-      val listener = new org.apache.spark.scheduler.SparkListener {
-        override def onTaskEnd(te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-          if (te.taskMetrics != null) recs.synchronized {
-            recs += te.taskMetrics.shuffleWriteMetrics.recordsWritten
-          }
-      }
-      spark.sparkContext.addSparkListener(listener)
-      try {
-        action
-        var last = -1; var same = 0
-        while (same < 3) {
-          Thread.sleep(100)
-          val now = recs.synchronized(recs.size)
-          if (now == last) same += 1 else { same = 0; last = now }
-        }
-        recs.synchronized(recs.sum)
-      } finally spark.sparkContext.removeSparkListener(listener)
-    }
+    // compare total shuffle-write records.
+    def totalShuffleWrites(action: => Unit): Long =
+      profile(action).tasks.map(_.shuffleWriteMetrics.recordsWritten).sum
     val key = "spark.sql.optimizer.windowGroupLimitThreshold"
     val old = spark.conf.get(key)
     try {

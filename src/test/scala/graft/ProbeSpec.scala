@@ -30,6 +30,16 @@ class ProbeSpec extends SparkSpec {
     assert(out(2) == "no_such_query: UNKNOWN")
   }
 
+  test("profile: under a lagging listener bus, the row's jobs/stgs/tasks equal a Profile of the next forced run") {
+    val q = "q01_pricing_summary"
+    lagging(500) {
+      val row = printed(Probe.profile(spark, sf, Seq(q)))(1).split("\\s+")
+      val p = profile(Harness.timeForced(spark, sf, Harness.registry(q)))
+      assert(row.slice(2, 5).toSeq.map(_.toInt) ==
+        Seq(p.jobs, p.stages.size, p.stages.map(_.numTasks).sum), row.mkString(" "))
+    }
+  }
+
   test("explain: writes <dir>/<query>_<suffix>.txt with the physical plan") {
     val dir = Files.createTempDirectory("probe-explain")
     printed(Probe.explain(spark, sf, dir.toString, "after", Seq("q01_pricing_summary")))

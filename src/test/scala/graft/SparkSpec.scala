@@ -1,8 +1,8 @@
 package graft
 
-import scala.jdk.CollectionConverters._
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted, StageInfo}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 import org.apache.spark.sql.SparkSession
+import graft.core.Profile
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local SparkSession for all suites (one JVM-wide session). */
@@ -25,30 +25,20 @@ abstract class SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = TestSpark.spark
   val sf: String = TestSpark.sf
 
+  /** What Spark ran for `body`. */
+  def profile(body: => Unit): Profile = Profile.of(spark)(body)._2
+
   /** Spark jobs `body` starts. */
-  def jobs(body: => Unit): Int = {
-    val n = new java.util.concurrent.atomic.AtomicInteger()
-    listening(new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = n.incrementAndGet()
-    })(body)
-    n.get
-  }
+  def jobs(body: => Unit): Int = profile(body).jobs
 
-  /** Stages `body` completes, in completion order. */
-  def stages(body: => Unit): Seq[StageInfo] = {
-    val done = new java.util.concurrent.ConcurrentLinkedQueue[StageInfo]()
-    listening(new SparkListener {
-      override def onStageCompleted(e: SparkListenerStageCompleted): Unit = done.add(e.stageInfo)
-    })(body)
-    done.asScala.toSeq
-  }
-
-  /** Runs `body` with `l` attached; `l` sees every event `body` posts. */
-  private def listening(l: SparkListener)(body: => Unit): Unit = {
-    val sc = spark.sparkContext
-    org.apache.spark.graft.ListenerBus.drain(sc)
-    sc.addSparkListener(l)
-    try { body; org.apache.spark.graft.ListenerBus.drain(sc) }
-    finally sc.removeSparkListener(l)
+  /** Runs `body` with a listener on the bus's shared queue that takes
+    * `ms` per stage completion, so every event queued behind one reaches
+    * the other listeners late. */
+  def lagging[T](ms: Long)(body: => T): T = {
+    val slow = new SparkListener {
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit = Thread.sleep(ms)
+    }
+    spark.sparkContext.addSparkListener(slow)
+    try body finally spark.sparkContext.removeSparkListener(slow)
   }
 }
