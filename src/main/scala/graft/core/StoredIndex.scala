@@ -1,8 +1,7 @@
 package graft.core
 
-import java.nio.channels.FileChannel
 import java.nio.charset.StandardCharsets.UTF_8
-import java.nio.file.{Files, NoSuchFileException, Path, Paths, StandardCopyOption, StandardOpenOption}
+import java.nio.file.{Files, NoSuchFileException, Path, Paths}
 import java.util.concurrent.ConcurrentHashMap
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -13,7 +12,7 @@ import org.apache.spark.sql.functions._
   * them by the table format's snapshot id).
   *
   *  - Location: `java.io.tmpdir/graft_<family>_<pathKey(dir)>[suffix]/<table>`,
-  *    always a LOCAL path, so java.nio (not Hadoop FS) is sound here.
+  *    always a LOCAL path, so java.nio reads and writes the marker.
   *  - Stamp: the build params plus an order-independent content hash of
   *    the source, `count` and the exact `sum(xxhash64(key, payload))`
   *    from ONE aggregate (a single corpus scan). A regenerated corpus at
@@ -31,13 +30,9 @@ import org.apache.spark.sql.functions._
   *  - Marker: `_GRAFT_INDEX`, the stamp line followed by optional
   *    `name=Long` metadata lines. An index is current iff the first line
   *    of its marker is the stamp.
-  *  - Publish: a build writes into a hidden staging sibling (its name does
-  *    not start with `graft_`), writes the marker there last, and renames
-  *    the directory into place. Builds of one index are serialized by a
-  *    JVM monitor plus a file lock, so two JVMs sharing a tmpdir (Verify
-  *    and Bench) never swap an index out from under each other. A failed
-  *    or killed build never exposes a half-written index and leaves any
-  *    previously published one untouched.
+  *  - Publish: a build is a [[Publish]] whose last step writes the marker,
+  *    under the same [[Publish.exclusive]] as the stamp check, so two JVMs
+  *    sharing a tmpdir (Verify and Bench) never swap each other's index out.
   */
 object StoredIndex {
 
@@ -67,9 +62,9 @@ object StoredIndex {
 
   /** A build in progress: where to write each table, the source row count
     * the stamp measured, and metadata to record in the marker. */
-  final class Build private[StoredIndex] (root: Path, val rows: Long) {
+  final class Build private[StoredIndex] (root: org.apache.hadoop.fs.Path, val rows: Long) {
     private[StoredIndex] val meta = scala.collection.mutable.LinkedHashMap.empty[String, Long]
-    def path(table: String): String = root.resolve(table).toString
+    def path(table: String): String = new org.apache.hadoop.fs.Path(root, table).toString
     def record(name: String, value: Long): Unit = meta(name) = value
   }
 
@@ -83,8 +78,15 @@ object StoredIndex {
     val s = source.sparkSession
     val (rows, fp) = contentStamp(source, key, payload)
     val stamp = s"$params rows=$rows fp=$fp src=$dir"
-    current(s, live, stamp).getOrElse(exclusive(live) {
-      current(s, live, stamp).getOrElse(publish(s, live, stamp, rows, build))
+    current(s, live, stamp).getOrElse(Publish.exclusive(s, live.toString) {
+      current(s, live, stamp).getOrElse(Publish.swap(s, live.toString) { staging =>
+        val b = new Build(staging, rows)
+        build(b)
+        val root = Files.createDirectories(Paths.get(staging.toUri))
+        Files.write(root.resolve(Marker),
+          (stamp +: b.meta.map { case (k, v) => s"$k=$v" }.toSeq).mkString("\n").getBytes(UTF_8))
+        new Index(s, live, b.meta.toMap)
+      })
     })
   }
 
@@ -119,44 +121,4 @@ object StoredIndex {
       k -> v.toLong
     }.toMap))
   }
-
-  private def publish(s: SparkSession, live: Path, stamp: String, rows: Long,
-                      build: Build => Unit): Index = {
-    val staging = sibling(live, "staging")
-    val b = new Build(staging, rows)
-    try {
-      build(b)
-      Files.createDirectories(staging)
-      Files.write(staging.resolve(Marker),
-        (stamp +: b.meta.map { case (k, v) => s"$k=$v" }.toSeq).mkString("\n").getBytes(UTF_8))
-      val old = sibling(live, "old")
-      if (Files.exists(live)) Files.move(live, old, StandardCopyOption.ATOMIC_MOVE)
-      Files.move(staging, live, StandardCopyOption.ATOMIC_MOVE)
-      delete(old)
-    } catch { case e: Throwable => delete(staging); throw e }
-    new Index(s, live, b.meta.toMap)
-  }
-
-  private def sibling(live: Path, what: String): Path =
-    live.resolveSibling(s".${live.getFileName}.${java.util.UUID.randomUUID}.$what")
-
-  private def delete(p: Path): Unit =
-    if (Files.exists(p)) {
-      val paths = Files.walk(p)
-      try paths.sorted(java.util.Comparator.reverseOrder()).forEach(q => Files.delete(q))
-      finally paths.close()
-    }
-
-  private val monitors = new ConcurrentHashMap[Path, AnyRef]()
-
-  /** Run `body` holding the build lock of the index at `live`: the JVM
-    * monitor orders this JVM's threads (a FileChannel lock is held per
-    * process), the file lock orders JVMs. */
-  private def exclusive[T](live: Path)(body: => T): T =
-    monitors.computeIfAbsent(live, _ => new Object).synchronized {
-      val ch = FileChannel.open(live.resolveSibling(s".${live.getFileName}.lock"),
-        StandardOpenOption.CREATE, StandardOpenOption.WRITE)
-      try { ch.lock(); body }
-      finally ch.close()
-    }
 }

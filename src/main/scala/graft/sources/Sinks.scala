@@ -2,8 +2,10 @@ package graft.sources
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SaveMode}
+import graft.core.Publish
 
-/** The reference's two sinks (SURVEY.md §2.2). */
+/** The reference's two sinks (SURVEY.md §2.2) and three more layouts: five
+  * writers, all but [[bucketedTable]] published through [[Publish]]. */
 object Sinks {
 
   /** K1: idempotent parquet layer write. At scale, callers should
@@ -11,7 +13,7 @@ object Sinks {
     * helper deliberately leaves partitioning to the caller.
     */
   def parquetOverwrite(df: DataFrame, path: String): Unit =
-    df.write.mode(SaveMode.Overwrite).parquet(path)
+    Publish(df.sparkSession, path)(p => df.write.parquet(p.toString))
 
   /** K2: single-file CSV export for BI tools
     * (reference jobs/03_silver_to_gold.py:5-17): `path` becomes a
@@ -19,23 +21,18 @@ object Sinks {
     * to what the reference's `coalesce(1)` write produces.
     *
     * The rows are written in parallel, one header-bearing part file per
-    * non-empty partition (partition 0 always writes one), into a hidden
-    * staging sibling of `path`. The driver then concatenates the parts in
-    * part-name order (partition order), keeping the first header only,
-    * and publishes the single file by renaming its directory into place.
-    * A failed export leaves any previous export at `path` untouched and no
-    * staging directory behind. Column names must not contain a newline:
-    * the header is taken to be the first line of each part.
+    * non-empty partition (partition 0 always writes one), into the
+    * publish's staging directory. The driver then concatenates the parts in
+    * part-name order (partition order), keeping the first header only, and
+    * deletes the parts. Column names must not contain a newline: the header
+    * is taken to be the first line of each part.
     */
   def singleFileCsv(df: DataFrame, path: String): Unit = {
     require(!df.columns.exists(_.contains('\n')),
       s"singleFileCsv: a column name holds a newline: ${df.columns.mkString(", ")}")
-    val live = new Path(path)
-    val fs = live.getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration)
-    val staging = new Path(fs.makeQualified(live).getParent,
-      s".${live.getName}.${java.util.UUID.randomUUID}.staging")
-    try {
-      val parts = new Path(staging, "parts")
+    Publish(df.sparkSession, path) { out =>
+      val fs = out.getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration)
+      val parts = new Path(out, "parts")
       df.write
         .option("header", "true")
         .option("delimiter", ",")
@@ -44,12 +41,9 @@ object Sinks {
       val files = fs.listStatus(parts).map(_.getPath)
         .filter(p => p.getName.startsWith("part-") && p.getName.endsWith(".csv"))
         .sortBy(_.getName)
-      val single = new Path(staging, "single")
-      concatenate(fs, files.toSeq, new Path(single, files.head.getName))
-      val old = new Path(staging, "old")
-      if (fs.exists(live) && !fs.rename(live, old)) sys.error(s"cannot move $live aside")
-      if (!fs.rename(single, live)) sys.error(s"cannot publish $live")
-    } finally fs.delete(staging, true)
+      concatenate(fs, files.toSeq, new Path(out, files.head.getName))
+      fs.delete(parts, true)
+    }
   }
 
   /** `files` into `out`: one header, then each file without its own,
@@ -85,7 +79,7 @@ object Sinks {
     * posture as parquet). Round-trip evidenced in TimeSeriesSpec.
     */
   def orcOverwrite(df: DataFrame, path: String): Unit =
-    df.write.mode(SaveMode.Overwrite).orc(path)
+    Publish(df.sparkSession, path)(p => df.write.orc(p.toString))
 
   /** Date/key-partitioned parquet layout — the 100 TB fact-table shape:
     * queries filtered on `partitionCols` scan only matching directories
@@ -93,13 +87,13 @@ object Sinks {
     */
   def partitionedParquet(df: DataFrame, path: String,
                          partitionCols: Seq[String]): Unit =
-    df.write.mode(SaveMode.Overwrite)
-      .partitionBy(partitionCols: _*)
-      .parquet(path)
+    Publish(df.sparkSession, path)(p =>
+      df.write.partitionBy(partitionCols: _*).parquet(p.toString))
 
   /** Bucketed + sorted managed table: both sides of a repeated fact-fact
     * join written this way co-locate and join with zero shuffle
-    * (evidenced in BucketingSpec).
+    * (evidenced in BucketingSpec). It keeps Spark's in-place overwrite:
+    * a catalog table cannot be renamed into place by [[Publish]].
     */
   def bucketedTable(df: DataFrame, table: String, buckets: Int,
                     bucketCols: Seq[String]): Unit =

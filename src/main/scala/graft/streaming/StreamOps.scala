@@ -310,13 +310,12 @@ object StreamOps {
     * the state table converges regardless of micro-batch retries (the
     * checkpoint still dedupes source offsets — this is defense in depth).
     *
-    * THE read-then-overwrite trap: the next state is materialized with an
-    * eager localCheckpoint BEFORE the overwrite starts — the plan reads
-    * the same directory it is about to replace, and a lazy write would
-    * delete its own input mid-scan. At 100 TB this helper's overwrite
-    * becomes a transactional-format MERGE (the read-modify-write shape is
-    * identical); partition the state by a key prefix and the per-batch
-    * rewrite touches only affected partitions.
+    * The merged state is written through [[graft.core.Publish]]: into a
+    * staging directory while the live state it reads stays intact, so a
+    * failing micro-batch leaves the accumulated state as it was. At 100 TB
+    * this helper's rewrite becomes a transactional-format MERGE (the
+    * read-modify-write shape is identical); partition the state by a key
+    * prefix and the per-batch rewrite touches only affected partitions.
     */
   def foreachBatchUpsert(stream: DataFrame, keys: Seq[String],
                          statePath: String, checkpointPath: String)
@@ -327,20 +326,15 @@ object StreamOps {
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
         val spark = batch.sparkSession
         val updates = batch.dropDuplicates(keys)
-        // Existence via the Hadoop FileSystem API, not java.io.File — the
-        // state table may live on hdfs://, s3a://, etc., where a local
-        // File.exists() is always false and every batch would silently
-        // overwrite the merged state with just that batch (ADVICE r5).
-        val statePathH = new org.apache.hadoop.fs.Path(statePath)
-        val fs = statePathH.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        val merged =
-          if (fs.exists(statePathH))
-            graft.ops.Maintenance.upsert(
-              spark.read.parquet(statePath), updates, keys)
-          else updates.toDF()
-        merged.localCheckpoint(true) // materialize BEFORE overwriting our own input
-          .write.mode("overwrite").parquet(statePath)
-        ()
+        // existence via Hadoop FS, not java.io.File: on hdfs:// or s3a://
+        // File.exists() is always false and each batch would drop the state
+        val state = new org.apache.hadoop.fs.Path(statePath)
+        val fs = state.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        graft.core.Publish(spark, statePath) { staging =>
+          val merged = if (!fs.exists(state)) updates.toDF()
+            else graft.ops.Maintenance.upsert(spark.read.parquet(statePath), updates, keys)
+          merged.write.parquet(staging.toString)
+        }
       }
       .start()
 

@@ -199,6 +199,28 @@ class StreamingSpec extends SparkSpec {
     assert(got == Seq((1L, "shipped", 11.0), (2L, "new", 20.0), (3L, "new", 30.0)))
   }
 
+  test("foreachBatchUpsert: a batch whose merge throws leaves the previous state unchanged") {
+    implicit val sqlCtx = spark.sqlContext
+    val dir = java.nio.file.Files.createTempDirectory("graft_upsert_fail")
+    val state = s"$dir/state"
+    val mem = MemoryStream[(Long, String, Double)]
+    val stream = mem.toDF().toDF("k", "status", "amount").withColumn("amount",
+      when(col("k") === 99L, raise_error(lit("boom"))).otherwise(col("amount")))
+    val q = StreamOps.foreachBatchUpsert(stream, Seq("k"), state, s"$dir/ckpt")
+    mem.addData((1L, "new", 10.0), (2L, "new", 20.0))
+    q.processAllAvailable()
+    def read() = spark.read.parquet(state).orderBy("k").as[(Long, String, Double)].collect().toSeq
+    def files() = new java.io.File(state).list().sorted.toSeq
+    val (before, listing) = (read(), files())
+    mem.addData((1L, "shipped", 11.0), (99L, "new", 0.0))
+    intercept[org.apache.spark.sql.streaming.StreamingQueryException](q.processAllAvailable())
+    q.stop()
+    assert(before == Seq((1L, "new", 10.0), (2L, "new", 20.0)))
+    assert(read() == before)
+    assert(files() == listing)
+    assert(dir.toFile.list().sorted.toSeq == Seq("ckpt", "state"), "a staging directory was left behind")
+  }
+
   test("enrich: stream-static broadcast join adds dimension columns") {
     implicit val sqlCtx = spark.sqlContext
     val dim = Seq((1L, "gold"), (2L, "silver")).toDF("user_id", "tier")
