@@ -566,18 +566,20 @@ object ScaleCheck {
     // one mutual pair per connected component of the rounded-zero-
     // distance graph — NN(lowest) = second-lowest and vice versa, every
     // other member's reciprocity fails. Computed with the same 3×3 grid
-    // candidate relation + the engine's own connectedComponents.
+    // candidate relation + the engine's own connectedComponents, at the
+    // corpus-derived grid side the registered s23 uses.
     val t10 = System.nanoTime()
+    val mnnCell = graft.ext.Similarity.autoCellSize(nVec)
     val mnn = graft.ext.Similarity.mutualNN2d(embBig, "vec_id", "embedding",
-        cellSize = 0.1)
+        cellSize = mnnCell)
       .localCheckpoint()
     val nMnn = mnn.count()
     val mnnNonzero = mnn.filter(col("dist2") =!= 0.0).count()
     val zpts = embBig.select(col("vec_id").as("pid"),
         element_at(col("embedding"), 1).cast("double").as("x"),
         element_at(col("embedding"), 2).cast("double").as("y"))
-      .withColumn("gx", floor(col("x") / 0.1).cast("long"))
-      .withColumn("gy", floor(col("y") / 0.1).cast("long"))
+      .withColumn("gx", floor(col("x") / mnnCell).cast("long"))
+      .withColumn("gy", floor(col("y") / mnnCell).cast("long"))
     val zprobe = zpts
       .withColumn("dx", explode(lit(Array(-1L, 0L, 1L))))
       .withColumn("dy", explode(lit(Array(-1L, 0L, 1L))))
@@ -619,7 +621,7 @@ object ScaleCheck {
     out ++= f""""t_lpa_sec":$tLpa%.1f,"lpa_nodes":${lpa0N * mult},"lpa_copy_mismatch":$lpaMismatch,"""
     out ++= f""""t_pca_sec":$tPca%.1f,"pca_copy_diff":$pcaDiff%.2e,"""
     out ++= f""""t_prefix_sec":$tPrefix%.1f,"prefix_pairs":$nPf,"prefix_hot":$hotPf,"""
-    out ++= f""""t_mutual_sec":$tMutual%.1f,"mutual_pairs":$nMnn,"mutual_groups":$nZeroGroups,"""
+    out ++= f""""t_mutual_sec":$tMutual%.1f,"mutual_cell":$mnnCell%.6f,"mutual_pairs":$nMnn,"mutual_groups":$nZeroGroups,"""
     out ++= f""""t_sn_sec":$tSn%.1f,"sn_pairs":$nSnPairs,"sn_hot_linked":$snHotLinked,"sn_orig_linked":$snOrigLinked,"""
     out ++= f""""t_bpe_sec":$tBpe%.1f,"bpe_rounds":${bpeSampled.size},"bpe_sample_kept":$bpeKept,"""
     out ++= s""""bfs_levels":{${lvlScaled.toSeq.sorted.map { case (d, n) => s""""$d":$n""" }.mkString(",")}},"""

@@ -3,7 +3,7 @@ package graft.ext
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import Similarity.dot
+import Similarity.{dot, norm, probe, roundedCos, topK}
 
 /** IVF (inverted-file) approximate nearest-neighbor search: coarse-quantize
   * vectors into k cells via a small k-means, then search only the `nprobe`
@@ -256,31 +256,30 @@ object IVF {
     */
   def ivfTopKWith(centroids: DataFrame, assigned: DataFrame, q: DataFrame,
                   k: Int, nprobe: Int): DataFrame = {
-    val dq = dot(col("q_vec"), col("q_vec")) - lit(2.0) * dot(col("q_vec"), col("c")) +
-      dot(col("c"), col("c"))
-    val wp = Window.partitionBy("q_id").orderBy(col("d2"), col("cell"))
-    val probes = q.crossJoin(broadcast(centroids))
-      .withColumn("d2", dq)
-      .withColumn("rn", row_number().over(wp))
-      .filter(col("rn") <= nprobe)
-      .select(col("q_id"), col("q_vec"), col("cell"))
-
-    // candidates = vectors in probed cells; exact cosine rank. Norms are
-    // computed once per side BEFORE the join (per-pair norm folds would
-    // double the ranking cost — the posture Similarity documents).
-    val assignedN = assigned.withColumn("v_norm", sqrt(dot(col("v"), col("v"))))
-    val probesN   = probes.withColumn("q_norm", sqrt(dot(col("q_vec"), col("q_vec"))))
-    val cands = probesN.join(assignedN, "cell")
-      .filter(col("vid") =!= col("q_id"))
-    val cos = round(
-      dot(col("q_vec"), col("v")) / (col("q_norm") * col("v_norm")), 6)
-    val wr = Window.partitionBy("q_id").orderBy(col("cos").desc, col("vid"))
-    cands.withColumn("cos", cos)
-      .withColumn("rn", row_number().over(wr))
-      .filter(col("rn") <= k)
-      .select(col("q_id"), col("vid").as("c_id"), col("cos"),
-        col("rn").cast("int").as("rn"))
+    val probes = probe(q, centroids, "q_vec", nprobe, Seq("q_id"),
+      col("q_id"), col("q_vec"), col("cell"))
+    probedTopK(probes, assigned, Seq("cell"), k)
   }
+
+  /** Exact-cosine top-k over the vectors of the probed cells: `probes`
+    * (q_id, q_vec, `keys`…) joins the assigned corpus (vid, v, `keys`…)
+    * on the cell key(s). Norms are computed once per side BEFORE the join
+    * (per-pair norm folds would double the ranking cost — the posture
+    * Similarity documents).
+    */
+  private def probedTopK(probes: DataFrame, assigned: DataFrame, keys: Seq[String],
+                         k: Int): DataFrame =
+    exactTopK(probes.withColumn("q_norm", norm("q_vec"))
+      .join(assigned.withColumn("v_norm", norm("v")), keys)
+      .filter(col("vid") =!= col("q_id")), k)
+
+  /** The exact-cosine ranking of (q_id, q_vec, q_norm) × (vid, v, v_norm)
+    * pairs: (q_id, c_id, cos, rn ≤ k), ties to the lowest vid. The tail of
+    * every IVF and PQ query (PQ's re-rank of its ADC shortlist).
+    */
+  private[ext] def exactTopK(pairs: DataFrame, k: Int): DataFrame =
+    topK(pairs.withColumn("cos", roundedCos("q_vec", "v", "q_norm", "v_norm")),
+      k, Seq(col("cos").desc, col("vid")), col("q_id"), col("vid").as("c_id"), col("cos"))
 
   // ---------- two-level (residual) coarse quantizer ----------
   //
@@ -375,37 +374,12 @@ object IVF {
   private[graft] def ivf2TopKWith(l1: DataFrame, l2: DataFrame,
                                   assigned: DataFrame, q: DataFrame,
                                   k: Int, nprobe1: Int, nprobe2: Int): DataFrame = {
-    val d1 = dot(col("q_vec"), col("q_vec")) -
-      lit(2.0) * dot(col("q_vec"), col("c")) +
-      dot(col("c"), col("c"))
-    val w1 = Window.partitionBy("q_id").orderBy(col("d2"), col("cell"))
-    val probes1 = q.crossJoin(broadcast(l1))
-      .withColumn("d2", d1)
-      .withColumn("rn", row_number().over(w1))
-      .filter(col("rn") <= nprobe1)
-      .select(col("q_id"), col("q_vec"), col("cell").as("cell1"),
-        zip_with(col("q_vec"), col("c"), (a, b) => a - b).as("rq"))
-    val d2c = dot(col("rq"), col("rq")) -
-      lit(2.0) * dot(col("rq"), col("c")) +
-      dot(col("c"), col("c"))
-    val w2 = Window.partitionBy("q_id", "cell1").orderBy(col("d2"), col("cell"))
-    val probes = probes1.crossJoin(broadcast(l2))
-      .withColumn("d2", d2c)
-      .withColumn("rn", row_number().over(w2))
-      .filter(col("rn") <= nprobe2)
-      .select(col("q_id"), col("q_vec"), col("cell1"), col("cell").as("cell2"))
-
-    val assignedN = assigned.withColumn("v_norm", sqrt(dot(col("v"), col("v"))))
-    val probesN = probes.withColumn("q_norm", sqrt(dot(col("q_vec"), col("q_vec"))))
-    val cands = probesN.join(assignedN, Seq("cell1", "cell2"))
-      .filter(col("vid") =!= col("q_id"))
-    val cos = round(
-      dot(col("q_vec"), col("v")) / (col("q_norm") * col("v_norm")), 6)
-    val wr = Window.partitionBy("q_id").orderBy(col("cos").desc, col("vid"))
-    cands.withColumn("cos", cos)
-      .withColumn("rn", row_number().over(wr))
-      .filter(col("rn") <= k)
-      .select(col("q_id"), col("vid").as("c_id"), col("cos"),
-        col("rn").cast("int").as("rn"))
+    val probes1 = probe(q, l1, "q_vec", nprobe1, Seq("q_id"),
+      col("q_id"), col("q_vec"), col("cell").as("cell1"),
+      zip_with(col("q_vec"), col("c"), (a, b) => a - b).as("rq"))
+    // second level: the residual's nearest L2 cells within each probed L1 cell
+    val probes = probe(probes1, l2, "rq", nprobe2, Seq("q_id", "cell1"),
+      col("q_id"), col("q_vec"), col("cell1"), col("cell").as("cell2"))
+    probedTopK(probes, assigned, Seq("cell1", "cell2"), k)
   }
 }

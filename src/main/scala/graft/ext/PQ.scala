@@ -3,7 +3,7 @@ package graft.ext
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import Similarity.dot
+import Similarity.{dot, firstK, norm, probe}
 
 /** Product quantization (PQ) for embedding columns — the third ANN scale
   * path alongside RP-LSH (Similarity.annTopK) and IVF (IVF.ivfTopK), and
@@ -287,42 +287,11 @@ object PQ {
     val codes = lastAssign.getOrElse(assignCodesKernel(subs, collectCb(cb)))
       .select(col("vid"), col("sub"), col("cell"))
 
-    val q = emb.filter(queryPred)
-      .select(col(id).as("q_id"), col(vec).cast("array<double>").as("q_vec"))
-    // per-query LUT over the codebook: qd = q_sub·c, cc = ‖c‖² — (#q)·m·kc
-    // rows, broadcast to the code scan
-    val qsubs = subRows(q.select(col("q_id").as("vid"), col("q_vec").as("v")), m)
-      .select(col("vid").as("q_id"), col("sub"), col("subv").as("qs"))
-    val lut = qsubs.join(cb, "sub")
-      .select(col("q_id"), col("sub"), col("cell"),
-        dot(col("qs"), col("c")).as("qd"),
-        dot(col("c"), col("c")).as("cc"))
-    val qn = q.select(col("q_id"),
-      sqrt(dot(col("q_vec"), col("q_vec"))).as("q_norm"), col("q_vec"))
-
-    // ADC scan: code rows ⋈ broadcast LUT on (sub, cell); partial sums
-    // combine map-side so the shuffle carries (q, vid) partials
-    val wApprox = Window.partitionBy("q_id").orderBy(col("approx_cos").desc, col("vid"))
-    val shortlist = codes.join(broadcast(lut), Seq("sub", "cell"))
-      .filter(col("vid") =!= col("q_id"))
-      .groupBy(col("q_id"), col("vid"))
-      .agg(sum(col("qd")).as("num"), sum(col("cc")).as("cand_n2"))
-      .join(broadcast(qn.select(col("q_id"), col("q_norm"))), "q_id")
-      .withColumn("approx_cos", col("num") / (col("q_norm") * sqrt(col("cand_n2"))))
-      .withColumn("arn", row_number().over(wApprox))
-      .filter(col("arn") <= k * rerank)
-      .select(col("q_id"), col("vid"))
-
-    // exact re-rank of the shortlist only
-    val vn = v.withColumn("v_norm", sqrt(dot(col("v"), col("v"))))
-    val wExact = Window.partitionBy("q_id").orderBy(col("cos").desc, col("vid"))
-    shortlist.join(vn, "vid").join(broadcast(qn), "q_id")
-      .withColumn("cos", round(
-        dot(col("q_vec"), col("v")) / (col("q_norm") * col("v_norm")), 6))
-      .withColumn("rn", row_number().over(wExact))
-      .filter(col("rn") <= k)
-      .select(col("q_id"), col("vid").as("c_id"), col("cos"),
-        col("rn").cast("int").as("rn"))
+    val (_, lut, qn) = adcQueries(emb, id, vec, queryPred, cb, m)
+    // ADC scan: code rows ⋈ broadcast LUT on (sub, cell)
+    val shortlist = adcShortlist(codes.join(broadcast(lut), Seq("sub", "cell"))
+      .filter(col("vid") =!= col("q_id")), qn, k * rerank)
+    exactRerank(shortlist, v, qn, k)
   }
 
   /** ADC top-k from a STORED index — the build-once/query-many deployment
@@ -341,37 +310,10 @@ object PQ {
     val codeRows = codes.select(col("vid"), posexplode(col("codes")))
       .select(col("vid"), col("pos").as("sub"), col("col").as("cell"))
 
-    val q = emb.filter(queryPred)
-      .select(col(id).as("q_id"), col(vec).cast("array<double>").as("q_vec"))
-    val qsubs = subRows(q.select(col("q_id").as("vid"), col("q_vec").as("v")), m)
-      .select(col("vid").as("q_id"), col("sub"), col("subv").as("qs"))
-    val lut = qsubs.join(cb, "sub")
-      .select(col("q_id"), col("sub"), col("cell"),
-        dot(col("qs"), col("c")).as("qd"),
-        dot(col("c"), col("c")).as("cc"))
-    val qn = q.select(col("q_id"),
-      sqrt(dot(col("q_vec"), col("q_vec"))).as("q_norm"), col("q_vec"))
-
-    val wApprox = Window.partitionBy("q_id").orderBy(col("approx_cos").desc, col("vid"))
-    val shortlist = codeRows.join(broadcast(lut), Seq("sub", "cell"))
-      .filter(col("vid") =!= col("q_id"))
-      .groupBy(col("q_id"), col("vid"))
-      .agg(sum(col("qd")).as("num"), sum(col("cc")).as("cand_n2"))
-      .join(broadcast(qn.select(col("q_id"), col("q_norm"))), "q_id")
-      .withColumn("approx_cos", col("num") / (col("q_norm") * sqrt(col("cand_n2"))))
-      .withColumn("arn", row_number().over(wApprox))
-      .filter(col("arn") <= k * rerank)
-      .select(col("q_id"), col("vid"))
-
-    val vn = v.withColumn("v_norm", sqrt(dot(col("v"), col("v"))))
-    val wExact = Window.partitionBy("q_id").orderBy(col("cos").desc, col("vid"))
-    shortlist.join(vn, "vid").join(broadcast(qn), "q_id")
-      .withColumn("cos", round(
-        dot(col("q_vec"), col("v")) / (col("q_norm") * col("v_norm")), 6))
-      .withColumn("rn", row_number().over(wExact))
-      .filter(col("rn") <= k)
-      .select(col("q_id"), col("vid").as("c_id"), col("cos"),
-        col("rn").cast("int").as("rn"))
+    val (_, lut, qn) = adcQueries(emb, id, vec, queryPred, cb, m)
+    val shortlist = adcShortlist(codeRows.join(broadcast(lut), Seq("sub", "cell"))
+      .filter(col("vid") =!= col("q_id")), qn, k * rerank)
+    exactRerank(shortlist, v, qn, k)
   }
 
   /** IVF-PQ: the canonical billion-scale ANN composition (coarse k-means
@@ -432,52 +374,18 @@ object PQ {
                  else lastAssign.getOrElse(assignCodesKernel(subs, collectCb(cb))))
       .select(col("vid"), col("sub"), col("cell"))
 
-    val q = emb.filter(queryPred)
-      .select(col(id).as("q_id"), col(vec).cast("array<double>").as("q_vec"))
-    val dq = dot(col("q_vec"), col("q_vec")) -
-      lit(2.0) * dot(col("q_vec"), col("c")) + dot(col("c"), col("c"))
-    val wp = Window.partitionBy("q_id").orderBy(col("d2"), col("cell"))
-    val probes = q.crossJoin(broadcast(centroids))
-      .withColumn("d2", dq)
-      .withColumn("rn", row_number().over(wp))
-      .filter(col("rn") <= nprobe)
-      .select(col("q_id"), col("cell").as("ccell"))
+    val (q, lut, qn) = adcQueries(emb, id, vec, queryPred, cb, m)
+    val probes = probe(q, centroids, "q_vec", nprobe, Seq("q_id"),
+      col("q_id"), col("cell").as("ccell"))
     // the per-query candidate universe: vectors in probed coarse cells
     val cands = coarse.join(broadcast(probes), "ccell")
       .filter(col("vid") =!= col("q_id"))
       .select(col("q_id"), col("vid"))
-
-    val qsubs = subRows(q.select(col("q_id").as("vid"), col("q_vec").as("v")), m)
-      .select(col("vid").as("q_id"), col("sub"), col("subv").as("qs"))
-    val lut = qsubs.join(cb, "sub")
-      .select(col("q_id"), col("sub"), col("cell"),
-        dot(col("qs"), col("c")).as("qd"),
-        dot(col("c"), col("c")).as("cc"))
-    val qn = q.select(col("q_id"),
-      sqrt(dot(col("q_vec"), col("q_vec"))).as("q_norm"), col("q_vec"))
-
     // ADC over the probed-cell candidates only: the cell restriction rides
     // the (vid → q_id) join, the LUT lookup keys on (q_id, sub, cell)
-    val wApprox = Window.partitionBy("q_id").orderBy(col("approx_cos").desc, col("vid"))
-    val shortlist = codes.join(cands, "vid")
-      .join(broadcast(lut), Seq("q_id", "sub", "cell"))
-      .groupBy(col("q_id"), col("vid"))
-      .agg(sum(col("qd")).as("num"), sum(col("cc")).as("cand_n2"))
-      .join(broadcast(qn.select(col("q_id"), col("q_norm"))), "q_id")
-      .withColumn("approx_cos", col("num") / (col("q_norm") * sqrt(col("cand_n2"))))
-      .withColumn("arn", row_number().over(wApprox))
-      .filter(col("arn") <= k * rerank)
-      .select(col("q_id"), col("vid"))
-
-    val vn = v.withColumn("v_norm", sqrt(dot(col("v"), col("v"))))
-    val wExact = Window.partitionBy("q_id").orderBy(col("cos").desc, col("vid"))
-    shortlist.join(vn, "vid").join(broadcast(qn), "q_id")
-      .withColumn("cos", round(
-        dot(col("q_vec"), col("v")) / (col("q_norm") * col("v_norm")), 6))
-      .withColumn("rn", row_number().over(wExact))
-      .filter(col("rn") <= k)
-      .select(col("q_id"), col("vid").as("c_id"), col("cos"),
-        col("rn").cast("int").as("rn"))
+    val shortlist = adcShortlist(codes.join(cands, "vid")
+      .join(broadcast(lut), Seq("q_id", "sub", "cell")), qn, k * rerank)
+    exactRerank(shortlist, v, qn, k)
   }
 
   /** IVF-PQ query from a fully STORED index — the at-scale deployment of
@@ -504,16 +412,9 @@ object PQ {
                           k: Int = 5, nprobe: Int = 2, m: Int = 8,
                           rerank: Int = 4): DataFrame = {
     val v = emb.select(col(id).as("vid"), col(vec).cast("array<double>").as("v"))
-    val q = emb.filter(queryPred)
-      .select(col(id).as("q_id"), col(vec).cast("array<double>").as("q_vec"))
-    val dq = dot(col("q_vec"), col("q_vec")) -
-      lit(2.0) * dot(col("q_vec"), col("c")) + dot(col("c"), col("c"))
-    val wp = Window.partitionBy("q_id").orderBy(col("d2"), col("cell"))
-    val probes = q.crossJoin(broadcast(centroids))
-      .withColumn("d2", dq)
-      .withColumn("rn", row_number().over(wp))
-      .filter(col("rn") <= nprobe)
-      .select(col("q_id"), col("cell").as("ccell"))
+    val (q, lut, qn) = adcQueries(emb, id, vec, queryPred, cb, m)
+    val probes = probe(q, centroids, "q_vec", nprobe, Seq("q_id"),
+      col("q_id"), col("cell").as("ccell"))
     // static partition pruning: the union of probed cells is bounded by
     // the coarse cell count (≤ `cells` values however many queries run) —
     // a k-row driver pull, NOT data-sized. No checkpoint on `probes`:
@@ -530,35 +431,9 @@ object PQ {
     val codeRows = candCodes
       .select(col("q_id"), col("vid"), posexplode(col("codes")))
       .select(col("q_id"), col("vid"), col("pos").as("sub"), col("col").as("cell"))
-
-    val qsubs = subRows(q.select(col("q_id").as("vid"), col("q_vec").as("v")), m)
-      .select(col("vid").as("q_id"), col("sub"), col("subv").as("qs"))
-    val lut = qsubs.join(cb, "sub")
-      .select(col("q_id"), col("sub"), col("cell"),
-        dot(col("qs"), col("c")).as("qd"),
-        dot(col("c"), col("c")).as("cc"))
-    val qn = q.select(col("q_id"),
-      sqrt(dot(col("q_vec"), col("q_vec"))).as("q_norm"), col("q_vec"))
-
-    val wApprox = Window.partitionBy("q_id").orderBy(col("approx_cos").desc, col("vid"))
-    val shortlist = codeRows.join(broadcast(lut), Seq("q_id", "sub", "cell"))
-      .groupBy(col("q_id"), col("vid"))
-      .agg(sum(col("qd")).as("num"), sum(col("cc")).as("cand_n2"))
-      .join(broadcast(qn.select(col("q_id"), col("q_norm"))), "q_id")
-      .withColumn("approx_cos", col("num") / (col("q_norm") * sqrt(col("cand_n2"))))
-      .withColumn("arn", row_number().over(wApprox))
-      .filter(col("arn") <= k * rerank)
-      .select(col("q_id"), col("vid"))
-
-    val vn = v.withColumn("v_norm", sqrt(dot(col("v"), col("v"))))
-    val wExact = Window.partitionBy("q_id").orderBy(col("cos").desc, col("vid"))
-    shortlist.join(vn, "vid").join(broadcast(qn), "q_id")
-      .withColumn("cos", round(
-        dot(col("q_vec"), col("v")) / (col("q_norm") * col("v_norm")), 6))
-      .withColumn("rn", row_number().over(wExact))
-      .filter(col("rn") <= k)
-      .select(col("q_id"), col("vid").as("c_id"), col("cos"),
-        col("rn").cast("int").as("rn"))
+    val shortlist = adcShortlist(codeRows.join(broadcast(lut), Seq("q_id", "sub", "cell")),
+      qn, k * rerank)
+    exactRerank(shortlist, v, qn, k)
   }
 
   // ---------- residual encoding (the IVFADC of the PQ paper) ----------
@@ -583,6 +458,10 @@ object PQ {
   // build-time artifact persisted next to the codebook. The per-code scan
   // cost is unchanged: one LUT lookup + one cross-term lookup per
   // (candidate, sub), partial-agg-combinable exactly like the raw form.
+  // Only the shortlist score differs ([[residualShortlist]] vs
+  // [[adcShortlist]]): the probe (Similarity.probe), the query set-up
+  // ([[adcQueries]]), the shortlist cut and the exact re-rank
+  // ([[exactRerank]]) are the raw form's own helpers.
 
   /** Residuals against a trained coarse quantizer: (vid, ccell, v, r)
     * with r = v − c₁ (exact IEEE elementwise — `zip_with`, the
@@ -638,9 +517,9 @@ object PQ {
   /** IVF-PQ with RESIDUAL encoding — [[ivfAdcTopK]]'s pipeline with the
     * fine quantizer trained on v − c₁ and the ADC scan evaluating the
     * decomposed reconstruction cosine (see the section comment above).
-    * Identical probe, shortlist and exact-re-rank structure; identical
-    * (q_id, c_id, cos, rn) contract, so the staged-rerank oracle applies
-    * unchanged (s40).
+    * Identical probe, shortlist and exact-re-rank structure — the same
+    * helpers build them — and an identical (q_id, c_id, cos, rn)
+    * contract, so the staged-rerank oracle applies unchanged (s40).
     */
   def ivfAdcResidualTopK(emb: DataFrame, id: String, vec: String,
                          queryPred: Column, k: Int = 5, cells: Int = 8,
@@ -659,39 +538,22 @@ object PQ {
     val codes = lastAssign.getOrElse(assignCodesKernel(subs, collectCb(cb)))
       .select(col("vid"), col("sub"), col("cell"))
 
-    val q = emb.filter(queryPred)
-      .select(col(id).as("q_id"), col(vec).cast("array<double>").as("q_vec"))
-    val dq = dot(col("q_vec"), col("q_vec")) -
-      lit(2.0) * dot(col("q_vec"), col("c")) + dot(col("c"), col("c"))
-    val wp = Window.partitionBy("q_id").orderBy(col("d2"), col("cell"))
+    // residual LUT: cell-INDEPENDENT (the shared-codebook payoff) —
+    // #q·m·kc rows, the raw form's exact size
+    val (q, lut, qn) = adcQueries(emb, id, vec, queryPred, cb, m)
     // the probe ranking already touches every (q, centroid) pair, so the
     // per-probed-cell cosine terms (q·c₁, ‖c₁‖²) ride out of it for free
-    val probes = q.crossJoin(broadcast(centroids))
-      .withColumn("d2", dq)
-      .withColumn("rn", row_number().over(wp))
-      .filter(col("rn") <= nprobe)
-      .select(col("q_id"), col("cell").as("ccell"),
-        dot(col("q_vec"), col("c")).as("qc1"),
-        dot(col("c"), col("c")).as("cn2"))
+    val probes = probe(q, centroids, "q_vec", nprobe, Seq("q_id"),
+      col("q_id"), col("cell").as("ccell"),
+      dot(col("q_vec"), col("c")).as("qc1"), dot(col("c"), col("c")).as("cn2"))
     val cands = coarse
       .join(broadcast(probes.select(col("q_id"), col("ccell"))), "ccell")
       .filter(col("vid") =!= col("q_id"))
       .select(col("q_id"), col("vid"), col("ccell"))
-
-    // residual LUT: cell-INDEPENDENT (the shared-codebook payoff) —
-    // #q·m·kc rows, the raw form's exact size
-    val qsubs = subRows(q.select(col("q_id").as("vid"), col("q_vec").as("v")), m)
-      .select(col("vid").as("q_id"), col("sub"), col("subv").as("qs"))
-    val lut = qsubs.join(cb, "sub")
-      .select(col("q_id"), col("sub"), col("cell"),
-        dot(col("qs"), col("c")).as("qd"),
-        dot(col("c"), col("c")).as("cc"))
     // centroid×codeword cross terms: cells·m·kc rows, query-independent —
     // the build-time artifact [[residualCrossTerms]] gives a stored
     // deployment (s45 persists it; here it derives in-query)
     val cterm = residualCrossTerms(centroids, cb, m)
-    val qn = q.select(col("q_id"),
-      sqrt(dot(col("q_vec"), col("q_vec"))).as("q_norm"), col("q_vec"))
 
     // ‖v̂‖² = cn2 + n2_r is a squared norm, ≥ 0 in real arithmetic, but
     // float cancellation can drive the sum slightly negative — or to
@@ -701,30 +563,9 @@ object PQ {
     // near-zero reconstruction scores a huge |approx_cos| and the exact
     // re-rank decides its fate (shortlist is engine-trusted, so the
     // clamp never touches grading).
-    val wApprox = Window.partitionBy("q_id").orderBy(col("approx_cos").desc, col("vid"))
-    val shortlist = codes.join(cands, "vid")
-      .join(broadcast(lut), Seq("q_id", "sub", "cell"))
-      .join(broadcast(cterm), Seq("ccell", "sub", "cell"))
-      .groupBy(col("q_id"), col("vid"), col("ccell"))
-      .agg(sum(col("qd")).as("num_r"),
-        sum(lit(2.0) * col("cd") + col("cc")).as("n2_r"))
-      .join(broadcast(probes), Seq("q_id", "ccell"))
-      .join(broadcast(qn.select(col("q_id"), col("q_norm"))), "q_id")
-      .withColumn("approx_cos", (col("qc1") + col("num_r")) /
-        (col("q_norm") * sqrt(greatest(col("cn2") + col("n2_r"), lit(1e-12)))))
-      .withColumn("arn", row_number().over(wApprox))
-      .filter(col("arn") <= k * rerank)
-      .select(col("q_id"), col("vid"))
-
-    val vn = v.withColumn("v_norm", sqrt(dot(col("v"), col("v"))))
-    val wExact = Window.partitionBy("q_id").orderBy(col("cos").desc, col("vid"))
-    shortlist.join(vn, "vid").join(broadcast(qn), "q_id")
-      .withColumn("cos", round(
-        dot(col("q_vec"), col("v")) / (col("q_norm") * col("v_norm")), 6))
-      .withColumn("rn", row_number().over(wExact))
-      .filter(col("rn") <= k)
-      .select(col("q_id"), col("vid").as("c_id"), col("cos"),
-        col("rn").cast("int").as("rn"))
+    val shortlist = residualShortlist(codes.join(cands, "vid"), lut, cterm, probes, qn,
+      k * rerank)
+    exactRerank(shortlist, v, qn, k)
   }
 
   /** Residual IVF-PQ query from a fully STORED index — the s36 : s14
@@ -751,19 +592,11 @@ object PQ {
                                   nprobe: Int = 2, m: Int = 8,
                                   rerank: Int = 4): DataFrame = {
     val v = emb.select(col(id).as("vid"), col(vec).cast("array<double>").as("v"))
-    val q = emb.filter(queryPred)
-      .select(col(id).as("q_id"), col(vec).cast("array<double>").as("q_vec"))
-    val dq = dot(col("q_vec"), col("q_vec")) -
-      lit(2.0) * dot(col("q_vec"), col("c")) + dot(col("c"), col("c"))
-    val wp = Window.partitionBy("q_id").orderBy(col("d2"), col("cell"))
+    val (q, lut, qn) = adcQueries(emb, id, vec, queryPred, cb, m)
     // probe scalars (q·c₁, ‖c₁‖²) ride the ranking, as in the in-query form
-    val probes = q.crossJoin(broadcast(centroids))
-      .withColumn("d2", dq)
-      .withColumn("rn", row_number().over(wp))
-      .filter(col("rn") <= nprobe)
-      .select(col("q_id"), col("cell").as("ccell"),
-        dot(col("q_vec"), col("c")).as("qc1"),
-        dot(col("c"), col("c")).as("cn2"))
+    val probes = probe(q, centroids, "q_vec", nprobe, Seq("q_id"),
+      col("q_id"), col("cell").as("ccell"),
+      dot(col("q_vec"), col("c")).as("qc1"), dot(col("c"), col("c")).as("cn2"))
     // ≤cells-row driver pull → literal PartitionFilters on both stored
     // scans (the s36 static-prune discipline; no checkpoint on `probes`
     // for the same no-driver-state-in-plan reason)
@@ -779,39 +612,72 @@ object PQ {
       .select(col("q_id"), col("vid"), col("ccell"), posexplode(col("codes")))
       .select(col("q_id"), col("vid"), col("ccell"),
         col("pos").as("sub"), col("col").as("cell"))
+    val shortlist = residualShortlist(candCodes, lut, prunedCterm, probes, qn, k * rerank)
+    exactRerank(shortlist, v, qn, k)
+  }
 
+  // ---------- the ADC query pieces shared by every PQ query ----------
+
+  /** The ADC query set-up for codebook `cb`: the query rows
+    * (q_id, q_vec); their per-query LUT (q_id, sub, cell, qd = q_sub·c,
+    * cc = ‖c‖²) — (#q)·m·kc rows, broadcast to the code scan; and
+    * (q_id, q_norm, q_vec), which the shortlist and the re-rank read.
+    */
+  private def adcQueries(emb: DataFrame, id: String, vec: String, queryPred: Column,
+                         cb: DataFrame, m: Int): (DataFrame, DataFrame, DataFrame) = {
+    val q = emb.filter(queryPred)
+      .select(col(id).as("q_id"), col(vec).cast("array<double>").as("q_vec"))
     val qsubs = subRows(q.select(col("q_id").as("vid"), col("q_vec").as("v")), m)
       .select(col("vid").as("q_id"), col("sub"), col("subv").as("qs"))
     val lut = qsubs.join(cb, "sub")
       .select(col("q_id"), col("sub"), col("cell"),
         dot(col("qs"), col("c")).as("qd"),
         dot(col("c"), col("c")).as("cc"))
-    val qn = q.select(col("q_id"),
-      sqrt(dot(col("q_vec"), col("q_vec"))).as("q_norm"), col("q_vec"))
+    (q, lut, q.select(col("q_id"), norm("q_vec").as("q_norm"), col("q_vec")))
+  }
 
-    val wApprox = Window.partitionBy("q_id").orderBy(col("approx_cos").desc, col("vid"))
-    val shortlist = candCodes
-      .join(broadcast(lut), Seq("q_id", "sub", "cell"))
-      .join(broadcast(prunedCterm), Seq("ccell", "sub", "cell"))
+  /** The raw-code ADC shortlist: LUT-joined code rows (q_id, vid, qd, cc)
+    * summed per (q_id, vid) — partial sums combine map-side, so the
+    * shuffle carries (q, vid) partials — into the approximate cosine
+    * Σqd / (‖q‖·√Σcc); each query keeps its first n.
+    */
+  private def adcShortlist(scanned: DataFrame, qn: DataFrame, n: Int): DataFrame =
+    shortlist(scanned.groupBy(col("q_id"), col("vid"))
+      .agg(sum(col("qd")).as("num"), sum(col("cc")).as("cand_n2"))
+      .join(broadcast(qn.select(col("q_id"), col("q_norm"))), "q_id")
+      .withColumn("approx_cos", col("num") / (col("q_norm") * sqrt(col("cand_n2")))), n)
+
+  /** The residual-code ADC shortlist: candidate code rows
+    * (q_id, vid, ccell, sub, cell) join the residual LUT on
+    * (q_id, sub, cell) and the cross terms `cterm` on (ccell, sub, cell);
+    * the decomposed reconstruction cosine (see the section comment above
+    * [[residualTable]], epsilon-clamped norm) ranks them, and each query
+    * keeps its first n.
+    */
+  private def residualShortlist(cands: DataFrame, lut: DataFrame, cterm: DataFrame,
+                                probes: DataFrame, qn: DataFrame, n: Int): DataFrame =
+    shortlist(cands.join(broadcast(lut), Seq("q_id", "sub", "cell"))
+      .join(broadcast(cterm), Seq("ccell", "sub", "cell"))
       .groupBy(col("q_id"), col("vid"), col("ccell"))
       .agg(sum(col("qd")).as("num_r"),
         sum(lit(2.0) * col("cd") + col("cc")).as("n2_r"))
       .join(broadcast(probes), Seq("q_id", "ccell"))
       .join(broadcast(qn.select(col("q_id"), col("q_norm"))), "q_id")
       .withColumn("approx_cos", (col("qc1") + col("num_r")) /
-        (col("q_norm") * sqrt(greatest(col("cn2") + col("n2_r"), lit(1e-12)))))
-      .withColumn("arn", row_number().over(wApprox))
-      .filter(col("arn") <= k * rerank)
+        (col("q_norm") * sqrt(greatest(col("cn2") + col("n2_r"), lit(1e-12))))), n)
+
+  /** Each query's first n (q_id, vid) by `approx_cos`, ties to the lowest vid. */
+  private def shortlist(scored: DataFrame, n: Int): DataFrame =
+    firstK(scored, "arn",
+        Window.partitionBy("q_id").orderBy(col("approx_cos").desc, col("vid")), n)
       .select(col("q_id"), col("vid"))
 
-    val vn = v.withColumn("v_norm", sqrt(dot(col("v"), col("v"))))
-    val wExact = Window.partitionBy("q_id").orderBy(col("cos").desc, col("vid"))
-    shortlist.join(vn, "vid").join(broadcast(qn), "q_id")
-      .withColumn("cos", round(
-        dot(col("q_vec"), col("v")) / (col("q_norm") * col("v_norm")), 6))
-      .withColumn("rn", row_number().over(wExact))
-      .filter(col("rn") <= k)
-      .select(col("q_id"), col("vid").as("c_id"), col("cos"),
-        col("rn").cast("int").as("rn"))
-  }
+  /** Exact-cosine re-rank of a (q_id, vid) shortlist to (q_id, c_id, cos,
+    * rn ≤ k): the full vectors (vid, v) are fetched by key, the query
+    * side `qn` is broadcast.
+    */
+  private def exactRerank(shortlist: DataFrame, v: DataFrame, qn: DataFrame,
+                          k: Int): DataFrame =
+    IVF.exactTopK(shortlist.join(v.withColumn("v_norm", norm("v")), "vid")
+      .join(broadcast(qn), "q_id"), k)
 }

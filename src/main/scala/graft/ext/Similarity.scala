@@ -1,7 +1,7 @@
 package graft.ext
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.expressions.{Window, WindowSpec}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.ArrayType
 
@@ -42,6 +42,63 @@ object Similarity {
   def cosine(a: Column, b: Column): Column =
     dot(a, b) / (sqrt(dot(a, a)) * sqrt(dot(b, b)))
 
+  // ---------- the ANN ranking tail ----------
+  //
+  // Every similarity-search operator here returns one ranking contract,
+  // (q_id, c_id, cos, rn): cos = round(dot(q, c) / (‖q‖·‖c‖), 6), ties to
+  // the lowest candidate id, rn an int. The helpers below write that
+  // contract once; each builds exactly the expressions, aliases and
+  // operator order of the hand copies it replaced, so plans are unchanged.
+
+  /** The rounded cosine of two array<double> columns from their
+    * precomputed norms. The dot/(na·nb) term order and the 6-decimal
+    * rounding are parity-critical (the DuckDB oracles mirror them).
+    */
+  private[ext] def roundedCos(a: String, b: String, na: String, nb: String): Column =
+    round(dot(col(a), col(b)) / (col(na) * col(nb)), 6)
+
+  /** ‖v‖ of an array<double> column. */
+  private[ext] def norm(v: String): Column = sqrt(dot(col(v), col(v)))
+
+  /** Norm side table: (idAs, vecAs = `vec` cast to array<double>,
+    * `extra`…, normAs = ‖vecAs‖) — norms are computed once per side,
+    * never per pair.
+    */
+  private[ext] def normTable(df: DataFrame, id: String, vec: String, idAs: String,
+                             vecAs: String, normAs: String, extra: Column*): DataFrame =
+    df.select(Seq(col(id).as(idAs), col(vec).cast("array<double>").as(vecAs)) ++ extra: _*)
+      .withColumn(normAs, norm(vecAs))
+
+  /** The first `k` rows of each window partition: `row_number` over `w`
+    * as column `rn`, kept iff ≤ k (shortlists, probes and top-k alike).
+    */
+  private[ext] def firstK(df: DataFrame, rn: String, w: WindowSpec, k: Int): DataFrame =
+    df.withColumn(rn, row_number().over(w)).filter(col(rn) <= k)
+
+  /** The contract's `rn` output column: an int. */
+  private[ext] def rnInt(rn: Column): Column = rn.cast("int").as("rn")
+
+  /** The per-query top-k tail: the first k rows per `q_id` by `order`,
+    * projected to `keep` plus the int `rn`.
+    */
+  private[ext] def topK(df: DataFrame, k: Int, order: Seq[Column], keep: Column*): DataFrame =
+    firstK(df, "rn", Window.partitionBy("q_id").orderBy(order: _*), k)
+      .select(keep :+ rnInt(col("rn")): _*)
+
+  /** The nearest-`nprobe` centroid probe: query rows (`qv` their
+    * array<double> vector) crossed with the broadcast (cell, c) centroid
+    * table, ranked per `by` partition on squared L2 `d2` with ties to the
+    * lowest cell, projected to `keep`.
+    */
+  private[ext] def probe(q: DataFrame, centroids: DataFrame, qv: String, nprobe: Int,
+                         by: Seq[String], keep: Column*): DataFrame = {
+    val d2 = dot(col(qv), col(qv)) - lit(2.0) * dot(col(qv), col("c")) +
+      dot(col("c"), col("c"))
+    firstK(q.crossJoin(broadcast(centroids)).withColumn("d2", d2), "rn",
+        Window.partitionBy(by.map(col): _*).orderBy(col("d2"), col("cell")), nprobe)
+      .select(keep: _*)
+  }
+
   /** Exact brute-force top-k cosine neighbors for each query vector.
     * `queryPred` selects the query subset; the query side is broadcast.
     * Ranking uses cosine rounded to 6 decimals (cross-engine-stable) with
@@ -49,19 +106,12 @@ object Similarity {
     */
   def bruteForceTopK(emb: DataFrame, id: String, vec: String,
                      queryPred: Column, k: Int = 5): DataFrame = {
-    val e = emb.select(col(id).as("c_id"), col(vec).cast("array<double>").as("c_vec"))
-      .withColumn("c_norm", sqrt(dot(col("c_vec"), col("c_vec"))))
-    val q = emb.filter(queryPred)
-      .select(col(id).as("q_id"), col(vec).cast("array<double>").as("q_vec"))
-      .withColumn("q_norm", sqrt(dot(col("q_vec"), col("q_vec"))))
-    val w = Window.partitionBy("q_id").orderBy(col("cos").desc, col("c_id"))
-    e.crossJoin(broadcast(q))
-      .filter(col("q_id") =!= col("c_id"))
-      .withColumn("cos",
-        round(dot(col("q_vec"), col("c_vec")) / (col("q_norm") * col("c_norm")), 6))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= k)
-      .select(col("q_id"), col("c_id"), col("cos"), col("rn").cast("int").as("rn"))
+    val e = normTable(emb, id, vec, "c_id", "c_vec", "c_norm")
+    val q = normTable(emb.filter(queryPred), id, vec, "q_id", "q_vec", "q_norm")
+    topK(e.crossJoin(broadcast(q))
+        .filter(col("q_id") =!= col("c_id"))
+        .withColumn("cos", roundedCos("q_vec", "c_vec", "q_norm", "c_norm")),
+      k, Seq(col("cos").desc, col("c_id")), col("q_id"), col("c_id"), col("cos"))
   }
 
   /** FILTERED ANN: per-query top-k restricted to candidates sharing the
@@ -79,22 +129,14 @@ object Similarity {
     */
   def labelFilteredTopK(emb: DataFrame, id: String, vec: String,
                         queryPred: Column, k: Int = 5): DataFrame = {
-    val c = emb.select(col(id).as("c_id"),
-        col(vec).cast("array<double>").as("c_vec"), col("label"))
-      .withColumn("c_norm", sqrt(dot(col("c_vec"), col("c_vec"))))
-    val q = emb.filter(queryPred)
-      .select(col(id).as("q_id"),
-        col(vec).cast("array<double>").as("q_vec"), col("label"))
-      .withColumn("q_norm", sqrt(dot(col("q_vec"), col("q_vec"))))
-    val w = Window.partitionBy("q_id").orderBy(col("cos").desc, col("c_id"))
-    c.join(broadcast(q), Seq("label"))
-      .filter(col("q_id") =!= col("c_id"))
-      .withColumn("cos",
-        round(dot(col("q_vec"), col("c_vec")) / (col("q_norm") * col("c_norm")), 6))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= k)
-      .select(col("q_id"), col("label"), col("c_id"), col("cos"),
-        col("rn").cast("int").as("rn"))
+    val c = normTable(emb, id, vec, "c_id", "c_vec", "c_norm", col("label"))
+    val q = normTable(emb.filter(queryPred), id, vec, "q_id", "q_vec", "q_norm",
+      col("label"))
+    topK(c.join(broadcast(q), Seq("label"))
+        .filter(col("q_id") =!= col("c_id"))
+        .withColumn("cos", roundedCos("q_vec", "c_vec", "q_norm", "c_norm")),
+      k, Seq(col("cos").desc, col("c_id")),
+      col("q_id"), col("label"), col("c_id"), col("cos"))
   }
 
   /** Embedding-space decontamination audit — the semantic member of the
@@ -112,17 +154,11 @@ object Similarity {
     */
   def contaminationAudit(emb: DataFrame, id: String, vec: String,
                          evalPred: Column, tau: Double): DataFrame = {
-    val t = emb.filter(!evalPred)
-      .select(col(id).as("t_id"), col(vec).cast("array<double>").as("t_vec"))
-      .withColumn("t_norm", sqrt(dot(col("t_vec"), col("t_vec"))))
-    val q = emb.filter(evalPred)
-      .select(col(id).as("q_id"), col(vec).cast("array<double>").as("q_vec"))
-      .withColumn("q_norm", sqrt(dot(col("q_vec"), col("q_vec"))))
+    val t = normTable(emb.filter(!evalPred), id, vec, "t_id", "t_vec", "t_norm")
+    val q = normTable(emb.filter(evalPred), id, vec, "q_id", "q_vec", "q_norm")
     val w = Window.partitionBy("q_id").orderBy(col("cos").desc, col("t_id"))
     t.crossJoin(broadcast(q))
-      .withColumn("cos",
-        round(dot(col("q_vec"), col("t_vec")) /
-          (col("q_norm") * col("t_norm")), 6))
+      .withColumn("cos", roundedCos("q_vec", "t_vec", "q_norm", "t_norm"))
       .withColumn("rn", row_number().over(w))
       .groupBy(col("q_id"))
       .agg(sum(when(col("cos") >= tau, 1L).otherwise(0L)).as("n_above"),
@@ -154,20 +190,19 @@ object Similarity {
 
   /** Normalized cosine over all id-ordered pairs within `pred`:
     * (id_a < id_b, cos rounded to 6). The ONE pair-construction used by
-    * both [[topKPairs]] and [[cosineDedup]] — the rounding and the
-    * dot/(na·nb) term order are parity-critical (the DuckDB oracles
-    * mirror them exactly), so the formulation must exist once.
+    * both [[topKPairs]] and [[cosineDedup]]: one [[normTable]] side
+    * self-joined, scored by [[roundedCos]] — the formulation every
+    * ranking path here, in IVF and in PQ shares, since the rounding and
+    * the dot/(na·nb) term order are parity-critical (the DuckDB oracles
+    * mirror them exactly).
     */
   private def pairCosines(emb: DataFrame, id: String, vec: String,
                           pred: Column): DataFrame = {
-    val e = emb.filter(pred)
-      .select(col(id).as("v_id"), col(vec).cast("array<double>").as("v"))
-      .withColumn("n", sqrt(dot(col("v"), col("v"))))
+    val e = normTable(emb.filter(pred), id, vec, "v_id", "v", "n")
     val a = e.select(col("v_id").as("id_a"), col("v").as("va"), col("n").as("na"))
     val b = e.select(col("v_id").as("id_b"), col("v").as("vb"), col("n").as("nb"))
     a.join(b, col("id_a") < col("id_b"))
-      .withColumn("cos",
-        round(dot(col("va"), col("vb")) / (col("na") * col("nb")), 6))
+      .withColumn("cos", roundedCos("va", "vb", "na", "nb"))
       .select(col("id_a"), col("id_b"), col("cos"))
   }
 
@@ -212,15 +247,14 @@ object Similarity {
                    threshold: Double, cells: Int = 8,
                    iters: Int = 3): DataFrame = {
     val n = graft.ext.IVF.assignTable(emb, id, vec, cells, iters)
-      .withColumn("nrm", sqrt(dot(col("v"), col("v"))))
+      .withColumn("nrm", norm("v"))
       .localCheckpoint() // feeds both join sides — one assignment pass
     val a = n.select(col("cell"), col("vid").as("id_a"), col("v").as("va"),
       col("nrm").as("na"))
     val b = n.select(col("cell"), col("vid").as("id_b"), col("v").as("vb"),
       col("nrm").as("nb"))
     val dropped = a.join(b, Seq("cell")).filter(col("id_a") < col("id_b"))
-      .withColumn("cos",
-        round(dot(col("va"), col("vb")) / (col("na") * col("nb")), 6))
+      .withColumn("cos", roundedCos("va", "vb", "na", "nb"))
       .filter(col("cos") >= threshold)
       .select(col("id_b").as("v_id")).distinct()
     emb.select(col(id).as("v_id")).join(dropped, Seq("v_id"), "left_anti")
@@ -271,18 +305,11 @@ object Similarity {
       .filter(col("doc") =!= col("q_id"))
       .select(col("q_id"), col("doc").as("c_id")).distinct()
 
-    val e = emb.select(col(id).as("c_id"), col(vec).cast("array<double>").as("c_vec"))
-      .withColumn("c_norm", sqrt(dot(col("c_vec"), col("c_vec"))))
-    val q = emb.filter(queryPred)
-      .select(col(id).as("q_id"), col(vec).cast("array<double>").as("q_vec"))
-      .withColumn("q_norm", sqrt(dot(col("q_vec"), col("q_vec"))))
-    val w = Window.partitionBy("q_id").orderBy(col("cos").desc, col("c_id"))
-    cands.join(e, "c_id").join(broadcast(q), "q_id")
-      .withColumn("cos",
-        round(dot(col("q_vec"), col("c_vec")) / (col("q_norm") * col("c_norm")), 6))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= k)
-      .select(col("q_id"), col("c_id"), col("cos"), col("rn").cast("int").as("rn"))
+    val e = normTable(emb, id, vec, "c_id", "c_vec", "c_norm")
+    val q = normTable(emb.filter(queryPred), id, vec, "q_id", "q_vec", "q_norm")
+    topK(cands.join(e, "c_id").join(broadcast(q), "q_id")
+        .withColumn("cos", roundedCos("q_vec", "c_vec", "q_norm", "c_norm")),
+      k, Seq(col("cos").desc, col("c_id")), col("q_id"), col("c_id"), col("cos"))
   }
 
   /** Symmetric per-vector int8 scalar quantization: scale = max|x|/127,
@@ -358,24 +385,16 @@ object Similarity {
     val cand = int8Quantize(emb, id, vec)
       .withColumn("vh", transform(col("codes"), c => c.cast("double") * col("scale")))
       .select(col("vid").as("c_id"), col("v").as("c_vec"), col("vh"))
-      .withColumn("c_norm", sqrt(dot(col("c_vec"), col("c_vec"))))
-      .withColumn("h_norm", sqrt(dot(col("vh"), col("vh"))))
-    val q = emb.filter(queryPred)
-      .select(col(id).as("q_id"), col(vec).cast("array<double>").as("q_vec"))
-      .withColumn("q_norm", sqrt(dot(col("q_vec"), col("q_vec"))))
+      .withColumn("c_norm", norm("c_vec"))
+      .withColumn("h_norm", norm("vh"))
+    val q = normTable(emb.filter(queryPred), id, vec, "q_id", "q_vec", "q_norm")
     val wShort = Window.partitionBy("q_id").orderBy(col("cos_dq").desc, col("c_id"))
-    val wFinal = Window.partitionBy("q_id").orderBy(col("cos").desc, col("c_id"))
-    cand.crossJoin(broadcast(q))
-      .filter(col("q_id") =!= col("c_id"))
-      .withColumn("cos_dq",
-        round(dot(col("q_vec"), col("vh")) / (col("q_norm") * col("h_norm")), 6))
-      .withColumn("sl", row_number().over(wShort))
-      .filter(col("sl") <= k * overfetch)
-      .withColumn("cos",
-        round(dot(col("q_vec"), col("c_vec")) / (col("q_norm") * col("c_norm")), 6))
-      .withColumn("rn", row_number().over(wFinal))
-      .filter(col("rn") <= k)
-      .select(col("q_id"), col("c_id"), col("cos"), col("rn").cast("int").as("rn"))
+    val shortlist = firstK(cand.crossJoin(broadcast(q))
+        .filter(col("q_id") =!= col("c_id"))
+        .withColumn("cos_dq", roundedCos("q_vec", "vh", "q_norm", "h_norm")),
+      "sl", wShort, k * overfetch)
+    topK(shortlist.withColumn("cos", roundedCos("q_vec", "c_vec", "q_norm", "c_norm")),
+      k, Seq(col("cos").desc, col("c_id")), col("q_id"), col("c_id"), col("cos"))
   }
 
   /** Sign bits of components [lo, hi) of a double-array column, packed
@@ -410,28 +429,23 @@ object Similarity {
       .withColumn("b2", signBits(col("v"), 32, 64))
     val cand = base
       .select(col("c_id"), col("v").as("c_vec"), col("b1"), col("b2"))
-      .withColumn("c_norm", sqrt(dot(col("c_vec"), col("c_vec"))))
+      .withColumn("c_norm", norm("c_vec"))
     // queryPred references the original column names → select query ids
     // from the raw frame, then reuse base's packed bits via a join
     val qq = emb.filter(queryPred).select(col(id).as("q_id"))
       .join(base.withColumnRenamed("c_id", "q_id"), "q_id")
       .select(col("q_id"), col("v").as("q_vec"),
         col("b1").as("qb1"), col("b2").as("qb2"))
-      .withColumn("q_norm", sqrt(dot(col("q_vec"), col("q_vec"))))
+      .withColumn("q_norm", norm("q_vec"))
     val wShort = Window.partitionBy("q_id").orderBy(col("ham"), col("c_id"))
-    val wFinal = Window.partitionBy("q_id").orderBy(col("cos").desc, col("c_id"))
-    cand.crossJoin(broadcast(qq))
-      .filter(col("q_id") =!= col("c_id"))
-      .withColumn("ham",
-        bit_count(col("qb1").bitwiseXOR(col("b1"))) +
-          bit_count(col("qb2").bitwiseXOR(col("b2"))))
-      .withColumn("sl", row_number().over(wShort))
-      .filter(col("sl") <= k * overfetch)
-      .withColumn("cos",
-        round(dot(col("q_vec"), col("c_vec")) / (col("q_norm") * col("c_norm")), 6))
-      .withColumn("rn", row_number().over(wFinal))
-      .filter(col("rn") <= k)
-      .select(col("q_id"), col("c_id"), col("cos"), col("rn").cast("int").as("rn"))
+    val shortlist = firstK(cand.crossJoin(broadcast(qq))
+        .filter(col("q_id") =!= col("c_id"))
+        .withColumn("ham",
+          bit_count(col("qb1").bitwiseXOR(col("b1"))) +
+            bit_count(col("qb2").bitwiseXOR(col("b2")))),
+      "sl", wShort, k * overfetch)
+    topK(shortlist.withColumn("cos", roundedCos("q_vec", "c_vec", "q_norm", "c_norm")),
+      k, Seq(col("cos").desc, col("c_id")), col("q_id"), col("c_id"), col("cos"))
   }
 
   /** k-nearest-neighbor GRAPH over the whole corpus — every vector gets
@@ -511,21 +525,16 @@ object Similarity {
     else {
       val (k1, k2) = graft.ext.IVF.autoK1K2(n)
       val t = graft.ext.IVF.twoLevelModel(emb, id, vec, k1, k2, iters)._3
-        .withColumn("nrm", sqrt(dot(col("v"), col("v"))))
+        .withColumn("nrm", norm("v"))
         .localCheckpoint() // feeds both self-join sides — one assignment pass
       val a = t.select(col("cell1"), col("cell2"), col("vid").as("q_id"),
         col("v").as("qv"), col("nrm").as("qn"))
       val b = t.select(col("cell1"), col("cell2"), col("vid").as("c_id"),
         col("v").as("cv"), col("nrm").as("cn"))
-      val w = Window.partitionBy("q_id").orderBy(col("cos").desc, col("c_id"))
-      a.join(b, Seq("cell1", "cell2"))
-        .filter(col("q_id") =!= col("c_id"))
-        .withColumn("cos",
-          round(dot(col("qv"), col("cv")) / (col("qn") * col("cn")), 6))
-        .withColumn("rn", row_number().over(w))
-        .filter(col("rn") <= k)
-        .select(col("q_id"), col("c_id"), col("cos"),
-          col("rn").cast("int").as("rn"))
+      topK(a.join(b, Seq("cell1", "cell2"))
+          .filter(col("q_id") =!= col("c_id"))
+          .withColumn("cos", roundedCos("qv", "cv", "qn", "cn")),
+        k, Seq(col("cos").desc, col("c_id")), col("q_id"), col("c_id"), col("cos"))
     }
   }
 
@@ -546,7 +555,7 @@ object Similarity {
     else {
       val (k1, k2) = graft.ext.IVF.autoK1K2(n)
       val t = graft.ext.IVF.twoLevelModel(emb, id, vec, k1, k2, iters)._3
-        .withColumn("nrm", sqrt(dot(col("v"), col("v"))))
+        .withColumn("nrm", norm("v"))
         .localCheckpoint()
       val a = t.select(col("cell1"), col("cell2"), col("vid").as("id_a"),
         col("v").as("va"), col("nrm").as("na"))
@@ -554,8 +563,7 @@ object Similarity {
         col("v").as("vb"), col("nrm").as("nb"))
       val dropped = a.join(b, Seq("cell1", "cell2"))
         .filter(col("id_a") < col("id_b"))
-        .withColumn("cos",
-          round(dot(col("va"), col("vb")) / (col("na") * col("nb")), 6))
+        .withColumn("cos", roundedCos("va", "vb", "na", "nb"))
         .filter(col("cos") >= threshold)
         .select(col("id_b").as("v_id")).distinct()
       emb.select(col(id).as("v_id")).join(dropped, Seq("v_id"), "left_anti")
@@ -565,20 +573,16 @@ object Similarity {
   def knnGraph(emb: DataFrame, id: String, vec: String, k: Int = 3,
                cells: Int = 8, iters: Int = 3): DataFrame = {
     val n = graft.ext.IVF.assignTable(emb, id, vec, cells, iters)
-      .withColumn("nrm", sqrt(dot(col("v"), col("v"))))
+      .withColumn("nrm", norm("v"))
       .localCheckpoint() // feeds both self-join sides — one assignment pass
     val a = n.select(col("cell"), col("vid").as("q_id"), col("v").as("qv"),
       col("nrm").as("qn"))
     val b = n.select(col("cell"), col("vid").as("c_id"), col("v").as("cv"),
       col("nrm").as("cn"))
-    val w = Window.partitionBy("q_id").orderBy(col("cos").desc, col("c_id"))
-    a.join(b, Seq("cell"))
-      .filter(col("q_id") =!= col("c_id"))
-      .withColumn("cos",
-        round(dot(col("qv"), col("cv")) / (col("qn") * col("cn")), 6))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= k)
-      .select(col("q_id"), col("c_id"), col("cos"), col("rn").cast("int").as("rn"))
+    topK(a.join(b, Seq("cell"))
+        .filter(col("q_id") =!= col("c_id"))
+        .withColumn("cos", roundedCos("qv", "cv", "qn", "cn")),
+      k, Seq(col("cos").desc, col("c_id")), col("q_id"), col("c_id"), col("cos"))
   }
 
   /** Matryoshka truncation audit: for each query, how many of its exact
@@ -626,15 +630,11 @@ object Similarity {
     val trunc = bruteForceTopK(emb.withColumn(vec, slice(col(vec), 1, dims)),
         id, vec, queryPred, depth)
       .select(col("q_id"), col("c_id"), col("rn").as("rn_t"))
-    val w = Window.partitionBy("q_id").orderBy(col("rrf").desc, col("c_id"))
-    full.join(trunc, Seq("q_id", "c_id"), "full_outer")
-      .withColumn("rrf", round(
-        coalesce(lit(1.0) / (lit(rrfK) + col("rn_f")), lit(0.0)) +
-          coalesce(lit(1.0) / (lit(rrfK) + col("rn_t")), lit(0.0)), 6))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= k)
-      .select(col("q_id"), col("c_id"), col("rrf"),
-        col("rn").cast("int").as("rn"))
+    topK(full.join(trunc, Seq("q_id", "c_id"), "full_outer")
+        .withColumn("rrf", round(
+          coalesce(lit(1.0) / (lit(rrfK) + col("rn_f")), lit(0.0)) +
+            coalesce(lit(1.0) / (lit(rrfK) + col("rn_t")), lit(0.0)), 6)),
+      k, Seq(col("rrf").desc, col("c_id")), col("q_id"), col("c_id"), col("rrf"))
   }
 
   /** Maximum-inner-product top-k via the norm-augmentation reduction
@@ -687,13 +687,9 @@ object Similarity {
     val c = base.select(col("vid").as("c_id"), col("v").as("c_vec"))
     val q = base.join(qIds, col("vid") === col("q_id"))
       .select(col("q_id"), col("v").as("q_vec"))
-    val w = Window.partitionBy("q_id").orderBy(col("dot").desc, col("c_id"))
-    cands.join(c, "c_id").join(broadcast(q), "q_id")
-      .withColumn("dot", round(dot(col("q_vec"), col("c_vec")), 6))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= k)
-      .select(col("q_id"), col("c_id"), col("dot"),
-        col("rn").cast("int").as("rn"))
+    topK(cands.join(c, "c_id").join(broadcast(q), "q_id")
+        .withColumn("dot", round(dot(col("q_vec"), col("c_vec")), 6)),
+      k, Seq(col("dot").desc, col("c_id")), col("q_id"), col("c_id"), col("dot"))
   }
 
   /** MMR (maximal marginal relevance, Carbonell & Goldstein 1998)
@@ -719,8 +715,7 @@ object Similarity {
     val cands = bruteForceTopK(emb, id, vec, queryPred, depth)
       .select(col("q_id"), col("c_id"), col("cos").as("rel"))
       .localCheckpoint() // feeds the sim table and every greedy step
-    val vecs = emb.select(col(id).as("vid"), col(vec).cast("array<double>").as("v"))
-      .withColumn("nrm", sqrt(dot(col("v"), col("v"))))
+    val vecs = normTable(emb, id, vec, "vid", "v", "nrm")
     val sims = cands.select(col("q_id"), col("c_id").as("a_id"))
       .join(cands.select(col("q_id").as("q2"), col("c_id").as("b_id")),
         col("q_id") === col("q2") && col("a_id") =!= col("b_id"))
@@ -730,8 +725,7 @@ object Similarity {
       .join(vecs.select(col("vid").as("b_id"), col("v").as("vb"),
         col("nrm").as("nb")), "b_id")
       .select(col("q_id"), col("a_id"), col("b_id"),
-        round(dot(col("va"), col("vb")) / (col("na") * col("nb")), 6)
-          .as("sim"))
+        roundedCos("va", "vb", "na", "nb").as("sim"))
     // (sims' checkpoint dropped in r15: the grouped greedy leaves it ONE
     // consumer — the k-round loop that re-read it every step is gone)
     // r15: the greedy loop runs INSIDE one native expression per query
@@ -755,7 +749,7 @@ object Similarity {
         explode(graft.functions.GraftFunctions.mmrSelect(col("cands"),
           col("sims"), k)).as("p"))
       .select(col("q_id"), col("p.c_id").as("c_id"),
-        col("p.step").cast("int").as("rn"), col("p.score").as("score"))
+        rnInt(col("p.step")), col("p.score").as("score"))
   }
 
   /** Grid-blocked exact nearest neighbors in a 2-D projection (the first
@@ -790,17 +784,13 @@ object Similarity {
       .withColumn("dy", explode(lit(Array(-1L, 0L, 1L))))
       .withColumn("jgx", col("qgx") + col("dx"))
       .withColumn("jgy", col("qgy") + col("dy"))
-    val w = Window.partitionBy("q_id").orderBy(col("dist2"), col("c_id"))
-    corpus.join(broadcast(queries),
-        col("cgx") === col("jgx") && col("cgy") === col("jgy") &&
-          col("c_id") =!= col("q_id"))
-      .withColumn("dist2", round(
-        (col("cx") - col("qx")) * (col("cx") - col("qx")) +
-          (col("cy") - col("qy")) * (col("cy") - col("qy")), 6))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= k)
-      .select(col("q_id"), col("c_id"), col("dist2"),
-        col("rn").cast("int").as("rn"))
+    topK(corpus.join(broadcast(queries),
+          col("cgx") === col("jgx") && col("cgy") === col("jgy") &&
+            col("c_id") =!= col("q_id"))
+        .withColumn("dist2", round(
+          (col("cx") - col("qx")) * (col("cx") - col("qx")) +
+            (col("cy") - col("qy")) * (col("cy") - col("qy")), 6)),
+      k, Seq(col("dist2"), col("c_id")), col("q_id"), col("c_id"), col("dist2"))
   }
 
   /** Mutual nearest-neighbor pairs over the first two embedding dims —

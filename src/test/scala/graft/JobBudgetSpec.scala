@@ -44,4 +44,29 @@ class JobBudgetSpec extends SparkSpec {
       narrow.map(s => s"stage ${s.stageId} (${s.numTasks} tasks) ${s.name}").mkString("; "))
     assert(n == 15, s"Climate.run + 8 sinks ran $n jobs")
   }
+
+  // Spark jobs of one warm, noop-forced run, the DataFrame's build
+  // included: a collect() that runs while a DataFrame is built (a
+  // probed-cell pull, a codebook iteration) is invisible to a plan diff
+  // but not to this count. The llm_curation ops first, then the ANN
+  // entries whose build runs driver pulls.
+  private val pinnedJobs = Seq(
+    "t05_exact_dedup" -> 4, "t06_jaccard_topk" -> 6,
+    "t55_prefix_pairs_stored" -> 6, "s01_cosine_topk" -> 5,
+    "s06_embedding_dedup" -> 7, "m04_frame_chunk_dedup" -> 4,
+    "m06_wav_frame_rms" -> 3,
+    "s07_ann_pq" -> 16, "s14_ann_ivfpq" -> 27, "s15_ann_pq_stored" -> 10,
+    "s36_ann_ivfpq_stored" -> 17, "s40_ann_ivfpq_residual" -> 34,
+    "s45_ann_respq_stored" -> 20, "s32_ann_ivf2" -> 7)
+
+  test("jobs of a warm forced run, build included, are pinned per entry") {
+    val got = pinnedJobs.map { case (name, _) =>
+      val fn = SparkEntry.queries(name)
+      Harness.force(fn(spark, sf)) // warm: stored indexes built, tables resolved
+      name -> profile(Harness.force(fn(spark, sf))).jobs
+    }
+    info(got.map { case (q, n) => s"$q=$n" }.mkString(" "))
+    val off = pinnedJobs.zip(got).collect { case ((q, want), (_, n)) if n != want => s"$q: $n jobs, pinned $want" }
+    assert(off.isEmpty, off.mkString("; "))
+  }
 }

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.ext.{PQ, Similarity}
+import graft.ext.{IVF, PQ, Similarity}
 
 class PQSpec extends SparkSpec {
   import spark.implicits._
@@ -249,5 +249,53 @@ class PQSpec extends SparkSpec {
     val recall = (exact & sampled).size.toDouble / exact.size
     info(f"sample-trained IVF-PQ recall@5: $recall%.3f")
     assert(recall >= 0.9, f"sample-trained recall $recall%.3f below 0.9")
+  }
+
+  // ids 121..160 repeat the vectors of ids 1..40 exactly, so a query meets
+  // several candidates at one rounded cos: its own copy at 1.0, and every
+  // duplicated pair at a shared value.
+  private lazy val withDups = {
+    val base = clustered.filter(col("vec_id") <= 120)
+    base.union(base.filter(col("vec_id") <= 40)
+      .select((col("vec_id") + 120).as("vec_id"), col("embedding")))
+  }
+
+  test("ANN contract: every path set to see every candidate returns bruteForceTopK's rows, ties lowest c_id first") {
+    val (id, vec, k, m, kc, cells) = ("vec_id", "embedding", 5, 4, 8, 4)
+    val pred = col("vec_id") % 10 === 1
+    // k·rerank >= corpus size keeps every candidate in the ADC shortlist;
+    // nprobe = cells probes every coarse cell
+    val rerank = (withDups.count().toInt + k - 1) / k
+    val brute = Similarity.bruteForceTopK(withDups, id, vec, pred, k)
+      .orderBy("q_id", "rn").collect().toSeq
+    val tied = brute.groupBy(r => (r.getLong(0), r.getDouble(2))).count(_._2.size > 1)
+    assert(tied > 0, "the corpus must put tied candidates inside some query's top k")
+
+    val cb = PQ.codebooks(withDups, id, vec, m = m, k = kc)
+    val codes = PQ.encode(withDups, id, vec, cb, m = m)
+    val cents = IVF.kmeansCentroids(withDups, id, vec, k = cells)
+    val codesByCell = IVF.assignWithCentroids(withDups, id, vec, cents)
+      .withColumnRenamed("cell", "ccell").join(codes, "vid")
+    val resCb = PQ.residualCodebooks(withDups, id, vec, cents, m = m, k = kc)
+    val res = PQ.residualTable(withDups, id, vec, cents)
+    val resCodesByCell = PQ.encode(res, "vid", "r", resCb, m = m)
+      .join(res.select(col("vid"), col("ccell")), "vid")
+    val cterm = PQ.residualCrossTerms(cents, resCb, m = m)
+    val paths = Seq(
+      "adcTopK" -> PQ.adcTopK(withDups, id, vec, pred, k = k, m = m, kc = kc,
+        rerank = rerank),
+      "adcTopKFromIndex" -> PQ.adcTopKFromIndex(withDups, id, vec, pred, cb, codes,
+        k = k, m = m, rerank = rerank),
+      "ivfAdcTopKFromIndex" -> PQ.ivfAdcTopKFromIndex(withDups, id, vec, pred, cents,
+        codesByCell, cb, k = k, nprobe = cells, m = m, rerank = rerank),
+      "ivfAdcResidualTopKFromIndex" -> PQ.ivfAdcResidualTopKFromIndex(withDups, id, vec,
+        pred, cents, resCodesByCell, resCb, cterm, k = k, nprobe = cells, m = m,
+        rerank = rerank),
+      "ivfTopK" -> IVF.ivfTopK(withDups, id, vec, pred, k = k, cells = cells,
+        nprobe = cells))
+    paths.foreach { case (name, df) =>
+      val got = df.orderBy("q_id", "rn").collect().toSeq
+      assert(got == brute, s"$name: ${got.diff(brute).take(5)} vs brute ${brute.diff(got).take(5)}")
+    }
   }
 }
