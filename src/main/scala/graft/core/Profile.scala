@@ -2,7 +2,6 @@ package graft.core
 
 import java.util.concurrent.ConcurrentLinkedQueue
 import scala.jdk.CollectionConverters._
-import org.apache.spark.SparkContext
 import org.apache.spark.executor.TaskMetrics
 import org.apache.spark.graft.ListenerBus
 import org.apache.spark.scheduler._
@@ -15,11 +14,11 @@ import org.apache.spark.sql.SparkSession
   * execution, and this is the one listener on it.
   *
   * Events are delivered asynchronously, after the action that posted them
-  * returns. So [[Profile.start]] drains the bus before it attaches (no
-  * earlier job lands here) and [[stop]] drains it before it detaches
-  * (every event of the profiled work has arrived): nothing waits or polls.
+  * returns. So [[Profile.of]] drains the bus before it attaches (no
+  * earlier job lands here) and again before it detaches (every event of
+  * the profiled work has arrived): nothing waits or polls.
   */
-final class Profile private (sc: SparkContext) extends SparkListener {
+final class Profile private () extends SparkListener {
   private val jobIds = new ConcurrentLinkedQueue[Integer]()
   private val stageInfos = new ConcurrentLinkedQueue[StageInfo]()
   private val taskMetrics = new ConcurrentLinkedQueue[TaskMetrics]()
@@ -34,28 +33,17 @@ final class Profile private (sc: SparkContext) extends SparkListener {
   def stages: Seq[StageInfo] = stageInfos.asScala.toVector
   /** Of the ended tasks that reported metrics, in end order. */
   def tasks: Seq[TaskMetrics] = taskMetrics.asScala.toVector
-
-  /** Drains the bus, then detaches; returns this profile. */
-  def stop(): Profile = {
-    try ListenerBus.drain(sc) finally sc.removeSparkListener(this)
-    this
-  }
 }
 
 object Profile {
 
-  /** Drains the bus, then attaches a new profile (for a whole run; else [[of]]). */
-  def start(spark: SparkSession): Profile = {
-    ListenerBus.drain(spark.sparkContext)
-    val p = new Profile(spark.sparkContext)
-    spark.sparkContext.addSparkListener(p)
-    p
-  }
-
   /** `body`'s result and what Spark ran for it. The profile is detached
     * even when `body` throws, and the exception is rethrown. */
   def of[T](spark: SparkSession)(body: => T): (T, Profile) = {
-    val p = start(spark)
-    (try body finally p.stop(), p)
+    val sc = spark.sparkContext
+    ListenerBus.drain(sc)
+    val p = new Profile()
+    sc.addSparkListener(p)
+    (try body finally try ListenerBus.drain(sc) finally sc.removeSparkListener(p), p)
   }
 }

@@ -824,16 +824,19 @@ object Similarity {
       .withColumn("dy", explode(lit(Array(-1L, 0L, 1L))))
       .select(col("pid").as("q_id"), col("x").as("qx"), col("y").as("qy"),
         (col("gx") + col("dx")).as("jgx"), (col("gy") + col("dy")).as("jgy"))
-    val w = Window.partitionBy("q_id").orderBy(col("dist2"), col("c_id"))
+    // each probe's nearest candidate: the least (dist2, c_id) struct, so
+    // ties break to the smallest id ((q_id, c_id) is unique: the 3×3
+    // probe cells are distinct). No window: it aggregates partially before
+    // the shuffle (a SortAggregate, as a struct min has no hash buffer)
     val nn = corpus.join(probes,
         col("cgx") === col("jgx") && col("cgy") === col("jgy") &&
           col("c_id") =!= col("q_id"))
-      .withColumn("dist2", round(
+      .groupBy("q_id")
+      .agg(min(struct(round(
         (col("cx") - col("qx")) * (col("cx") - col("qx")) +
-          (col("cy") - col("qy")) * (col("cy") - col("qy")), 6))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1)
-      .select(col("q_id"), col("c_id"), col("dist2"))
+          (col("cy") - col("qy")) * (col("cy") - col("qy")), 6).as("dist2"),
+        col("c_id"))).as("nn"))
+      .select(col("q_id"), col("nn.c_id").as("c_id"), col("nn.dist2").as("dist2"))
     nn.as("l").join(nn.as("r"),
         col("l.q_id") === col("r.c_id") && col("l.c_id") === col("r.q_id") &&
           col("l.q_id") < col("l.c_id"))

@@ -38,11 +38,15 @@ object TextQueries {
   private val halfPairMemo = SessionMemo[DataFrame]()
 
   /** The (doc, s, h) shingle-hash table for `documents` at `dir`,
-    * materialized once per (session, dir). */
-  private[graft] def sharedShingles(s: SparkSession, dir: String): DataFrame =
-    shMemo(s, dir) {
+    * materialized once per (session, dir, corpus file versions): the
+    * stored text indexes build from it, so an index built over a rewritten
+    * corpus must not take the previous corpus' shingles. */
+  private[graft] def sharedShingles(s: SparkSession, dir: String): DataFrame = {
+    val files = Tables.versions(s, Seq(new org.apache.hadoop.fs.Path(s"$dir/documents.parquet")))
+    shMemo(s, s"$dir $files") {
       Dedup.shingleHashTable(Tables.documents(s, dir), col("doc_id"), col("text"), n = 3)
     }
+  }
 
   /** The exact J ≥ 1/2 pair set (t23/t28's edge engine), computed once
     * per (session, dir) from [[sharedShingles]] and materialized — the
@@ -88,7 +92,7 @@ object TextQueries {
     val idx = StoredIndex("prefix_index",
         s"tau=2/5 n=3${maxDf.map(c => s" cap=$c keep=s").getOrElse("")}",
         dir, docs, "doc_id", "text", suffix = maxDf.map(c => s"_cap$c").getOrElse("")) { b =>
-      val sh0 = Dedup.shingleHashTable(docs, col("doc_id"), col("text"))
+      val sh0 = sharedShingles(s, dir)
       val sh = maxDf match {
         case Some(c) =>
           val (capped, keep) = Dedup.cappedShingles(sh0, c)
@@ -119,7 +123,9 @@ object TextQueries {
     val corpus = Tables.documents(s, dir).filter(col("doc_id") % 10 =!= 7)
     val idx = StoredIndex("stable_prefix_index", "tau=2/5 n=3 order=s side=mod10ne7",
         dir, corpus, "doc_id", "text") { b =>
-      val sh = Dedup.shingleHashTable(corpus, col("doc_id"), col("text"))
+      // shingle rows are per document, so the corpus side's are the
+      // shared table's rows of its documents
+      val sh = sharedShingles(s, dir).filter(col("doc") % 10 =!= 7)
       Dedup.stablePrefixIndexTable(sh, tauNum = 2, tauDen = 5).write.parquet(b.path("prefix"))
       Dedup.signatureTable(sh).write.parquet(b.path("sigs"))
       b.record("sh_rows", sh.count())

@@ -1,7 +1,8 @@
 package graft
 
-import graft.core.Profile
+import graft.core.{Profile, StoredIndex}
 import graft.pipeline.{Climate, ClimateFixture}
+import graft.queries.TextQueries
 import graft.sources.Sinks
 
 /** Job and task budgets: a pinned count fails on a fixed-cost regression
@@ -68,5 +69,23 @@ class JobBudgetSpec extends SparkSpec {
     info(got.map { case (q, n) => s"$q=$n" }.mkString(" "))
     val off = pinnedJobs.zip(got).collect { case ((q, want), (_, n)) if n != want => s"$q: $n jobs, pinned $want" }
     assert(off.isEmpty, off.mkString("; "))
+  }
+
+  test("text-index prebuild: a fresh corpus builds the three families in 45 jobs; a new session reuses them in 12") {
+    // a copy of the suite's documents in a new directory: no index of
+    // any family is published for it yet
+    val dir = java.nio.file.Files.createTempDirectory("graft_text_jobs").toString
+    spark.read.parquet(s"$sf/documents.parquet").write.parquet(s"$dir/documents.parquet")
+    val indexes = Seq(StoredIndex.location("prefix_index", dir),
+      StoredIndex.location("prefix_index", dir, "_cap20"),
+      StoredIndex.location("stable_prefix_index", dir))
+    try {
+      val build = profile(TextQueries.prewarmStoredIndexes(spark, dir)).jobs
+      assert(indexes.forall(i => java.nio.file.Files.exists(i.resolve(StoredIndex.Marker))))
+      val other = spark.newSession()
+      val reuse = Profile.of(other)(TextQueries.prewarmStoredIndexes(other, dir))._2.jobs
+      info(s"build $build jobs, reuse $reuse jobs")
+      assert((build, reuse) == (45, 12))
+    } finally indexes.foreach(i => org.apache.commons.io.FileUtils.deleteDirectory(i.toFile))
   }
 }

@@ -496,6 +496,62 @@ class SimilaritySpec extends SparkSpec {
     assert(got == Set((1L, 2L)), s"got $got")
   }
 
+  /** `mutualNN2d` as it was written with a window: number each probe's
+    * candidates by (dist2, c_id) and keep the first. */
+  private def mutualNN2dWindow(emb: org.apache.spark.sql.DataFrame, cellSize: Double) = {
+    import org.apache.spark.sql.expressions.Window
+    val pts = emb.select(col("vec_id").as("pid"),
+        element_at(col("embedding"), 1).cast("double").as("x"),
+        element_at(col("embedding"), 2).cast("double").as("y"))
+      .withColumn("gx", floor(col("x") / cellSize).cast("long"))
+      .withColumn("gy", floor(col("y") / cellSize).cast("long"))
+    val corpus = pts.select(col("pid").as("c_id"), col("x").as("cx"),
+      col("y").as("cy"), col("gx").as("cgx"), col("gy").as("cgy"))
+    val probes = pts
+      .withColumn("dx", explode(lit(Array(-1L, 0L, 1L))))
+      .withColumn("dy", explode(lit(Array(-1L, 0L, 1L))))
+      .select(col("pid").as("q_id"), col("x").as("qx"), col("y").as("qy"),
+        (col("gx") + col("dx")).as("jgx"), (col("gy") + col("dy")).as("jgy"))
+    val nn = corpus.join(probes,
+        col("cgx") === col("jgx") && col("cgy") === col("jgy") &&
+          col("c_id") =!= col("q_id"))
+      .withColumn("dist2", round(
+        (col("cx") - col("qx")) * (col("cx") - col("qx")) +
+          (col("cy") - col("qy")) * (col("cy") - col("qy")), 6))
+      .withColumn("rn", row_number().over(
+        Window.partitionBy("q_id").orderBy(col("dist2"), col("c_id"))))
+      .filter(col("rn") === 1)
+      .select(col("q_id"), col("c_id"), col("dist2"))
+    nn.as("l").join(nn.as("r"),
+        col("l.q_id") === col("r.c_id") && col("l.c_id") === col("r.q_id") &&
+          col("l.q_id") < col("l.c_id"))
+      .select(col("l.q_id").as("id_a"), col("l.c_id").as("id_b"),
+        col("l.dist2").as("dist2"))
+  }
+
+  test("mutualNN2d: the least (dist2, c_id) per probe returns the window form's pairs, ties and short vectors included") {
+    graft.core.GraftConf.ensure(spark) // the engine's non-ANSI reads: a 1-element vector has no y
+    // 120 ids on a 9×6 lattice 0.01 apart, 2–3 ids a site (exact
+    // duplicates tie at dist2 0), and 12 single ids on a 4×3 lattice (up to
+    // four neighbours tie at a rounded 1e-4, float noise below 1e-6 aside)
+    val dense = (0 until 120).map(i => (i.toLong, Array((i % 9) * 0.01f, (i / 9 % 6) * 0.01f)))
+    val sparse = (0 until 12).map(j =>
+      (200L + j, Array(0.5f + (j % 4) * 0.01f, 0.5f + (j / 4) * 0.01f)))
+    val odd = Seq((1000L, null), (1001L, Array(0.02f)), (1002L, Array.empty[Float]),
+      (1003L, Array(0.045f, 0.035f, 9f)), (1004L, Array(0.045f, 0.035f)))
+    val pts = (dense ++ sparse ++ odd).toDF("vec_id", "embedding")
+    for (cell <- Seq(0.015, 0.05)) {
+      val got = Similarity.mutualNN2d(pts, "vec_id", "embedding", cellSize = cell)
+      val want = mutualNN2dWindow(pts, cell)
+      assert(got.count() > 0 && got.count() == want.count(), s"cell $cell")
+      assert(got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty, s"cell $cell")
+    }
+    // 1003 and 1004 share a site (its 3rd dim ignored): a mutual pair at 0
+    assert(Similarity.mutualNN2d(pts, "vec_id", "embedding", cellSize = 0.05)
+      .filter(col("id_b") === 1004L).select("id_a", "dist2").as[(Long, Double)]
+      .collect().toSeq == Seq((1003L, 0.0)))
+  }
+
   test("silhouetteByLabel: hand-computed rationals on two symmetric clusters") {
     import spark.implicits._
     // label 0: (0,0),(2,0) → centroid (1,0); label 1: (10,0),(12,0) →

@@ -174,4 +174,22 @@ class StoredIndexSpec extends SparkSpec {
     assert(plain(spark, "d")("y") == "y")
     assert(!(get(other, "e") eq c) && builds == 4)
   }
+
+  test("a text index built after its corpus is rewritten in the same session tokenizes the new corpus") {
+    val dir = Files.createTempDirectory("text_index_rewrite").toString
+    val docs = s"$dir/documents.parquet"
+    write(docs, Seq("alpha beta gamma delta", "beta gamma delta epsilon", "one two three four"))
+    graft.queries.TextQueries.sharedShingles(spark, dir).count() // the first corpus' shingles, shared
+    write(docs, Seq("red green blue black", "green blue black white", "five six seven eight"))
+    val index = StoredIndex.location("prefix_index", dir)
+    try {
+      graft.queries.TextQueries.prewarmStoredIndexes(spark, dir)
+      val sigs = spark.read.parquet(index.resolve("sigs").toString)
+      val want = graft.ext.Dedup.signatureTable(graft.ext.Dedup.shingleHashTable(
+        spark.read.parquet(docs), col("doc_id"), col("text")))
+      assert(sigs.exceptAll(want).isEmpty && want.exceptAll(sigs).isEmpty)
+    } finally Seq(index, StoredIndex.location("prefix_index", dir, "_cap20"),
+      StoredIndex.location("stable_prefix_index", dir)).foreach(i =>
+      org.apache.commons.io.FileUtils.deleteDirectory(i.toFile))
+  }
 }
