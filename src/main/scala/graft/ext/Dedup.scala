@@ -149,8 +149,90 @@ object Dedup {
       .join(sizes.withColumnRenamed("doc", "id_a").withColumnRenamed("n_sh", "n_a"), "id_a")
       .join(sizes.withColumnRenamed("doc", "id_b").withColumnRenamed("n_sh", "n_b"), "id_b")
       .select(col("id_a"), col("id_b"),
-        (col("n_inter").cast("double") /
-          (col("n_a") + col("n_b") - col("n_inter")).cast("double")).as("jaccard"))
+        jaccard(col("n_inter"), col("n_a"), col("n_b")).as("jaccard"))
+  }
+
+  // ---------- the exact-Jaccard contract (also StreamOps') ----------
+
+  /** The Jaccard ratio |∩| / (|A| + |B| − |∩|), as doubles. */
+  private[graft] def jaccard(nInter: Column, nA: Column, nB: Column): Column =
+    nInter.cast("double") / (nA + nB - nInter).cast("double")
+
+  /** The τ LENGTH filter τ·max(|a|,|b|) ≤ min(|a|,|b|) in integers —
+    * implied by J ≥ τ, so it prunes candidates before the verify. */
+  private[graft] def tauLengthOk(nA: Column, nB: Column,
+                                 tauNum: Int, tauDen: Int): Column =
+    nA * tauDen >= nB * tauNum && nB * tauDen >= nA * tauNum
+
+  /** |A ∩ B| of two SORTED distinct signature arrays, as `n_inter`:
+    * graft_sorted_intersect_count is a two-pointer merge — count only,
+    * zero allocation. The built-in size(array_intersect(..)) builds a
+    * hash set AND materializes the intersection per pair: measured
+    * ~35 s of the 63 s sf1 query path across 44 M candidates. */
+  private[graft] def interCount(ha: Column, hb: Column): Column =
+    graft.functions.GraftFunctions.sortedIntersectCount(ha, hb).as("n_inter")
+
+  /** The exact test J ≥ tauNum/tauDen in integers:
+    * (1+τ)·i ≥ τ·(|a|+|b|) ⟺ (tauDen+tauNum)·i ≥ tauNum·(|a|+|b|) —
+    * no float boundary can disagree with the oracle. */
+  private[graft] def tauOk(nInter: Column, nA: Column, nB: Column,
+                           tauNum: Int, tauDen: Int): Column =
+    nInter * (tauDen + tauNum) >= (nA + nB) * tauNum
+
+  /** The signature BROADCAST GATE, as a function of the shingle row
+    * count: the signature table is one row per doc (~0.5 KB), about
+    * 8 bytes per shingle row in total, and it may be broadcast up to
+    * 64 MiB. Past that the verify joins run as co-partitioned shuffle
+    * joins keyed by doc id (AQE may still promote them back if runtime
+    * stats allow) — a 100 TB corpus must never pin a multi-GB signature
+    * table on the driver. */
+  def sigsFitBroadcast(shRows: Long): Boolean = shRows * 8L <= (64L << 20)
+
+  /** The verify tail of [[pairsFromPrefixIndex]] and [[crossPrefixProbe]]
+    * over (id_a, id_b) candidates: join both sides' signature arrays,
+    * keep pairs passing [[tauOk]], then de-duplicate and add the rounded
+    * Jaccard. Returns (id_a, id_b, n_inter, n_a, n_b, jaccard).
+    *
+    * Verify via per-doc sorted signature ARRAYS, not a (pair × token)
+    * expansion join: on a near-dup-heavy corpus the candidate set is
+    * large (44.5M pairs on the 10× ScaleCheck fixture) and expanding
+    * each pair by its ~50 tokens to count the intersection relationally
+    * put 2.4e9 rows through a shuffle join (measured 330+ s end to end).
+    * One [[interCount]] per pair is O(|A|+|B|) inside a codegen'd map
+    * over broadcast-joined signatures — no shuffle ever carries an array.
+    * `broadcastSigs` is the caller's [[sigsFitBroadcast]] answer; side A
+    * takes the hint only if `broadcastA`.
+    *
+    * NO pair-level distinct before the verify (r14): a candidate pair
+    * repeats once per SHARED PREFIX token, and prefixes hold each doc's
+    * rarest tokens, so the duplication factor is small by construction —
+    * measured 1.22× at τ=2/5 and 1.24× at τ=1/2 on sf1 (54.2 M raw →
+    * 44.4 M distinct). The pair-keyed distinct was a full exchange of
+    * those 44 M rows (5.9 s of t55's ~20 s query path) to save 22% of a
+    * map-side verify; de-duplicating AFTER the τ filter (survivors only —
+    * 3 orders of magnitude fewer rows) removes the exchange: with
+    * broadcast signatures the path from the h-join to the final tiny
+    * distinct is shuffle-free (8.4 s → 4.9 s warm at sf1). Duplicated
+    * rows verify to IDENTICAL tuples, so set semantics are unchanged.
+    */
+  private def tauVerifiedPairs(cand: DataFrame, sigsA: DataFrame,
+                               sigsB: DataFrame, broadcastSigs: Boolean,
+                               broadcastA: Boolean,
+                               tauNum: Int, tauDen: Int): DataFrame = {
+    val hint: DataFrame => DataFrame =
+      if (broadcastSigs) broadcast(_) else identity
+    val a = sigsA.select(col("doc").as("id_a"), col("hs").as("ha"))
+    cand
+      .join(if (broadcastA) hint(a) else a, "id_a")
+      .join(hint(sigsB.select(col("doc").as("id_b"), col("hs").as("hb"))),
+        "id_b")
+      .select(col("id_a"), col("id_b"), interCount(col("ha"), col("hb")),
+        size(col("ha")).cast("long").as("n_a"),
+        size(col("hb")).cast("long").as("n_b"))
+      .filter(tauOk(col("n_inter"), col("n_a"), col("n_b"), tauNum, tauDen))
+      .distinct()
+      .select(col("id_a"), col("id_b"), col("n_inter"), col("n_a"), col("n_b"),
+        round(jaccard(col("n_inter"), col("n_a"), col("n_b")), 6).as("jaccard"))
   }
 
   /** Set-similarity join via PREFIX FILTERING (the PPJoin/AllPairs family,
@@ -173,10 +255,8 @@ object Dedup {
     *
     * τ is a RATIONAL (tauNum/tauDen) so the prefix length
     * (⌈τn⌉ = (tauNum·n + tauDen − 1) div tauDen), the length filter
-    * (tauDen·min ≥ tauNum·max) and the final threshold test
-    * ((1+τ)·i ≥ τ·(|a|+|b|) ⟺ (tauDen+tauNum)·i ≥ tauNum·(|a|+|b|))
-    * are pure INTEGER arithmetic — no float boundary can disagree with the
-    * oracle.
+    * ([[tauLengthOk]]) and the final threshold test ([[tauOk]]) are pure
+    * INTEGER arithmetic — no float boundary can disagree with the oracle.
     *
     * Scale posture: candidates are generated ONLY where two PREFIXES
     * collide — and prefixes hold each doc's globally-RAREST tokens, the
@@ -192,10 +272,8 @@ object Dedup {
     * J ≥ tauNum/tauDen, id_a < id_b.
     */
   def prefixFilterPairs(df: DataFrame, id: Column, text: Column, n: Int = 3,
-                        tauNum: Int = 2, tauDen: Int = 5,
-                        broadcastSigBytes: Long = 64L << 20): DataFrame =
-    prefixFilterPairsFrom(shingleHashTable(df, id, text, n),
-      tauNum, tauDen, broadcastSigBytes)
+                        tauNum: Int = 2, tauDen: Int = 5): DataFrame =
+    prefixFilterPairsFrom(shingleHashTable(df, id, text, n), tauNum, tauDen)
 
   /** The materialized (doc, s, h) distinct-shingle table every
     * prefix-filter consumer starts from — (doc, shingle string,
@@ -216,13 +294,10 @@ object Dedup {
     * [[shingleHashTable]] — the τ-specific tail (prefix ranks, candidate
     * self-join, length filter, array-intersect verify).
     */
-  def prefixFilterPairsFrom(sh: DataFrame, tauNum: Int, tauDen: Int,
-                            broadcastSigBytes: Long = 64L << 20): DataFrame = {
+  def prefixFilterPairsFrom(sh: DataFrame, tauNum: Int, tauDen: Int): DataFrame = {
     val pref = prefixIndexTable(sh, tauNum, tauDen).localCheckpoint()
-    val sigs = signatureTable(sh)
-    val sigBytes = sh.count() * 8L
-    pairsFromPrefixIndex(pref, sigs, tauNum, tauDen,
-      broadcastSigs = sigBytes <= broadcastSigBytes)
+    pairsFromPrefixIndex(pref, signatureTable(sh), tauNum, tauDen,
+      broadcastSigs = sigsFitBroadcast(sh.count()))
   }
 
   /** The τ-specific PREFIX INDEX: each doc's rarest-(df, shingle) prefix
@@ -307,69 +382,18 @@ object Dedup {
     * executor time on the 10× ScaleCheck fixture; the duplicated window
     * sort, not the 55M-row join, was the cost). Reading from a stored
     * parquet index needs no checkpoint: the scan is already a leaf.
+    * The verify is [[tauVerifiedPairs]]; `broadcastSigs` is the
+    * [[sigsFitBroadcast]] answer for the index's shingle rows.
     */
   def pairsFromPrefixIndex(pref: DataFrame, sigs: DataFrame,
                            tauNum: Int, tauDen: Int,
                            broadcastSigs: Boolean): DataFrame = {
-    // NO pair-level distinct before the verify (r14, VERDICT r13 #2): a
-    // candidate pair repeats once per SHARED PREFIX token, and prefixes
-    // hold each doc's rarest tokens, so the duplication factor is small
-    // by construction — measured 1.22× at τ=2/5 and 1.24× at τ=1/2 on
-    // sf1 (54.2 M raw → 44.4 M distinct). The pair-keyed distinct was a
-    // full exchange of those 44 M rows (measured 5.9 s of t55's ~20 s
-    // query path) to save 22% of a map-side verify; verifying the
-    // duplicated rows directly and de-duplicating AFTER the τ filter
-    // (survivors only — 3 orders of magnitude fewer rows) removes the
-    // exchange entirely: with broadcast signatures the path from the
-    // h-join to the final tiny distinct is shuffle-free (measured
-    // 8.4 s → 4.9 s warm at sf1; the non-broadcast regime wins too —
-    // the verify joins carry 1.22× rows but the 44 M-row exchange is
-    // gone). Duplicated rows verify to IDENTICAL tuples, so set
-    // semantics are unchanged.
     val cand = pref.as("p").join(pref.as("f"),
         col("p.h") === col("f.h") && col("p.doc") < col("f.doc"))
-      .filter(col("p.n_sh") * tauDen >= col("f.n_sh") * tauNum &&
-        col("f.n_sh") * tauDen >= col("p.n_sh") * tauNum)
+      .filter(tauLengthOk(col("p.n_sh"), col("f.n_sh"), tauNum, tauDen))
       .select(col("p.doc").as("id_a"), col("f.doc").as("id_b"))
-    // verify via per-doc sorted signature ARRAYS, not a (pair × token)
-    // expansion join: on a near-dup-heavy corpus the candidate set is
-    // large (44.5M pairs on the 10× ScaleCheck fixture) and expanding
-    // each pair by its ~50 tokens to count the intersection relationally
-    // put 2.4e9 rows through a shuffle join (measured 330+ s end to end;
-    // every candidate phase is seconds). One array_intersect per pair is
-    // O(|A|+|B|) inside a codegen'd map over broadcast-joined signatures —
-    // no shuffle ever carries an array. The signature table is one row
-    // per doc (~0.5 KB); the broadcast hint is SIZE-GATED by the caller
-    // (total payload ≈ 8 B per shingle row, one cheap scan over the
-    // materialized table). Past the threshold the hint is dropped and
-    // the same plan runs as a co-partitioned shuffle join keyed by doc
-    // id (AQE may still promote it back if runtime stats allow) — a
-    // 100 TB corpus must never pin a multi-GB signature table on the
-    // driver.
-    val hint: DataFrame => DataFrame =
-      if (broadcastSigs) broadcast(_) else identity
-    cand
-      .join(hint(sigs.select(col("doc").as("id_a"), col("hs").as("ha"))),
-        "id_a")
-      .join(hint(sigs.select(col("doc").as("id_b"), col("hs").as("hb"))),
-        "id_b")
-      // graft_sorted_intersect_count: two-pointer merge over the SORTED
-      // signature arrays — count only, zero allocation. The built-in
-      // size(array_intersect(..)) builds a hash set AND materializes the
-      // intersection per pair: measured ~35 s of the 63 s sf1 query path
-      // across 44 M candidates; the native kernel removes it.
-      .select(col("id_a"), col("id_b"),
-        graft.functions.GraftFunctions.sortedIntersectCount(
-          col("ha"), col("hb")).as("n_inter"),
-        size(col("ha")).cast("long").as("n_a"),
-        size(col("hb")).cast("long").as("n_b"))
-      .filter(col("n_inter") * (tauDen + tauNum) >=
-        (col("n_a") + col("n_b")) * tauNum)
-      .distinct()
-      .select(col("id_a"), col("id_b"), col("n_inter"), col("n_a"), col("n_b"),
-        round(col("n_inter").cast("double") /
-          (col("n_a") + col("n_b") - col("n_inter")).cast("double"), 6)
-          .as("jaccard"))
+    tauVerifiedPairs(cand, sigs, sigs, broadcastSigs, broadcastA = true,
+      tauNum, tauDen)
   }
 
   /** Incremental (cross-collection) prefix-filter probe: a NEW BATCH's
@@ -392,44 +416,21 @@ object Dedup {
     * batch is deployment-small, the corpus side is its τ-prefix only,
     * and the length filter prunes before the distinct. The verify joins
     * carry the batch's own fresh signature arrays and the STORED corpus
-    * signatures (size-gate the broadcast exactly as
-    * [[pairsFromPrefixIndex]]).
+    * signatures ([[tauVerifiedPairs]], gated by [[sigsFitBroadcast]]).
     */
   def crossPrefixProbe(batchSh: DataFrame, corpusPref: DataFrame,
                        corpusSigs: DataFrame, tauNum: Int, tauDen: Int,
                        broadcastSigs: Boolean): DataFrame = {
     val bSizes = batchSh.groupBy(col("doc")).agg(count(lit(1)).as("n_sh"))
-    // candidate dedup deferred to AFTER the τ filter, exactly as in
-    // [[pairsFromPrefixIndex]] (r14): a pair repeats once per shared
-    // corpus-prefix token (small by the rarest-tokens argument), and the
-    // pair-keyed distinct was the only candidate-sized exchange in the
-    // probe — the survivors-only distinct is negligible.
     val cand = batchSh.as("b")
       .join(bSizes.withColumnRenamed("doc", "bdoc").as("z"),
         col("b.doc") === col("z.bdoc"))
       .join(corpusPref.as("p"), col("b.h") === col("p.h"))
-      .filter(col("z.n_sh") * tauDen >= col("p.n_sh") * tauNum &&
-        col("p.n_sh") * tauDen >= col("z.n_sh") * tauNum)
+      .filter(tauLengthOk(col("z.n_sh"), col("p.n_sh"), tauNum, tauDen))
       .select(col("b.doc").as("id_a"), col("p.doc").as("id_b"))
-    val bSigs = signatureTable(batchSh)
-    val hint: DataFrame => DataFrame =
-      if (broadcastSigs) broadcast(_) else identity
-    cand
-      .join(bSigs.select(col("doc").as("id_a"), col("hs").as("ha")), "id_a")
-      .join(hint(corpusSigs.select(col("doc").as("id_b"), col("hs").as("hb"))),
-        "id_b")
-      .select(col("id_a"), col("id_b"),
-        graft.functions.GraftFunctions.sortedIntersectCount(
-          col("ha"), col("hb")).as("n_inter"),
-        size(col("ha")).cast("long").as("n_a"),
-        size(col("hb")).cast("long").as("n_b"))
-      .filter(col("n_inter") * (tauDen + tauNum) >=
-        (col("n_a") + col("n_b")) * tauNum)
-      .distinct()
-      .select(col("id_a"), col("id_b"), col("n_inter"), col("n_a"), col("n_b"),
-        round(col("n_inter").cast("double") /
-          (col("n_a") + col("n_b") - col("n_inter")).cast("double"), 6)
-          .as("jaccard"))
+    // the batch's own fresh signatures are left to AQE's broadcast choice
+    tauVerifiedPairs(cand, signatureTable(batchSh), corpusSigs, broadcastSigs,
+      broadcastA = false, tauNum, tauDen)
   }
 
   /** df-capped shingle rows: drop shingles appearing in more than
@@ -541,9 +542,7 @@ object Dedup {
       .withColumn("inter",
         graft.functions.GraftFunctions.sortedIntersectCount(col("sh_a"), col("sh_b")))
       .select(col("id_a"), col("id_b"),
-        (col("inter").cast("double") /
-          (size(col("sh_a")) + size(col("sh_b")) - col("inter")).cast("double"))
-          .as("jaccard"))
+        jaccard(col("inter"), size(col("sh_a")), size(col("sh_b"))).as("jaccard"))
   }
 
   /** Exploded (doc, band, bucket) band-hash rows from the re-assembled
@@ -793,18 +792,45 @@ object Dedup {
   }
 
   /** SimHash near-dup pairs with hamming ≤ maxHamming, found via 16-bit
-    * chunk blocking (exhaustive for maxHamming ≤ 3; a recall-bounded
-    * candidate set above that).
+    * chunk blocking ([[bandedHammingPairs]] over the four `chunk` columns:
+    * exhaustive for maxHamming ≤ 3; a recall-bounded candidate set above
+    * that). Returns (id_a, id_b, hamming).
     */
-  def simhashPairs(sig: DataFrame, maxHamming: Int = 3): DataFrame = {
-    val chunkMatches = (0 until 4).map { c =>
-      sig.as("a").join(sig.as("b"),
-          col(s"a.chunk$c") === col(s"b.chunk$c") && col("a.doc") < col("b.doc"))
-        .select(col("a.doc").as("id_a"), col("b.doc").as("id_b"),
-          col("a.simhash").as("sig_a"), col("b.simhash").as("sig_b"))
-    }
-    chunkMatches.reduce(_ union _).distinct()
-      .withColumn("hamming", bit_count(col("sig_a").bitwiseXOR(col("sig_b"))))
+  def simhashPairs(sig: DataFrame, maxHamming: Int = 3): DataFrame =
+    bandedHammingPairs(sig.select(col("doc") +:
+      (0 until 4).map(c => col(s"chunk$c").as(s"c$c")): _*), maxHamming)
+
+  /** Hamming distance between two fingerprints split into the same
+    * words: the popcount of a_j XOR b_j, summed over j. */
+  private[graft] def hamming(a: Seq[Column], b: Seq[Column]): Column =
+    a.zip(b).map { case (x, y) => bit_count(x.bitwiseXOR(y)) }.reduce(_ + _)
+
+  /** 64-bit fingerprint pairs with hamming ≤ `maxHamming` over a
+    * (doc, c0, c1, c2, c3) table of its four 16-bit chunks: candidates
+    * are pairs sharing an EQUAL chunk in the same band (one band explode
+    * plus one equi-join — never all-pairs), verified by the exact
+    * hamming over the chunks, which equals popcount(sig_a ^ sig_b) as
+    * the four chunks partition the 64 bits. Complete for maxHamming ≤ 3
+    * (pigeonhole: 3 differing bits leave some chunk equal); above that
+    * the chunk join is an LSH-style recall/cost trade. Callers
+    * materialize `fp` if it is costly: it feeds the band table and both
+    * verify sides. Returns (id_a, id_b, hamming), id_a < id_b.
+    */
+  private[graft] def bandedHammingPairs(fp: DataFrame, maxHamming: Int): DataFrame = {
+    val bands = fp.select(col("doc"), explode(array((0 until 4).map(j =>
+        struct(lit(j).as("j"), col(s"c$j").as("v"))): _*)).as("b"))
+      .select(col("doc"), col("b.j"), col("b.v"))
+    val cand = bands.as("x").join(bands.as("y"),
+        col("x.j") === col("y.j") && col("x.v") === col("y.v") &&
+          col("x.doc") < col("y.doc"))
+      .select(col("x.doc").as("id_a"), col("y.doc").as("id_b")).distinct()
+    val ha = fp.select(col("doc").as("id_a") +:
+      (0 until 4).map(j => col(s"c$j").as(s"a$j")): _*)
+    val hb = fp.select(col("doc").as("id_b") +:
+      (0 until 4).map(j => col(s"c$j").as(s"b$j")): _*)
+    cand.join(ha, "id_a").join(hb, "id_b")
+      .withColumn("hamming", hamming((0 until 4).map(j => col(s"a$j")),
+        (0 until 4).map(j => col(s"b$j"))).cast("int"))
       .filter(col("hamming") <= maxHamming)
       .select(col("id_a"), col("id_b"), col("hamming"))
   }

@@ -342,37 +342,16 @@ object Multimodal {
     withChunks.drop((0 until 64).map(i => s"s$i") :+ "mean": _*)
   }
 
-  /** Perceptual near-dup pairs by aHash hamming distance ≤ `maxHamming`:
-    * candidates = pairs sharing an EQUAL 16-bit chunk (band equi-join —
-    * never all-pairs), verified by the exact 64-bit hamming distance.
-    * The pigeonhole guarantee is complete for maxHamming ≤ 3; the
-    * default 8 (the practical aHash near-dup bar) makes the chunk join
-    * an LSH-style recall/cost trade exactly like t07's banded MinHash —
-    * and the m05 oracle replicates the SAME blocking, so candidate-set
-    * recall never shows up as an oracle mismatch. The image twin of
-    * SimHash text near-dup.
-    */
+  /** Perceptual near-dup pairs by aHash hamming ≤ `maxHamming` through
+    * [[Dedup.bandedHammingPairs]], the SimHash text twin. At the default
+    * 8 (the practical aHash bar) the chunk join trades recall like t07's
+    * banded MinHash; the m05 oracle replicates the SAME blocking. */
   def aHashNearDups(df: DataFrame, id: Column, media: Column,
                     maxHamming: Int = 8): DataFrame = {
     val h = aHash(df.select(id.as("doc"), media.as("__m")), col("__m"))
       .select(col("doc"), col("c0"), col("c1"), col("c2"), col("c3"))
       .localCheckpoint() // feeds the band table AND both verify sides
-    val bands = h.select(col("doc"), explode(array((0 until 4).map(j =>
-        struct(lit(j).as("j"), col(s"c$j").as("v"))): _*)).as("b"))
-      .select(col("doc"), col("b.j"), col("b.v"))
-    val cand = bands.as("x").join(bands.as("y"),
-        col("x.j") === col("y.j") && col("x.v") === col("y.v") &&
-          col("x.doc") < col("y.doc"))
-      .select(col("x.doc").as("id_a"), col("y.doc").as("id_b")).distinct()
-    val ha = h.select(col("doc").as("id_a") +:
-      (0 until 4).map(j => col(s"c$j").as(s"a$j")): _*)
-    val hb = h.select(col("doc").as("id_b") +:
-      (0 until 4).map(j => col(s"c$j").as(s"b$j")): _*)
-    cand.join(ha, "id_a").join(hb, "id_b")
-      .withColumn("hamming", (0 until 4).map(j =>
-        expr(s"bit_count(a$j ^ b$j)")).reduce(_ + _).cast("int"))
-      .filter(col("hamming") <= maxHamming)
-      .select(col("id_a"), col("id_b"), col("hamming"))
+    Dedup.bandedHammingPairs(h, maxHamming)
   }
 
   // ---------- partition-batched decode seam ----------

@@ -73,34 +73,25 @@ object PQ {
       .sortBy(t => (t._1, t._2))
 
   /** The per-sub argmin as a map-only when-chain of native
-    * [[graft.functions.NearestCell]] kernels — one branch per subspace,
-    * each with its own (ids, matrix) literals (cells ascending, so the
-    * kernel's first-wins tie-break equals min_by's (d2, cell) struct
-    * order). This replaced the broadcast join on `sub` + min_by argmin
-    * shuffle (r15): assignment is now zero-shuffle per training
-    * iteration, the IVF r13 join→kernel move applied to the fine
-    * quantizer. Bit parity pinned by PQSpec's kernel-vs-join test.
+    * [[graft.functions.NearestCellKernel]] kernels — one branch per
+    * subspace, each with its own (ids, matrix) literals (cells ascending,
+    * so the kernel's first-wins tie-break equals min_by's (d2, cell)
+    * struct order). `kernel` is GraftFunctions.nearestCell (the winning
+    * cell, `nullType` "int") or nearestCellDist (the winning d2,
+    * "double", for the distortion audits in place of the n·m·kc
+    * joined-candidate min(struct) aggregate). This replaced the
+    * broadcast join on `sub` + min_by argmin shuffle (r15): assignment is
+    * now zero-shuffle per training iteration, the IVF r13 join→kernel
+    * move applied to the fine quantizer. Bit parity pinned by PQSpec's
+    * kernel-vs-join test.
     */
-  private def kernelCellExpr(cb: Array[(Int, Int, Array[Double])],
-                             sub: Column, subv: Column): Column =
+  private def kernelExpr(cb: Array[(Int, Int, Array[Double])], sub: Column,
+                         subv: Column, kernel: (Column, Column, Column) => Column,
+                         nullType: String): Column =
     cb.groupBy(_._1).toSeq.sortBy(_._1)
-      .foldLeft(lit(null).cast("int")) { case (acc, (s, rows)) =>
+      .foldLeft(lit(null).cast(nullType)) { case (acc, (s, rows)) =>
         val sorted = rows.sortBy(_._2)
-        when(sub === s, graft.functions.GraftFunctions.nearestCell(subv,
-          typedLit(sorted.map(_._2).toSeq),
-          typedLit(sorted.map(_._3.toSeq).toSeq))).otherwise(acc)
-      }
-
-  /** [[kernelCellExpr]]'s distance twin (graft_nearest_cell_dist): the
-    * winning d2 per sub-vector, used by the distortion audits in place of
-    * the n·m·kc joined-candidate min(struct) aggregate.
-    */
-  private def kernelDistExpr(cb: Array[(Int, Int, Array[Double])],
-                             sub: Column, subv: Column): Column =
-    cb.groupBy(_._1).toSeq.sortBy(_._1)
-      .foldLeft(lit(null).cast("double")) { case (acc, (s, rows)) =>
-        val sorted = rows.sortBy(_._2)
-        when(sub === s, graft.functions.GraftFunctions.nearestCellDist(subv,
+        when(sub === s, kernel(subv,
           typedLit(sorted.map(_._2).toSeq),
           typedLit(sorted.map(_._3.toSeq).toSeq))).otherwise(acc)
       }
@@ -111,7 +102,9 @@ object PQ {
   private def assignCodesKernel(subs: DataFrame,
                                 cb: Array[(Int, Int, Array[Double])]): DataFrame = {
     subs.select(col("vid"), col("sub"),
-      kernelCellExpr(cb, col("sub"), col("subv")).as("cell"), col("subv"))
+      kernelExpr(cb, col("sub"), col("subv"),
+        graft.functions.GraftFunctions.nearestCell, "int").as("cell"),
+      col("subv"))
   }
 
   /** Nearest-codebook-cell assignment: (vid, sub, cell, subv). Broadcast
@@ -261,7 +254,8 @@ object PQ {
     // (vid, sub) argmin exchange (r15; guide §2.4/§4).
     subRows(v, m)
       .select(col("sub"),
-        kernelDistExpr(collectCb(cb), col("sub"), col("subv")).as("se"))
+        kernelExpr(collectCb(cb), col("sub"), col("subv"),
+          graft.functions.GraftFunctions.nearestCellDist, "double").as("se"))
       .groupBy("sub")
       .agg(count(lit(1)).as("n_vecs"),
         round((sum(IVF.decimalSafe(col("se")).cast("decimal(38,18)"))

@@ -413,8 +413,8 @@ object Similarity {
     * quantization family (s13 int8 = 8 bits/dim, s07 PQ = sub-byte/dim,
     * this = 1 bit/dim, a 32× storage cut vs float): each vector reduces
     * to its per-dimension SIGN BITS packed in two longs; the shortlist
-    * ranks by Hamming distance (`bit_count(xor)` — two codegen'd
-    * instructions per candidate), and the k·overfetch survivors re-rank
+    * ranks by Hamming distance ([[Dedup.hamming]]: popcount of the xor,
+    * two codegen'd instructions per word), and the k·overfetch survivors re-rank
     * by exact cosine. Sign bits, Hamming counts, and the rounded-cosine
     * re-rank are all exactly reproducible, so — like s13 and unlike the
     * trained-index paths — this compressed search has a COMPLETE oracle.
@@ -440,9 +440,8 @@ object Similarity {
     val wShort = Window.partitionBy("q_id").orderBy(col("ham"), col("c_id"))
     val shortlist = firstK(cand.crossJoin(broadcast(qq))
         .filter(col("q_id") =!= col("c_id"))
-        .withColumn("ham",
-          bit_count(col("qb1").bitwiseXOR(col("b1"))) +
-            bit_count(col("qb2").bitwiseXOR(col("b2")))),
+        .withColumn("ham", Dedup.hamming(Seq(col("qb1"), col("qb2")),
+          Seq(col("b1"), col("b2")))),
       "sl", wShort, k * overfetch)
     topK(shortlist.withColumn("cos", roundedCos("q_vec", "c_vec", "q_norm", "c_norm")),
       k, Seq(col("cos").desc, col("c_id")), col("q_id"), col("c_id"), col("cos"))

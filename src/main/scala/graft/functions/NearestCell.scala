@@ -1,13 +1,15 @@
 package graft.functions
 
 import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 
-/** graft_nearest_cell(v, ids, matrix) — native map-only nearest-centroid
-  * argmin: the IVF cell assignment as ONE projection over n rows instead
-  * of an n×k cross join.
+/** The native map-only nearest-centroid argmin behind
+  * graft_nearest_cell and graft_nearest_cell_dist: the IVF/PQ cell
+  * assignment as ONE projection over n rows instead of an n×k cross
+  * join. The two expressions differ only in what they emit — the
+  * winning cell id or the winning squared distance ([[pick]]).
   *
   * `ids` (array<int>) and `matrix` (array<array<double>>) must be
   * FOLDABLE (literals) — they are the quantizer's model state, k·d
@@ -25,20 +27,26 @@ import org.apache.spark.sql.types._
   * argmin compares with java.lang.Double.compare (Spark's double
   * ordering — NaN greatest, −0.0 < 0.0) in ascending cell-id order, so
   * ties go to the lowest cell id exactly like min_by(cell,
-  * struct(d2, cell)). Null semantics: null if the vector is null or any
+  * struct(d2, cell)), and the winning d2 equals min(struct(d2, cell)).d2
+  * bit-for-bit. Null semantics: null if the vector is null or any
   * element is null (DotProduct's poisoning); a vector whose length
   * differs from a centroid's is null too (the zip_with-pads-with-null
   * chain the join formulation inherited).
   */
-case class NearestCell(vec: Expression, idsLit: Expression, matLit: Expression)
-    extends TernaryExpression {
+abstract class NearestCellKernel extends TernaryExpression {
+
+  def vec: Expression
+  def idsLit: Expression
+  def matLit: Expression
+
+  /** The emitted value: the winning cell `id` or its squared distance
+    * `d2` — used for the interpreted result and the generated code. */
+  protected def pick[T](id: T, d2: T): T
 
   override def first: Expression = vec
   override def second: Expression = idsLit
   override def third: Expression = matLit
 
-  override def prettyName: String = "graft_nearest_cell"
-  override def dataType: DataType = IntegerType
   override def nullable: Boolean = true
   override def nullIntolerant: Boolean = true
 
@@ -73,39 +81,6 @@ case class NearestCell(vec: Expression, idsLit: Expression, matLit: Expression)
     a
   }
 
-  /** Shared kernel (interpreted path and spec reference). Returns the
-    * winning cell id, or Integer.MIN_VALUE to signal null (length
-    * mismatch). Null ELEMENTS are checked by the caller.
-    */
-  private def argmin(v: Array[Double]): Int = {
-    // dot(v,v) is centroid-independent: hoisted out of the j loop (same
-    // left-to-right fold, so the same double every iteration — bit parity
-    // with the unhoisted kernel is preserved by construction)
-    var dvv = 0.0
-    var h = 0
-    while (h < v.length) { dvv += v(h) * v(h); h += 1 }
-    var best = Double.NaN
-    var bestId = 0
-    var first = true
-    var j = 0
-    while (j < mat.length) {
-      val c = mat(j)
-      if (c.length != v.length) return Integer.MIN_VALUE
-      var dvc = 0.0
-      var i = 0
-      while (i < v.length) {
-        dvc += v(i) * c(i)
-        i += 1
-      }
-      val d2 = (dvv - 2.0 * dvc) + cc(j)
-      if (first || java.lang.Double.compare(d2, best) < 0) {
-        best = d2; bestId = ids(j); first = false
-      }
-      j += 1
-    }
-    bestId
-  }
-
   override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any = {
     val vAny = vec.eval(input)
     if (vAny == null) return null
@@ -117,8 +92,33 @@ case class NearestCell(vec: Expression, idsLit: Expression, matLit: Expression)
       i += 1
     }
     if (mat.isEmpty) return null
-    val r = argmin(vd.toDoubleArray())
-    if (r == Integer.MIN_VALUE) null else r
+    val v = vd.toDoubleArray()
+    // dot(v,v) is centroid-independent: hoisted out of the j loop (same
+    // left-to-right fold, so the same double every iteration — bit parity
+    // with the unhoisted kernel is preserved by construction)
+    var dvv = 0.0
+    var h = 0
+    while (h < n) { dvv += v(h) * v(h); h += 1 }
+    var best = Double.NaN
+    var bestId = 0
+    var first = true
+    var j = 0
+    while (j < mat.length) {
+      val c = mat(j)
+      if (c.length != n) return null
+      var dvc = 0.0
+      i = 0
+      while (i < n) {
+        dvc += v(i) * c(i)
+        i += 1
+      }
+      val d2 = (dvv - 2.0 * dvc) + cc(j)
+      if (first || java.lang.Double.compare(d2, best) < 0) {
+        best = d2; bestId = ids(j); first = false
+      }
+      j += 1
+    }
+    pick[Any](bestId, best)
   }
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
@@ -145,7 +145,7 @@ case class NearestCell(vec: Expression, idsLit: Expression, matLit: Expression)
       code"""
         |${vCode.code}
         |boolean ${ev.isNull} = true;
-        |int ${ev.value} = 0;
+        |${CodeGenerator.javaType(dataType)} ${ev.value} = 0;
         |if (!${vCode.isNull} && $matRef.length > 0) {
         |  int $n = ${vCode.value}.numElements();
         |  boolean $hasNull = false;
@@ -173,14 +173,40 @@ case class NearestCell(vec: Expression, idsLit: Expression, matLit: Expression)
         |        $best = $d2; $bestId = $idsRef[$j]; $firstF = false;
         |      }
         |    }
-        |    if (!$lenBad) { ${ev.isNull} = false; ${ev.value} = $bestId; }
+        |    if (!$lenBad) { ${ev.isNull} = false; ${ev.value} = ${pick(bestId, best)}; }
         |  }
         |}
       """.stripMargin)
   }
+}
+
+/** graft_nearest_cell(v, ids, matrix): the winning cell id. */
+case class NearestCell(vec: Expression, idsLit: Expression, matLit: Expression)
+    extends NearestCellKernel {
+
+  override def prettyName: String = "graft_nearest_cell"
+  override def dataType: DataType = IntegerType
+  override protected def pick[T](id: T, d2: T): T = id
 
   override protected def withNewChildrenInternal(
       newFirst: Expression, newSecond: Expression,
       newThird: Expression): NearestCell =
+    copy(vec = newFirst, idsLit = newSecond, matLit = newThird)
+}
+
+/** graft_nearest_cell_dist(v, ids, matrix): the winning squared
+  * distance — the map-only form of "distance to the nearest codeword",
+  * which is what the PQ distortion audits aggregate
+  * (PQ.distortionBySubspace). */
+case class NearestCellDist(vec: Expression, idsLit: Expression, matLit: Expression)
+    extends NearestCellKernel {
+
+  override def prettyName: String = "graft_nearest_cell_dist"
+  override def dataType: DataType = DoubleType
+  override protected def pick[T](id: T, d2: T): T = d2
+
+  override protected def withNewChildrenInternal(
+      newFirst: Expression, newSecond: Expression,
+      newThird: Expression): NearestCellDist =
     copy(vec = newFirst, idsLit = newSecond, matLit = newThird)
 }

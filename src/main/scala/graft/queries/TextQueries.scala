@@ -1492,7 +1492,7 @@ object TextQueries {
         |ORDER BY id_a, id_b""".stripMargin) { (s, dir) =>
       val (pref, sigs, shRows) = storedPrefixIndex(s, dir)
       Dedup.pairsFromPrefixIndex(pref, sigs,
-          tauNum = 2, tauDen = 5, broadcastSigs = shRows * 8L <= (64L << 20))
+          tauNum = 2, tauDen = 5, broadcastSigs = Dedup.sigsFitBroadcast(shRows))
         .orderBy("id_a", "id_b")
     },
 
@@ -1549,7 +1549,7 @@ object TextQueries {
       val bSh = Dedup.shingleHashTable(batch, col("doc_id"), col("text"))
       Dedup.crossPrefixProbe(bSh,
           pref.filter(col("doc") % 10 =!= 7), sigs.filter(col("doc") % 10 =!= 7),
-          tauNum = 2, tauDen = 5, broadcastSigs = shRows * 8L <= (64L << 20))
+          tauNum = 2, tauDen = 5, broadcastSigs = Dedup.sigsFitBroadcast(shRows))
         .orderBy("id_a", "id_b")
     },
 
@@ -1611,7 +1611,7 @@ object TextQueries {
         .join(keep.select(col("s")), "s").select(col("doc"), col("s"), col("h"))
       Dedup.crossPrefixProbe(bSh,
           pref.filter(col("doc") % 10 =!= 7), sigs.filter(col("doc") % 10 =!= 7),
-          tauNum = 2, tauDen = 5, broadcastSigs = shRows * 8L <= (64L << 20))
+          tauNum = 2, tauDen = 5, broadcastSigs = Dedup.sigsFitBroadcast(shRows))
         .orderBy("id_a", "id_b")
     },
 
@@ -1699,7 +1699,7 @@ object TextQueries {
       val (mergedPref, mergedSigs, shRows) = mergedStableIndex(s, dir)
       Dedup.pairsFromPrefixIndex(
           mergedPref.select(col("doc"), col("h"), col("n_sh")), mergedSigs,
-          tauNum = 2, tauDen = 5, broadcastSigs = shRows * 8L <= (64L << 20))
+          tauNum = 2, tauDen = 5, broadcastSigs = Dedup.sigsFitBroadcast(shRows))
         .orderBy("id_a", "id_b")
     },
 

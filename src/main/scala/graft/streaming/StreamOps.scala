@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout,
   OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues, ValueState}
+import graft.ext.Dedup
 
 /** Structured-Streaming-ready transforms. Every function here is a pure
   * `DataFrame => DataFrame` over event-time columns, so THE SAME CODE runs
@@ -164,7 +165,7 @@ object StreamOps {
   def streamNearDupScreen(stream: DataFrame, id: Column, text: Column,
                           staticBands: DataFrame): DataFrame = {
     val bands = stream
-      .select(id.as("doc"), graft.ext.Dedup.shingles(text).as("sh_arr"))
+      .select(id.as("doc"), Dedup.shingles(text).as("sh_arr"))
       .filter(size(col("sh_arr")) > 0)
       .select(col("doc"),
         posexplode(graft.functions.GraftFunctions.minhashBands(col("sh_arr"))))
@@ -242,7 +243,7 @@ object StreamOps {
                         tauNum: Int, tauDen: Int): DataFrame = {
     val sig = stream
       .select(id.as("doc"),
-        sort_array(transform(graft.ext.Dedup.shingles(text),
+        sort_array(transform(Dedup.shingles(text),
           x => xxhash64(x))).as("ha"))
       .filter(size(col("ha")) > 0)
       .withColumn("n_a", size(col("ha")).cast("long"))
@@ -251,21 +252,17 @@ object StreamOps {
       .join(broadcast(corpusPref.select(col("doc").as("partner"), col("h"),
         col("n_sh").as("n_b"))), "h")
       .filter(col("partner") =!= col("doc"))
-      .filter(col("n_a") * tauDen >= col("n_b") * tauNum &&
-        col("n_b") * tauDen >= col("n_a") * tauNum)
+      .filter(Dedup.tauLengthOk(col("n_a"), col("n_b"), tauNum, tauDen))
       .join(broadcast(corpusSigs.select(col("doc").as("partner"),
         col("hs").as("hb"))), "partner")
       .select(col("doc"), col("partner"),
-        graft.functions.GraftFunctions.sortedIntersectCount(
-          col("ha"), col("hb")).as("n_inter"),
-        col("n_a"), col("n_b"))
-      .filter(col("n_inter") * (tauDen + tauNum) >=
-        (col("n_a") + col("n_b")) * tauNum)
+        Dedup.interCount(col("ha"), col("hb")), col("n_a"), col("n_b"))
+      .filter(Dedup.tauOk(col("n_inter"), col("n_a"), col("n_b"), tauNum, tauDen))
       .groupBy("doc", "partner")
       .agg(first(col("n_inter")).as("n_inter"),
         first(col("n_a")).as("n_a"), first(col("n_b")).as("n_b"))
-      .withColumn("jaccard", round(col("n_inter").cast("double") /
-        (col("n_a") + col("n_b") - col("n_inter")).cast("double"), 6))
+      .withColumn("jaccard",
+        round(Dedup.jaccard(col("n_inter"), col("n_a"), col("n_b")), 6))
   }
 
   /** Per-day count-min-sketch PARTIAL cells over a streaming (or batch)

@@ -201,6 +201,61 @@ class DedupSpec extends SparkSpec {
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(pairs.contains((1L, 5L)))
   }
+
+  test("simhashPairs: COMPLETE vs brute-force bit_count(a ^ b) <= 3, hamming values included") {
+    // crafted signatures beside the suite's documents: 11 differs from 10
+    // by 3 bits in 3 different chunks (chunk 3 still equal, so it must
+    // pair); 12 differs from 10 by 4 bits, one per chunk (no equal chunk)
+    val base = 0x123456789ABCDEF0L
+    val crafted = Seq(
+      (10L, base),
+      (11L, base ^ (1L | (1L << 16) | (1L << 32))),
+      (12L, base ^ (2L | (1L << 17) | (1L << 33) | (1L << 49)))
+    ).toDF("doc", "simhash")
+      .select(Seq(col("doc"), col("simhash")) ++ (0 until 4).map(c =>
+        shiftright(col("simhash"), c * 16).bitwiseAND(0xFFFFL).as(s"chunk$c")): _*)
+    val sig = Dedup.simhash(docs, col("doc_id"), col("text")).union(crafted)
+    def triples(df: org.apache.spark.sql.DataFrame) =
+      df.select("id_a", "id_b", "hamming").as[(Long, Long, Int)].collect().toSet
+    val brute = triples(sig.as("a").crossJoin(sig.as("b"))
+      .filter(col("a.doc") < col("b.doc"))
+      .select(col("a.doc").as("id_a"), col("b.doc").as("id_b"),
+        bit_count(col("a.simhash").bitwiseXOR(col("b.simhash"))).as("hamming"))
+      .filter(col("hamming") <= 3))
+    val got = triples(Dedup.simhashPairs(sig, 3))
+    assert(got == brute, s"missing=${brute -- got} extra=${got -- brute}")
+    assert(got.contains((10L, 11L, 3)) && got.contains((1L, 5L, 0)), s"got $got")
+    assert(!got.exists(p => p._1 == 10L && p._2 == 12L), s"got $got")
+    // above 3 the chunk blocking bounds recall: 4 bits, one per chunk,
+    // never become a candidate
+    assert(!triples(Dedup.simhashPairs(sig, 4)).exists(p => p._1 == 10L && p._2 == 12L))
+  }
+
+  test("τ test is exact at its boundary: J = 2/5 kept with jaccard 0.4, J = 4/11 dropped") {
+    // trigram sets: 1 = {abc bcd cde def efg fgh ghi} (7),
+    // 2 shares abc..def with 1 plus 3 of its own (7): J = 4/10 = 2/5;
+    // 3 shares abc..def with both plus 4 of its own (8): J = 4/11 < 2/5
+    val df = Seq(
+      (1L, "a b c d e f g h i"),
+      (2L, "a b c d e f x y z"),
+      (3L, "a b c d e f p q r s")
+    ).toDF("doc_id", "text")
+    def rows(out: org.apache.spark.sql.DataFrame, a: String, b: String) =
+      out.select(col(a), col(b), col("jaccard")).as[(Long, Long, Double)].collect().toSet
+    assert(rows(Dedup.prefixFilterPairs(df, col("doc_id"), col("text")), "id_a", "id_b") ==
+      Set((1L, 2L, 0.4)))
+    val batch = df.filter(col("doc_id") === 1L)
+    val cSh = Dedup.shingleHashTable(df.filter(col("doc_id") =!= 1L), col("doc_id"), col("text"))
+    val pref = Dedup.prefixIndexTable(cSh, tauNum = 2, tauDen = 5)
+    val sigs = Dedup.signatureTable(cSh)
+    val cross = Dedup.crossPrefixProbe(
+      Dedup.shingleHashTable(batch, col("doc_id"), col("text")),
+      pref, sigs, tauNum = 2, tauDen = 5, broadcastSigs = true)
+    assert(rows(cross, "id_a", "id_b") == Set((1L, 2L, 0.4)))
+    val streamed = graft.streaming.StreamOps.streamPrefixProbe(batch,
+      col("doc_id"), col("text"), pref, sigs, tauNum = 2, tauDen = 5)
+    assert(rows(streamed, "doc", "partner") == Set((1L, 2L, 0.4)))
+  }
 }
 
 class TextOpsSpec extends SparkSpec {

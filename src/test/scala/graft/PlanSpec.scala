@@ -660,16 +660,23 @@ class PlanSpec extends SparkSpec {
   test("t40 prefix-filter over-threshold: verify leg falls back to a non-broadcast join") {
     // the 100 TB driver-OOM guard: when the signature payload passes the
     // size gate, the broadcast HINT must be dropped and the verify step
-    // planned as a co-partitioned shuffle join — pin the fallback branch
-    // by forcing the gate (threshold 0) with auto-broadcast off so the
+    // planned as a co-partitioned shuffle join — the gate answers false
+    // one shingle row past 64 MiB / 8 B; pin the fallback branch by
+    // feeding that answer to the verify, with auto-broadcast off so the
     // planner can't silently re-promote the hintless join at this size
+    val bound = (64L << 20) / 8L
+    assert(graft.ext.Dedup.sigsFitBroadcast(bound))
+    assert(!graft.ext.Dedup.sigsFitBroadcast(bound + 1))
     val key = "spark.sql.autoBroadcastJoinThreshold"
     val prev = spark.conf.getOption(key)
     spark.conf.set(key, "-1")
     try {
       val docs = Tables.documents(spark, sf)
-      val forced = graft.ext.Dedup.prefixFilterPairs(docs,
-        col("doc_id"), col("text"), broadcastSigBytes = 0L)
+      val sh = graft.ext.Dedup.shingleHashTable(docs, col("doc_id"), col("text"))
+      val forced = graft.ext.Dedup.pairsFromPrefixIndex(
+        graft.ext.Dedup.prefixIndexTable(sh, 2, 5).localCheckpoint(),
+        graft.ext.Dedup.signatureTable(sh), 2, 5,
+        broadcastSigs = graft.ext.Dedup.sigsFitBroadcast(bound + 1))
       val plan = forced.queryExecution.executedPlan.toString
       assert(!plan.contains("BroadcastExchange"),
         s"over-threshold verify leg must not broadcast signatures:\n$plan")
